@@ -1,14 +1,13 @@
 """Config-driven pipeline orchestration (SURVEY.md §2.8, O1-O3).
 
-≅ ``BankingETLPipeline`` (`/root/reference/src/orchestration/main.py:23-302`)
+≅ ``BankingETLPipeline`` (reference `src/orchestration/main.py:23-302`)
 re-expressed as typed specs instead of nested dicts:
 
 - ``PipelineSpec`` ≅ one entry of `config/config.json:23-86` (source, target,
   keys, quality config, fail-open/closed);
-- ``run_pipeline`` is extract → transform → single-pass DQ gate → load. Every
-  stage composes lazily; Spark actions fire only at the gate aggregate and
-  the sink write (the reference fires O(checks) extra jobs in its gate —
-  SURVEY.md §3);
+- ``run_pipeline`` is extract → transform → stage → single-pass DQ gate →
+  publish (``sinks.writers``). The gate audits the staged files, exactly
+  the rows that get published; a failure discards the stage;
 - entity transforms are looked up from the domain layer: transaction
   (`domain/transactions.py`), customer and account (reconstructed,
   `domain/customers.py` / `domain/accounts.py`);
@@ -24,6 +23,7 @@ from __future__ import annotations
 import json
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
+from pathlib import Path
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,7 +37,7 @@ from .operators.quality import (
     RangeRule,
     apply_quality_gate,
 )
-from .sinks.writers import ParquetWarehouse, write_partitioned
+from .sinks.writers import ParquetWarehouse, Staged, stage_partitioned
 from .sources.readers import read_csv, read_jdbc, read_parquet
 
 TRANSFORMS: dict[str, Callable[[DataFrame], DataFrame]] = {
@@ -59,7 +59,8 @@ class SourceSpec:
 
     def read(self, spark: SparkSession) -> DataFrame:
         if self.kind == "dataframe":
-            assert self.dataframe is not None
+            if self.dataframe is None:
+                raise ValueError("dataframe source needs a dataframe")
             return self.dataframe
         if self.kind == "csv":
             # reference semantics: raw-zone CSV infers types on ingest
@@ -84,17 +85,18 @@ class TargetSpec:
     partition_cols: Sequence[str] = ()
 
     def write(self, df: DataFrame, warehouse: ParquetWarehouse | None,
-              key_columns: Sequence[str]) -> None:
+              key_columns: Sequence[str]) -> Staged:
         if self.kind == "none":
-            return
+            return Staged(df)
         if self.kind == "warehouse":
-            assert warehouse is not None and self.table
-            warehouse.load_with_staging(df, self.table, key_columns)
-            return
+            if warehouse is None or not self.table:
+                raise ValueError("warehouse target needs a warehouse and table")
+            return warehouse.stage(df, self.table, key_columns)
         if self.kind == "partitioned":
-            assert self.path
-            write_partitioned(df, self.path, self.mode, self.partition_cols)
-            return
+            if not self.path:
+                raise ValueError("partitioned target needs a path")
+            return stage_partitioned(df, self.path, self.mode,
+                                     self.partition_cols)
         raise ValueError(f"Unsupported target type: {self.kind}")
 
 
@@ -116,15 +118,20 @@ class PipelineResult:
 
 def run_pipeline(spark: SparkSession, spec: PipelineSpec,
                  warehouse: ParquetWarehouse | None = None) -> PipelineResult:
-    """One entity: extract → transform → DQ gate → load (main.py:92-275)."""
+    """One entity: extract → transform → stage → DQ gate → publish."""
     raw = spec.source.read(spark)
     transform = TRANSFORMS.get(spec.entity)
     if transform is None:
         raise ValueError(f"No transform registered for entity {spec.entity!r}")
     transformed = transform(raw)
-    result = QualityChecker().run_all_checks(transformed, spec.quality)
-    apply_quality_gate(result, spec.quality.fail_on_quality_check)
-    spec.target.write(transformed, warehouse, spec.key_columns)
+    staged = spec.target.write(transformed, warehouse, spec.key_columns)
+    try:
+        result = QualityChecker().run_all_checks(staged.rows, spec.quality)
+        apply_quality_gate(result, spec.quality.fail_on_quality_check)
+        staged.publish()
+    except BaseException:
+        staged.discard()
+        raise
     return PipelineResult(spec.entity, result, transformed)
 
 
@@ -158,8 +165,8 @@ def load_config(path_or_dict: str | dict[str, Any]) -> list[PipelineSpec]:
     into specs. S3/Redshift/RDS endpoints map to their engine-local
     equivalents: s3 csv → csv path, redshift → warehouse table, s3 delta
     append → partitioned columnar path."""
-    cfg = (json.load(open(path_or_dict)) if isinstance(path_or_dict, str)
-           else path_or_dict)
+    cfg = (json.loads(Path(path_or_dict).read_text())
+           if isinstance(path_or_dict, str) else path_or_dict)
     specs = []
     for entity, block in cfg.get("pipelines", {}).items():
         src_kind = block.get("source_type", "csv")

@@ -14,7 +14,8 @@ spark-submit) and `shuffle_partitions` sized to ~2-3× total executor cores.
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
+import re
+from collections.abc import Callable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -60,6 +61,23 @@ def session_scalar(spark: SparkSession, tag: str,
     return _SCALAR_CACHE[key]
 
 
+def aqe_coalescing(env: Mapping[str, str]) -> tuple[str, str]:
+    """``(parallelismFirst, advisoryPartitionSizeInBytes)`` for AQE from
+    ``SPARK_GRAFT_AQE_PARALLELISM_FIRST`` (``true``/``false``) and
+    ``SPARK_GRAFT_ADVISORY_PARTITION`` (a Spark byte size such as ``64m``).
+    A malformed value raises a ``ValueError`` naming its variable here,
+    rather than an opaque error from the session build."""
+    first = env.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true").strip().lower()
+    if first not in ("true", "false"):
+        raise ValueError("SPARK_GRAFT_AQE_PARALLELISM_FIRST must be true or "
+                         f"false, not {first!r}")
+    size = env.get("SPARK_GRAFT_ADVISORY_PARTITION", "64m").strip().lower()
+    if not re.fullmatch(r"[0-9]+([kmgtp]?b|[kmgtp])?", size):
+        raise ValueError("SPARK_GRAFT_ADVISORY_PARTITION must be a byte size "
+                         f"such as 64m or 134217728, not {size!r}")
+    return first, size
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -77,6 +95,7 @@ def get_spark(
     static `shuffle_partitions` only needs to be an upper bound at scale.
     """
     cpus = default_parallelism()
+    parallelism_first, advisory_partition = aqe_coalescing(os.environ)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -100,9 +119,9 @@ def get_spark(
         # partitions); deployments set SPARK_GRAFT_AQE_PARALLELISM_FIRST=
         # false and size SPARK_GRAFT_ADVISORY_PARTITION there.
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-                os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
+                parallelism_first)
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-                os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION", "64m"))
+                advisory_partition)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

@@ -1,45 +1,36 @@
-"""Sinks: CSV / partitioned-columnar / JDBC writers and the staged upsert.
+"""Sinks: CSV / partitioned-columnar / JDBC writers and the batch commit.
 
 Covers the reference's sink surface (SURVEY.md §2.2):
 
-- K1 CSV write ≅ `/root/reference/src/seed/data_seed.py:241-243`.
+- K1 CSV write ≅ reference `src/seed/data_seed.py:241-243`.
 - K2 JDBC write with mode + pre/postactions ≅
   `src/loading/readshift_loader.py:27-66` (kept behind an interface — no
   warehouse exists in the test env; validation is the option dict).
-- K3 staged upsert ≅ `readshift_loader.py:68-149`. The reference emulates
-  MERGE with SQL strings executed through a dummy-write `postactions` hack
-  (`:151-182`). Here the merge itself is a pure DataFrame operation
-  (`merge_upsert`) — updated rows take the update side, unmatched target rows
-  survive — applied via a staged write: stage → merge → atomic swap. On Delta
-  this is `MERGE INTO`; on plain parquet it is a rewrite with a tmp-dir swap.
-- K4 partitioned columnar write ≅ the absent `S3Loader.write_delta`
-  (`src/orchestration/main.py:138-143,201-206,262-267`,
-  `config/config.json:69-70`): format parquet by default, delta when
-  delta-spark is importable (not shipped in this env).
-
-Scale: `merge_upsert`'s anti-join shuffles both sides on the key — correct
-and unavoidable for an upsert; at 100 TB the win is partition-pruned rewrites
-(partition the warehouse on a key prefix or date column via `partition_cols`
-so the swap touches only affected partitions — Delta MERGE does this
-automatically with partition predicates).
+- K3 staged upsert ≅ `readshift_loader.py:68-149` and K4 partitioned
+  append ≅ `S3Loader.write_delta` (`main.py:138-143`) share one commit:
+  write the batch once to `_staging` under the target, audit those files
+  (`Staged.rows`), then publish by rename. A failed gate or a crash leaves
+  the target as it was; a retried batch lands once.
 """
 
 from __future__ import annotations
 
+import contextlib
+import glob
+import hashlib
+import importlib.util
 import os
 import shutil
-import tempfile
-from collections.abc import Sequence
+import uuid
+from collections.abc import Callable, Sequence
+from dataclasses import dataclass
+from pathlib import Path
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
-try:  # delta-spark is optional; parquet is the default columnar format
-    from delta.tables import DeltaTable  # type: ignore
-
-    HAVE_DELTA = True
-except ImportError:  # pragma: no cover
-    DeltaTable = None
-    HAVE_DELTA = False
+# delta-spark is optional; parquet is the default columnar format
+HAVE_DELTA = importlib.util.find_spec("delta") is not None
 
 
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite",
@@ -100,12 +91,87 @@ def merge_upsert(target: DataFrame, updates: DataFrame,
     return updates.unionByName(surviving.select(*updates.columns))
 
 
+@dataclass
+class Staged:
+    """A batch written once: audit ``rows``, then ``publish`` or ``discard``."""
+
+    rows: DataFrame
+    publish: Callable[[], None] = lambda: None
+    discard: Callable[[], None] = lambda: None
+
+
+def _batch_id(df: DataFrame) -> str:
+    """A digest of the local files ``df`` reads, with their sizes and
+    mtimes: a retry of the same files keeps its id, new contents under the
+    same names get a new one. Any other frame gets a fresh id."""
+    files = sorted(df.inputFiles())
+    if not files or any(urlparse(f).scheme not in ("", "file") for f in files):
+        return uuid.uuid4().hex
+    digest = hashlib.sha256()
+    for f in files:
+        st = os.stat(unquote(urlparse(f).path))
+        digest.update(f"{f}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    return digest.hexdigest()[:16]
+
+
+def _staged(df: DataFrame, stage: str, commit: Callable[[DataFrame], None],
+            partition_cols: Sequence[str] = ()) -> Staged:
+    """Write ``df`` to ``stage`` once; publishing runs ``commit(rows)``."""
+    write_partitioned(df, stage, "overwrite", partition_cols)
+    # df's schema also keeps partition values in their types
+    rows = df.sparkSession.read.schema(df.schema).parquet(stage)
+
+    def discard() -> None:
+        shutil.rmtree(stage, ignore_errors=True)
+        with contextlib.suppress(OSError):  # another batch's stage is left
+            os.rmdir(os.path.dirname(stage))
+
+    def publish() -> None:
+        commit(rows)
+        discard()
+
+    return Staged(rows, publish, discard)
+
+
+def _data_files(root: str) -> list[str]:
+    """Files under ``root`` outside ``_``/``.`` paths (stages, checksums)."""
+    found = glob.glob(glob.escape(root) + "/**/*", recursive=True)
+    return sorted(f for f in found if os.path.isfile(f)
+                  and "/_" not in "/" + os.path.relpath(f, root))
+
+
+def stage_partitioned(df: DataFrame, path: str, mode: str = "append",
+                      partition_cols: Sequence[str] = ()) -> Staged:
+    """K4 staged under ``<path>/_staging/<batch>``. Publishing renames the
+    staged files into their partitions, then deletes any earlier copy of the
+    batch (with ``overwrite``, all other data files)."""
+    if mode not in ("append", "overwrite"):
+        raise ValueError(f"Invalid write mode: {mode}")
+    batch, path = _batch_id(df), os.path.abspath(path)
+    stage = os.path.join(path, "_staging", batch)
+    prefix = f"part-{batch}-"
+
+    def commit(rows: DataFrame) -> None:
+        staged = _data_files(stage)
+        parts = [os.path.dirname(os.path.relpath(f, stage)) for f in staged]
+        # an earlier copy of the batch lies in the partitions it stages to
+        old = (set(_data_files(path)) if mode == "overwrite" else
+               {f for p in set(parts) for f in glob.glob(os.path.join(
+                   glob.escape(os.path.join(path, p)), prefix + "*"))})
+        for n, (f, part) in enumerate(zip(staged, parts)):
+            dest = os.path.join(path, part, f"{prefix}{n}.parquet")
+            os.makedirs(os.path.dirname(dest), exist_ok=True)
+            os.replace(f, dest)
+            old.discard(dest)
+        for f in old:
+            os.remove(f)
+
+    return _staged(df, stage, commit, partition_cols)
+
+
 class ParquetWarehouse:
-    """Directory-per-table warehouse with staged upsert — the reference's
-    Redshift staging-table flow (readshift_loader.py:68-149) on columnar
-    storage. Delta `MERGE INTO` when available; otherwise merge + tmp-dir
-    swap (the swap is the non-transactional step plain parquet can't avoid —
-    documented reason Delta is the preferred format at scale)."""
+    """The reference's Redshift tables (readshift_loader.py:68-149) on
+    parquet: a table is ``gen-*`` directories plus a ``CURRENT`` pointer."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -115,44 +181,49 @@ class ParquetWarehouse:
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
+    def _live(self, table: str) -> list[str]:
+        """The generation ``CURRENT`` names or, in a table written before
+        generations existed, the parquet files of the table directory."""
+        pointer = Path(self.path(table), "CURRENT")
+        if pointer.is_file():
+            return [os.path.join(self.path(table), pointer.read_text())]
+        return glob.glob(os.path.join(glob.escape(self.path(table)), "*.parquet"))
+
     def exists(self, table: str) -> bool:
-        return os.path.isdir(self.path(table))
+        return bool(self._live(table))
 
     def read(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(table))
+        return self.spark.read.parquet(*self._live(table))
 
     def truncate_and_load(self, df: DataFrame, table: str) -> None:
         """≅ readshift_loader.py:130-141 (overwrite path)."""
-        self._atomic_write(df, table)
+        self.stage(df, table).publish()
 
     def load_with_staging(self, df: DataFrame, table: str,
                           key_columns: Sequence[str]) -> None:
-        """≅ readshift_loader.py:68-149. First load short-circuits to a plain
-        write (the reference's CREATE-LIKE + full insert collapses to this)."""
-        if not self.exists(table):
-            self._atomic_write(df, table)
-            return
-        if HAVE_DELTA and self._is_delta(table):  # pragma: no cover
-            (DeltaTable.forPath(self.spark, self.path(table)).alias("t")
-             .merge(df.alias("s"),
-                    " AND ".join(f"t.{k} = s.{k}" for k in key_columns))
-             .whenMatchedUpdateAll().whenNotMatchedInsertAll().execute())
-            return
-        merged = merge_upsert(self.read(table), df, key_columns)
-        self._atomic_write(merged, table)
+        """≅ readshift_loader.py:68-149, upserting on ``key_columns``."""
+        self.stage(df, table, key_columns).publish()
 
-    def _is_delta(self, table: str) -> bool:
-        return os.path.isdir(os.path.join(self.path(table), "_delta_log"))
+    def stage(self, df: DataFrame, table: str,
+              key_columns: Sequence[str] = ()) -> Staged:
+        """Stage under ``_staging/<table>-<batch>``. Publishing makes the
+        rows, upserted on ``key_columns`` into the live table if there is
+        one, the live generation and deletes everything else in the table."""
+        stage = os.path.join(self.root, "_staging", f"{table}-{_batch_id(df)}")
 
-    def _atomic_write(self, df: DataFrame, table: str) -> None:
-        """Write to a tmp dir, then swap directories. The merged plan reads
-        the live table, so it must fully materialize before the swap."""
-        tmp = tempfile.mkdtemp(dir=self.root, prefix=f"_{table}_stage_")
-        stage = os.path.join(tmp, "data")
-        df.write.mode("overwrite").parquet(stage)
-        final = self.path(table)
-        if os.path.isdir(final):
-            old = os.path.join(tmp, "old")
-            os.rename(final, old)
-        os.rename(stage, final)
-        shutil.rmtree(tmp, ignore_errors=True)
+        def commit(rows: DataFrame) -> None:
+            home, gen = self.path(table), f"gen-{uuid.uuid4().hex}"
+            os.makedirs(home, exist_ok=True)
+            if key_columns and self.exists(table):
+                merged = merge_upsert(self.read(table), rows, key_columns)
+                merged.write.parquet(os.path.join(home, gen))
+            else:  # nothing to merge: the stage becomes the generation
+                os.replace(stage, os.path.join(home, gen))
+            pointer = os.path.join(home, "CURRENT")
+            Path(pointer + ".tmp").write_text(gen)
+            os.replace(pointer + ".tmp", pointer)  # the commit point
+            for name in set(os.listdir(home)) - {gen, "CURRENT"}:
+                old = os.path.join(home, name)
+                (shutil.rmtree if os.path.isdir(old) else os.remove)(old)
+
+        return _staged(df, stage, commit)

@@ -8,8 +8,10 @@ warehouse table by key — the standard Structured-Streaming→warehouse
 upsert pattern. Each micro-batch's merge is idempotent per key, so
 at-least-once delivery of a batch converges to the same table.
 
-At scale the warehouse is Delta (transactional MERGE with partition
-pruning); locally it is the ParquetWarehouse staged swap.
+Each micro-batch goes through the warehouse's batch commit
+(``ParquetWarehouse.load_with_staging``): staged once, merged into a new
+table generation and made live by one ``CURRENT`` pointer swap, so a
+micro-batch that fails part-way leaves the table as it was.
 """
 
 from __future__ import annotations

@@ -4,9 +4,10 @@
 
 Selection: every test FILE keeps at least its KEEP_PER_FILE fastest tests
 (module coverage is never lost); among the rest, the slowest tests are
-moved to the skip list until the kept call-time sum fits BUDGET_SEC. The
-default driver run (`pytest tests/ -x -q`) then deselects exactly these
-node ids (tests/conftest.py); SPARK_GRAFT_FULL_TESTS=1 runs everything.
+moved to the skip list until the kept test time (call + setup + teardown)
+fits BUDGET_SEC. The default run (`pytest tests/ -x -q`) then
+deselects exactly these node ids (tests/conftest.py);
+SPARK_GRAFT_FULL_TESTS=1 runs everything.
 
 Usage: python scripts/gen_driver_slow_skip.py /tmp/pytest_full.log \
            [budget_sec] [keep_per_file]
@@ -20,7 +21,7 @@ import sys
 from collections import defaultdict
 
 KEEP_PER_FILE = 2
-BUDGET_SEC = 180.0  # kept call-time target; wall adds session/fixture cost
+BUDGET_SEC = 180.0  # kept call+setup+teardown seconds; wall adds collection
 
 DUR_RE = re.compile(r"^\s*([0-9.]+)s\s+(call|setup|teardown)\s+(\S+)\s*$")
 
@@ -64,7 +65,8 @@ def main() -> None:
         for _, n in sorted(skip, key=lambda t: t[1]):
             f.write(n + "\n")
     print(f"total tests: {len(dur)}; skipped: {len(skip)}; "
-          f"kept call-time: {kept_total:.0f}s of {sum(dur.values()):.0f}s")
+          f"kept test time (call+setup+teardown): {kept_total:.0f}s of "
+          f"{sum(dur.values()):.0f}s")
 
 
 if __name__ == "__main__":

@@ -23,6 +23,7 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 # in the list, so they run by default until a re-measure adds them.
 _SLOW_SKIP_FILE = os.path.join(os.path.dirname(__file__),
                                "driver_slow_skip.txt")
+_SLOW_SKIP_KEY = pytest.StashKey[tuple[int, list[str]]]()
 
 
 def pytest_collection_modifyitems(config, items):
@@ -38,9 +39,30 @@ def pytest_collection_modifyitems(config, items):
     keep, drop = [], []
     for item in items:
         (drop if item.nodeid in slow else keep).append(item)
+    # a listed id in a collected file that names no test is stale; a run
+    # that selects single node ids collects files only in part
+    files = {item.nodeid.split("::")[0] for item in items}
+    stale = [] if any("::" in a for a in config.args) else sorted(
+        n for n in slow - {item.nodeid for item in drop}
+        if n.split("::")[0] in files)
+    config.stash[_SLOW_SKIP_KEY] = (len(drop), stale)
     if drop:
         items[:] = keep
         config.hook.pytest_deselected(items=drop)
+
+
+def pytest_terminal_summary(terminalreporter, config):
+    if _SLOW_SKIP_KEY not in config.stash:
+        return
+    dropped, stale = config.stash[_SLOW_SKIP_KEY]
+    if dropped:
+        terminalreporter.write_line(
+            f"tests/conftest.py: deselected {dropped} slow tests listed in "
+            "tests/driver_slow_skip.txt; SPARK_GRAFT_FULL_TESTS=1 runs them")
+    for nodeid in stale:
+        terminalreporter.write_line(
+            f"tests/conftest.py: WARNING: driver_slow_skip.txt id matches no "
+            f"collected test: {nodeid}", yellow=True)
 
 
 @pytest.fixture(scope="session")
