@@ -99,3 +99,25 @@ CREDIT_CARD_SCHEMA = StructType(
         StructField("reward_points", IntegerType(), True),
     ]
 )
+
+
+def _as_inferred(schema: StructType, **types) -> StructType:
+    """``schema`` as ``inferSchema`` reads it from a CSV: every column
+    nullable, money as double, and the ``types`` given by name."""
+    return StructType([
+        StructField(f.name, types.get(
+            f.name, DoubleType() if f.dataType == MONEY else f.dataType), True)
+        for f in schema
+    ])
+
+
+# Raw-zone CSV schemas: exactly the types ``inferSchema`` gives the seeded
+# CSVs, so pinning them costs no inference job and changes no output type
+# and no warehouse generation. Money stays double until a change moves it to
+# MONEY. ``zip_code`` stays int, as inferred, although the data dictionary
+# documents a string: inference drops leading zeros (ROADMAP open item).
+RAW_CSV_SCHEMAS = {
+    "transaction": _as_inferred(TRANSACTION_SCHEMA),
+    "account": _as_inferred(ACCOUNT_SCHEMA),
+    "customer": _as_inferred(CUSTOMER_SCHEMA, zip_code=IntegerType()),
+}

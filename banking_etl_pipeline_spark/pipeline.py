@@ -8,6 +8,8 @@ re-expressed as typed specs instead of nested dicts:
 - ``run_pipeline`` is extract → transform → stage → single-pass DQ gate →
   publish (``sinks.writers``). The gate audits the staged files, exactly
   the rows that get published; a failure discards the stage;
+- a raw CSV source reads with its entity's pinned column types
+  (``domain.schemas.RAW_CSV_SCHEMAS``) instead of inferring them;
 - entity transforms are looked up from the domain layer: transaction
   (`domain/transactions.py`), customer and account (reconstructed,
   `domain/customers.py` / `domain/accounts.py`);
@@ -22,14 +24,16 @@ from __future__ import annotations
 
 import json
 from collections.abc import Callable, Sequence
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from pathlib import Path
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .domain.accounts import transform_accounts
 from .domain.customers import transform_customers
+from .domain.schemas import RAW_CSV_SCHEMAS
 from .domain.transactions import transform_transactions
 from .operators.quality import (
     QualityChecker,
@@ -56,6 +60,7 @@ class SourceSpec:
     table: str | None = None
     jdbc_url: str | None = None
     dataframe: DataFrame | None = None  # test/in-memory injection
+    schema: StructType | str | None = None  # csv: pinned column types
 
     def read(self, spark: SparkSession) -> DataFrame:
         if self.kind == "dataframe":
@@ -63,10 +68,11 @@ class SourceSpec:
                 raise ValueError("dataframe source needs a dataframe")
             return self.dataframe
         if self.kind == "csv":
-            # reference semantics: raw-zone CSV infers types on ingest
-            # (s3_connector.py:23,41); costs one extra sampling scan —
-            # production should hand SourceSpec an explicit schema instead
-            return read_csv(spark, self.path, infer_schema=True)
+            # without a schema, infer types on ingest as the reference does
+            # (s3_connector.py:23,41), at the cost of one extra scan job;
+            # with one, read lazily and reject a header that does not match
+            return read_csv(spark, self.path, schema=self.schema,
+                            infer_schema=self.schema is None)
         if self.kind == "parquet":
             return read_parquet(spark, self.path)
         if self.kind in ("jdbc", "rds"):
@@ -118,8 +124,16 @@ class PipelineResult:
 
 def run_pipeline(spark: SparkSession, spec: PipelineSpec,
                  warehouse: ParquetWarehouse | None = None) -> PipelineResult:
-    """One entity: extract → transform → stage → DQ gate → publish."""
-    raw = spec.source.read(spark)
+    """One entity: extract → transform → stage → DQ gate → publish.
+
+    A CSV source without a schema reads with the entity's
+    ``RAW_CSV_SCHEMAS`` entry, so the CSV is scanned once, by the stage write,
+    and no inference job runs."""
+    source = spec.source
+    if (source.kind == "csv" and source.schema is None
+            and spec.entity in RAW_CSV_SCHEMAS):
+        source = replace(source, schema=RAW_CSV_SCHEMAS[spec.entity])
+    raw = source.read(spark)
     transform = TRANSFORMS.get(spec.entity)
     if transform is None:
         raise ValueError(f"No transform registered for entity {spec.entity!r}")

@@ -23,10 +23,12 @@ def read_csv(
     schema: StructType | str | None = None,
     infer_schema: bool = False,
 ) -> DataFrame:
-    # ≅ s3_connector.py:23-45; explicit schema preferred over inference
+    # ≅ s3_connector.py:23-45; explicit schema preferred over inference.
+    # With a header, each file's column names are checked against the
+    # schema's, so a renamed or reordered column raises instead of shifting.
     reader = spark.read.option("header", str(header).lower())
     if schema is not None:
-        reader = reader.schema(schema)
+        reader = reader.schema(schema).option("enforceSchema", "false")
     else:
         reader = reader.option("inferSchema", str(infer_schema).lower())
     return reader.csv(path)
