@@ -71,13 +71,16 @@ class QualityChecker:
             for r in rules
         ]
 
+    def duplicate_count_expr(self, key_columns: list[str]):
+        # total − distinct(keys) ≅ data_quality.py:69-75. countDistinct over
+        # the columns themselves skips every row with a null key component;
+        # the reference's select(keys).distinct() keeps null as a value, as
+        # distinct over a (never null) struct of the keys does.
+        return F.count(F.lit(1)) - F.countDistinct(F.struct(*key_columns))
+
     def duplicate_count(self, df: DataFrame, key_columns: list[str]) -> int:
-        # total − distinct(keys) ≅ data_quality.py:69-75, one job
-        row = df.agg(
-            F.count(F.lit(1)).alias("total"),
-            F.countDistinct(*key_columns).alias("distinct_keys"),
-        ).collect()[0]
-        return row["total"] - row["distinct_keys"]
+        # one job
+        return df.agg(self.duplicate_count_expr(key_columns)).collect()[0][0]
 
     def orphan_count(
         self, fk_df: DataFrame, fk_col: str, pk_df: DataFrame, pk_col: str
@@ -94,17 +97,17 @@ class QualityChecker:
         exprs += self.range_check_exprs(config.range_rules)
         if config.key_columns:
             exprs.append(
-                (F.count(F.lit(1)) - F.countDistinct(*config.key_columns)).alias(
-                    "duplicate_count"
-                )
+                self.duplicate_count_expr(config.key_columns).alias("duplicate_count")
             )
         row = df.agg(*exprs).collect()[0].asDict()
 
+        # a SUM over zero rows is NULL: an empty batch has no violations
         null_counts = {
-            c: row[f"null_count_{c}"] for c in config.required_columns
+            c: row[f"null_count_{c}"] or 0 for c in config.required_columns
         }
         range_violations = {
-            r.column: row[f"range_violations_{r.column}"] for r in config.range_rules
+            r.column: row[f"range_violations_{r.column}"] or 0
+            for r in config.range_rules
         }
         dup = row.get("duplicate_count", 0) or 0
         passed = (

@@ -141,6 +141,17 @@ def get_spark(
         # 256k restores bytes/cores sizing (full fan-out on splittable files)
         # and at cluster scale only packs small files a little tighter.
         .config("spark.sql.files.openCostInBytes", str(256 * 1024))
+        # Spark sizes Tungsten pages as nextPowerOf2(execution pool / cores
+        # / 16): 32 MiB on a 4 GiB, 4-core driver. Each sorter and keyed
+        # hash aggregate of a task takes a zeroed page before its first row:
+        # a transaction batch's task, about 8 MB of rows, runs two window
+        # sorts and the write sort, and the gate's partial aggregate takes
+        # one more. Pages in use when a young collection runs are tenured,
+        # so the old generation fills with dead pages until a full GC.
+        # 4 MiB keeps a task's footprint near its data; TaskMemoryManager
+        # addresses at most 8192 pages per task, so this still allows 32 GiB
+        # per task, and a record larger than a page gets a page of its own.
+        .config("spark.buffer.pageSize", "4m")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

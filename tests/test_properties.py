@@ -4,7 +4,9 @@ row data, Spark evaluates, the invariant must hold for ALL generated inputs:
 - running balance telescopes: last running_balance == sum of signed amounts;
 - currency conversion is monotone: amount_usd >= amount for EUR/GBP, == USD;
 - exact dedup is idempotent: dedup(dedup(x)) == dedup(x) keepers;
-- merge_upsert is idempotent and right-biased.
+- merge_upsert is idempotent and right-biased;
+- the gate's duplicate count equals the reference's total − distinct(keys)
+  when key components are null.
 
 Spark-session-per-example would be prohibitive, so examples are small row
 lists evaluated on the shared session with deadline disabled.
@@ -15,7 +17,8 @@ from __future__ import annotations
 import datetime as dt
 import decimal
 
-from hypothesis import HealthCheck, given, settings
+import pytest
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -24,6 +27,10 @@ from banking_etl_pipeline_spark.domain.transactions import (
     clean_transactions,
     enrich_transactions,
     transaction_metrics,
+)
+from banking_etl_pipeline_spark.operators.quality import (
+    QualityChecker,
+    QualityConfig,
 )
 from banking_etl_pipeline_spark.sinks.writers import merge_upsert
 
@@ -113,6 +120,29 @@ def test_merge_upsert_idempotent_and_right_biased(spark, target, updates):
         if k not in ukeys:
             assert merged[k] == v  # unmatched target survives
     assert set(merged) == set(tkeys) | set(ukeys)
+
+
+nullable_keys = st.lists(
+    st.tuples(st.none() | st.integers(0, 3),
+              st.none() | st.sampled_from(["a", "b"])),
+    min_size=0, max_size=20)
+
+
+@pytest.mark.parametrize("keys", [["k1"], ["k1", "k2"]])
+@given(rows=nullable_keys)
+@example(rows=[(None, "a")])
+@example(rows=[(None, "a"), (None, "b")])
+@settings(**SETTINGS)
+def test_duplicate_count_matches_reference_with_null_keys(spark, keys, rows):
+    df = spark.createDataFrame(rows, "k1 int, k2 string")
+    # the reference: total − select(keys).distinct().count(), where a null
+    # key component is a value like any other
+    want = len(rows) - df.select(*keys).distinct().count()
+    checker = QualityChecker()
+    assert checker.duplicate_count(df, keys) == want
+    result = checker.run_all_checks(df, QualityConfig(key_columns=keys))
+    assert result["duplicate_count"] == want
+    assert result["overall_passed"] == (want == 0)
 
 
 # ---------------------------------------------------------------------------

@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from banking_etl_pipeline_spark import pipeline
+from banking_etl_pipeline_spark.domain.schemas import RAW_CSV_SCHEMAS
 from banking_etl_pipeline_spark.domain.seed import seed_all
 from banking_etl_pipeline_spark.operators.quality import (
     QualityConfig,
@@ -242,6 +243,20 @@ def test_warehouse_table_in_flat_layout_is_upserted(spark, tmp_path):
         (1, "a"), (2, "b"), (3, "C"), (4, "D")]
     names = sorted(os.listdir(wh.path("dim")))
     assert len(names) == 2 and names[0] == "CURRENT", names
+
+
+def test_empty_batch_publishes(loaded, batches, tmp_path):
+    """A header-only CSV passes the gate with no violations and publishes
+    without touching the rows already there."""
+    empty = tmp_path / "raw-empty"
+    empty.mkdir()
+    (empty / "part-00000.csv").write_text(
+        ",".join(RAW_CSV_SCHEMAS["transaction"].fieldNames()) + "\n")
+    result = loaded.run(str(empty))
+    assert result.quality["total_rows"] == 0
+    assert result.quality["overall_passed"], result.quality
+    assert sorted(loaded.ids()) == sorted(batches["a"][1])
+    loaded.assert_clean()
 
 
 def test_gate_audits_only_staged_files(loaded, batches, monkeypatch):
