@@ -10,10 +10,15 @@ similarity search, text analysis, multimodal plumbing).
 Layout:
     session.py     SparkSession factory (env-parameterized, AQE on)
     catalog.py     test-table catalog over /root/testdata/sf*/
+    pipeline.py    config-driven pipeline orchestration: extract → transform
+                   → quality gate → load (reference §2.8)
+    domain/        banking entity schemas, seeding and transforms
     sources/       csv/parquet/text/jdbc/delta readers (reference §2.1)
+    sinks/         csv/parquet/jdbc writers and the stage → audit → publish
+                   batch commit
     operators/     relational core, windows, quality, dedup, similarity, text
     functions/     scalar/vector column-expression helpers
-    plans/         config-driven pipeline orchestration (reference §2.8)
+    plans/         physical-plan introspection (plan_of, pushed_filters)
     streaming/     Structured Streaming variants of the window metrics
     registry.py    query-key → (spark builder, duckdb oracle SQL)
 """

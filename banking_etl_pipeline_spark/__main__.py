@@ -86,23 +86,19 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
 
     if args.list:
-        from .registry import all_queries, deferred_queries
+        from .registry import all_queries
 
         for key, spec in sorted(all_queries().items()):
             print(json.dumps({"key": key, "doc": spec.doc,
                               "oracle": spec.oracle is not None}))
-        for key, spec in sorted(deferred_queries().items()):
-            print(json.dumps({"key": key, "doc": spec.doc,
-                              "oracle": spec.oracle is not None,
-                              "deferred": True}))
         return 0
 
     if args.query:
         from pyspark.sql import SparkSession
 
-        from .registry import merged_queries
+        from .registry import all_queries
 
-        queries = merged_queries()  # deferred keys runnable ad hoc too
+        queries = all_queries()
         if args.query not in queries:
             print(f"unknown query {args.query!r}; use --list", file=sys.stderr)
             return 2

@@ -1,8 +1,5 @@
 """Cross-lingual bitext mining over `documents` ⋈ `embeddings`
-(REGISTRATION DEFERRED to r4/r5, same policy as operators/reports.py,
-operators/tokenizer.py and operators/privacy.py: the round-2 verdict froze
-net-new registry keys until the driver-verification backlog drains; enable
-by appending this module to `registry._MODULES` once CORRECTNESS_r04 lands).
+(registered in `registry.MODULES`).
 
 The margin-based parallel-pair mining recipe from the public CCMatrix /
 LASER line of work: candidate cross-lingual pairs come from approximate

@@ -1,7 +1,5 @@
 """Probability-calibration tier over the weak-label model's scores
-(REGISTRATION DEFERRED — listed in registry._DEFERRED_MODULE_NAMES;
-enable by moving this module's name into the registration loop once a
-driver-verification slot opens; queues for r7 behind the r6 batch).
+(registered in `registry.MODULES`).
 
 A label model emits confidences; before anyone thresholds them, a
 calibration audit answers "does conf = 0.8 actually mean 80%?". Ground

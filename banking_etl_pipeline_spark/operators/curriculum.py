@@ -1,7 +1,5 @@
-"""Curriculum / annealing tier over `documents` (REGISTRATION DEFERRED to
-r4/r5, same policy as the other deferred tiers — see
-registry._DEFERRED_MODULE_NAMES; enable by moving this module's name into
-`registry._MODULES` once CORRECTNESS_r04 lands).
+"""Curriculum / annealing tier over `documents`
+(registered in `registry.MODULES`).
 
 The phase-based data-scheduling stage of a modern pretraining run: split
 the corpus into quality phases (warmup → main → anneal), decide the

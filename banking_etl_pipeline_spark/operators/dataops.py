@@ -1,7 +1,5 @@
-"""Dataset-snapshot diff / drift audit tier over `orders` (REGISTRATION
-DEFERRED — listed in registry._DEFERRED_MODULE_NAMES; enable by moving
-this module's name into `registry._MODULES` once a driver-verification
-slot opens).
+"""Dataset-snapshot diff / drift audit tier over `orders`
+(registered in `registry.MODULES`).
 
 The data-ops audit a daily-snapshot pipeline runs before promoting v2
 over v1: which rows appeared, vanished, or changed (and in which

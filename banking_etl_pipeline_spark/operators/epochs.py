@@ -1,7 +1,5 @@
-"""Epoch/dataloader planning tier over `documents` (REGISTRATION DEFERRED
-— listed in registry._DEFERRED_MODULE_NAMES; enable by moving this
-module's name into the registration loop once a driver-verification slot
-opens).
+"""Epoch/dataloader planning tier over `documents`
+(registered in `registry.MODULES`).
 
 What a trainer's data-loading control plane computes before/during a run:
 the per-epoch shuffle order (seeded, reproducible, never a materialized

@@ -1,7 +1,5 @@
-"""Feature-engineering tier over `orders` (REGISTRATION DEFERRED —
-listed in registry._DEFERRED_MODULE_NAMES; enable by moving this
-module's name into the registration loop once a driver-verification slot
-opens).
+"""Feature-engineering tier over `orders`
+(registered in `registry.MODULES`).
 
 The tabular-ML preprocessing ops a feature platform runs next to the
 corpus ops: leakage-free target encoding, weight-of-evidence /

@@ -1,7 +1,5 @@
-"""Bounded-round graph-traversal tier (REGISTRATION DEFERRED — listed in
-registry._DEFERRED_MODULE_NAMES; enable by moving this module's name into
-the registration loop once a driver-verification slot opens; queues for
-r7).
+"""Bounded-round graph-traversal tier
+(registered in `registry.MODULES`).
 
 `corpus.dup_clusters` iterates hash-min label propagation to a FIXPOINT
 (connected components); this tier is the bounded-depth sibling — BFS by

@@ -1,7 +1,5 @@
 """Incremental view maintenance tier over `orders`/`customer`
-(REGISTRATION DEFERRED — listed in registry._DEFERRED_MODULE_NAMES;
-enable by moving this module's name into the registration loop once a
-driver-verification slot opens).
+(registered in `registry.MODULES`).
 
 `layout.incremental_agg` proved the mergeable-partial algebra for
 single-table rollups; this tier extends incremental maintenance to the

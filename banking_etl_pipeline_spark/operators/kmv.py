@@ -1,7 +1,5 @@
 """KMV (bottom-k / theta-style) set-operation sketches over `events`
-(REGISTRATION DEFERRED — listed in registry._DEFERRED_MODULE_NAMES;
-enable by moving this module's name into the registration loop once a
-driver-verification slot opens).
+(registered in `registry.MODULES`).
 
 The sketch family the existing quartet (HLL=cardinality, CMS=frequency,
 Bloom=membership, histogram=distribution) lacks: SET ALGEBRA. A KMV

@@ -1,7 +1,5 @@
-"""Product-quantization (PQ) tier over `embeddings` (REGISTRATION
-DEFERRED — added to registry._DEFERRED_MODULE_NAMES after the round-5 tier
-registration; enable by moving this module's name into
-`registry._MODULES` once its backlog slot opens).
+"""Product-quantization (PQ) tier over `embeddings`
+(registered in `registry.MODULES`).
 
 The compression stage of an IVF-PQ vector index (Jégou et al. 2011,
 "Product Quantization for Nearest Neighbor Search" — the FAISS standard):

@@ -1,8 +1,5 @@
 """Preference-pair (RLHF/DPO) data-prep tier over `documents`
-(REGISTRATION DEFERRED to r4/r5, same policy as the other deferred tiers:
-the round-2 verdict froze net-new registry keys until the
-driver-verification backlog drains; enable by appending this module to
-`registry._MODULES` once CORRECTNESS_r04 lands).
+(registered in `registry.MODULES`).
 
 The chosen/rejected pair-construction stage of a preference-tuning
 pipeline, with the candidate group (a "prompt"'s completion set) stood in

@@ -1,8 +1,5 @@
-"""Privacy-release tier over the customer dimension (REGISTRATION
-DEFERRED to r4/r5, same policy as operators/reports.py and
-operators/tokenizer.py: the round-2 verdict froze net-new registry keys
-until the driver-verification backlog drains; enable by appending this
-module to `registry._MODULES` once CORRECTNESS_r04 lands).
+"""Privacy-release tier over the customer dimension
+(registered in `registry.MODULES`).
 
 Completes the privacy workflow that `etl.py::pii_mask` (the transform),
 `quality.py::pii_scan` (the detector) and `quality.py::k_anonymity_audit`

@@ -1,15 +1,11 @@
-"""Corpus reporting & sketch-tuning tier (REGISTRATION DEFERRED to r4/r5).
+"""Corpus reporting & sketch-tuning tier
+(registered in `registry.MODULES`).
 
 Four operators a corpus team runs before committing to a training mix:
 per-source datasheets, MinHash banding-parameter tuning, the dedup
-aggressiveness curve, and a char-level gibberish signal. All are complete
-(builder + DuckDB oracle + local parity tests in
-tests/test_reports_deferred.py) but NOT yet in the registry: the round-2
-verdict froze net-new query keys until the driver-verification backlog
-drains (VERDICT r2 item 1 — the driver records ~50 keys/round and 99
-backlog keys must green first). Enable by appending this module to
-`registry._MODULES` once CORRECTNESS_r04 lands; the QUERIES dict below is
-already in the registry contract shape.
+aggressiveness curve, and a char-level gibberish signal, each with a
+builder, a DuckDB oracle and local parity tests in
+tests/test_reports_deferred.py.
 
 Scale design:
 - source_quality_report: one aggregate over documents + one distinct-doc
@@ -489,9 +485,8 @@ FROM base WHERE n_in_alphabet > 0
 """
 
 
-# Registry-contract-shaped dict; NOT imported by registry yet (see module
-# docstring). Oracles are built lazily because the sweep SQL composes
-# private dedup constants.
+# Oracles are built lazily because the sweep SQL composes private dedup
+# constants.
 def queries() -> dict[str, QuerySpec]:
     return {
         "source_quality_report": QuerySpec(

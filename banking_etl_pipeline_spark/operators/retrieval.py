@@ -1,7 +1,5 @@
-"""Ranked-retrieval evaluation tier over `embeddings` (REGISTRATION
-DEFERRED — listed in registry._DEFERRED_MODULE_NAMES; enable by moving
-this module's name into the registration loop once a driver-verification
-slot opens).
+"""Ranked-retrieval evaluation tier over `embeddings`
+(registered in `registry.MODULES`).
 
 The eval loop a retrieval/RAG data pipeline runs after building an index:
 take a query sample, retrieve top-K through the SAME banded sign-LSH index

@@ -1,8 +1,5 @@
-"""Safety-filtering tier over the `documents` corpus (REGISTRATION
-DEFERRED to r4/r5, same policy as operators/reports.py, tokenizer.py,
-privacy.py and bitext.py: the round-2 verdict froze net-new registry keys
-until the driver-verification backlog drains; enable by appending this
-module to `registry._MODULES` once CORRECTNESS_r04 lands).
+"""Safety-filtering tier over the `documents` corpus
+(registered in `registry.MODULES`).
 
 The lexicon/pattern filtering stage every public web-scale corpus recipe
 runs (C4's bad-word list, Gopher's rules, CCNet's filters) — here the

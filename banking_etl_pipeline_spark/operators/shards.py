@@ -1,6 +1,5 @@
-"""Training-shard manifest tier over `documents` (REGISTRATION DEFERRED —
-listed in registry._DEFERRED_MODULE_NAMES; enable by moving this module's
-name into `registry._MODULES` once a driver-verification slot opens).
+"""Training-shard manifest tier over `documents`
+(registered in `registry.MODULES`).
 
 The last hop of a pretraining data pipeline: lay the curated corpus out as
 fixed-token-budget shards (the WebDataset/TFRecord manifest a trainer's

@@ -439,7 +439,7 @@ def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange, so the shuffle carries ≤1 row per vector per map partition.
     Measured on this shape against both the join-back and a
     min(struct(dist, label)) SortAggregate: window 1.19 s vs 1.58 vs
-    4.84 s at sf0.1, scripts/argmin_experiment.py) — and the centroid
+    4.84 s at sf0.1) — and the centroid
     side is broadcast: the canonical cluster plan where the only full
     shuffle is the per-vector rank-1 window."""
     e = table(spark, sf_dir, "embeddings").select(

@@ -1,7 +1,5 @@
 """Substring-level (span) deduplication tier over `documents`
-(REGISTRATION DEFERRED — added to registry._DEFERRED_MODULE_NAMES after the
-round-5 tier registration; enable by moving this module's name into
-`registry._MODULES` once its backlog slot opens).
+(registered in `registry.MODULES`).
 
 Document-level dedup (dedup.py) misses the dominant contamination mode of
 real crawls: *spans* repeated across otherwise-distinct documents — license

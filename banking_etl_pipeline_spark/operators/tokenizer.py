@@ -1,8 +1,5 @@
-"""Tokenizer-training tier over the `documents` corpus (REGISTRATION
-DEFERRED to r4/r5, same policy as operators/reports.py: the round-2 verdict
-froze net-new registry keys until the driver-verification backlog drains;
-enable by appending this module to `registry._MODULES` once CORRECTNESS_r04
-lands — the QUERIES dict is already in the registry contract shape).
+"""Tokenizer-training tier over the `documents` corpus
+(registered in `registry.MODULES`).
 
 Extends `bpe_pair_stats` (corpus.py — merge round 0 only) to the full
 tokenizer-training workflow a data team runs before a pretraining launch:

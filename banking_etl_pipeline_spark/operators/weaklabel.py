@@ -1,6 +1,5 @@
 """Weak-supervision / programmatic-labeling tier over `documents`
-(REGISTRATION DEFERRED to r4/r5, same policy as the other deferred tiers —
-see registry._DEFERRED_MODULE_NAMES).
+(registered in `registry.MODULES`).
 
 The Snorkel-style labeling workflow (public recipe): a bank of cheap
 deterministic labeling functions (LFs) votes keep(0)/filter(1)/abstain(-1)

@@ -3,9 +3,8 @@
 
 The driver's single-pass bench total moves ±17% between identical trees
 because session-persisted shared stages (LSH band/signature caches, truth
-tables) are attributed to whichever consumer materializes them first, and
-registry emission order shifts when oracle shas are re-queued. This script
-produces the COMMITTED headline instead:
+tables) are attributed to whichever consumer materializes them first. This
+script produces the COMMITTED headline instead:
 
 1. take a full-suite bench output (the raw per-key single-session numbers);
 2. re-run every key at or above THRESHOLD seconds in its OWN fresh

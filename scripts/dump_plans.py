@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Regenerate PLANS.md — the checked-in physical-plan gallery.
+"""Write a physical-plan gallery to .scratch/PLANS.md (git-ignored).
 
 Usage:  python scripts/dump_plans.py [sf_dir]   (default sf0.001)
 
@@ -55,7 +55,6 @@ GALLERY: dict[str, str] = {
     "curation_funnel_v2": "Four per-doc gate relations left-joined on doc_id; cluster stage read from the session cache (LogicalRDD).",
     "winnowing_fingerprint": "Per-row array algebra end to end — no shuffle, no Generate; one md5 per shingle position.",
     "triangle_count": "Degree-oriented wedge build/close as hash equi-joins; summary scalars ride broadcast 1-row joins.",
-    # registration-deferred tiers (resolved via their modules' queries())
     "bitext_margin_pairs": "Cross-lingual candidates from the cached LSH band index (equi-join, no NLJ); margin = one double division of BIGINT top-K sums.",
     "safety_funnel": "One corpus scan → conditional sums for all funnel stages; no join, no window, the whole tier's shape.",
     "generalization_ladder": "Three tiny QI aggregates unioned; the release decision is a broadcast 1-row argmin join — never a driver-side branch.",
@@ -71,8 +70,7 @@ GALLERY: dict[str, str] = {
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark(app_name="dump_plans")
-    from banking_etl_pipeline_spark.registry import merged_queries
-    queries = merged_queries()
+    queries = all_queries()
     out = [
         "# PLANS — representative physical plans (sf0.001, local[32], AQE on)",
         "",
@@ -83,13 +81,13 @@ def main() -> None:
     for key, caption in GALLERY.items():
         plan = plan_of(queries[key].build(spark, sf_dir), "simple").strip()
         out += ["", f"## {key}", "", caption, "", "```", plan, "```"]
-    with open(
-        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                     "PLANS.md"),
-        "w",
-    ) as f:
+    out_dir = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")
+    os.makedirs(out_dir, exist_ok=True)
+    path = os.path.join(out_dir, "PLANS.md")
+    with open(path, "w") as f:
         f.write("\n".join(out) + "\n")
-    print(f"PLANS.md regenerated: {len(GALLERY)} plans")
+    print(f"{path}: {len(GALLERY)} plans")
     spark.stop()
 
 

@@ -2,7 +2,8 @@
 """Plan survey for the optimization rounds: dump explain('formatted') for
 every benched key and tally plan-shape stats (Exchange count, scan count,
 join strategies, Python-eval nodes, pushdown) so plan-level waste stands
-out. Writes one .txt per key plus a survey.tsv summary.
+out. Writes one .txt per key plus a survey.tsv summary, by default under
+the git-ignored .scratch/plan_survey.
 
 Usage: python scripts/plan_survey.py [out_dir] [sf_dir]
 """
@@ -41,7 +42,7 @@ NODES = [
 
 
 def main() -> None:
-    out_dir = sys.argv[1] if len(sys.argv) > 1 else "plans/r09/survey"
+    out_dir = sys.argv[1] if len(sys.argv) > 1 else ".scratch/plan_survey"
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.makedirs(out_dir, exist_ok=True)

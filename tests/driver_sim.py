@@ -37,23 +37,9 @@ def main() -> int:
     sf = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.01")
     con = duck_connection(sf)
     q, osql = mod.queries(), mod.oracle_sql()
-    if os.environ.get("SPARK_GRAFT_INCLUDE_DEFERRED"):
-        # r05 registration rehearsal: run the registration-deferred tiers
-        # through the EXACT same comparison as the registered surface.
-        from banking_etl_pipeline_spark.registry import (  # noqa: E402
-            deferred_queries,
-        )
-
-        for key, spec in deferred_queries().items():
-            assert key not in q, f"deferred key collides: {key}"
-            q[key] = spec.build
-            osql[key] = spec.oracle
     # SPARK_GRAFT_ONLY_KEYS=a,b,c restricts the comparison to those keys
-    # (debug / resume-after-crash runs); the pending-sha snapshot below is
-    # skipped for partial runs so a subset can never masquerade as a full
-    # verification.
+    # (debug / resume-after-crash runs).
     only = os.environ.get("SPARK_GRAFT_ONLY_KEYS")
-    partial = False
     if only:
         wanted = {k.strip() for k in only.split(",") if k.strip()}
         unknown = wanted - set(q)
@@ -64,7 +50,6 @@ def main() -> int:
                 f"SPARK_GRAFT_ONLY_KEYS names unknown keys: {sorted(unknown)}"
             )
         q = {k: v for k, v in q.items() if k in wanted}
-        partial = True
     from pyspark.sql.types import ArrayType, MapType
 
     bad = []
@@ -105,21 +90,6 @@ def main() -> int:
         if not ok:
             bad.append(key)
     print(f"summary: {len(q) - len(bad)}/{len(q)} ok; mismatched: {bad}")
-    if not bad and not partial:
-        # snapshot each key's oracle sha AT VERIFICATION TIME: the index
-        # refresh after the next driver round stamps newly-green keys from
-        # this file instead of the then-current SQL, so an oracle edit made
-        # between round-landing and the refresh re-queues (safe) instead of
-        # being silently certified (scripts/dump_operator_index.py).
-        import hashlib
-        import json
-
-        shas = {
-            k: hashlib.sha256(osql[k].encode()).hexdigest()[:16]
-            for k in q if k in osql
-        }
-        with open(os.path.join(REPO, "ORACLE_SHAS_PENDING.json"), "w") as f:
-            json.dump(dict(sorted(shas.items())), f, indent=1)
     return 1 if bad else 0
 
 

@@ -79,7 +79,7 @@ def compare(spark_df, con: duckdb.DuckDBPyConnection, sql: str) -> dict:
     # No query may emit a top-level array/map column — serialize to a
     # deterministic string instead (array_join / array_to_string of exact
     # ints or fixed-point values). Enforced here so every parity path
-    # (registered, deferred, empty/skew sweeps, driver_sim) hits it.
+    # (per-tier suites, empty/skew sweeps, driver_sim) hits it.
     from pyspark.sql.types import ArrayType, MapType
 
     bad = [f.name for f in spark_df.schema.fields

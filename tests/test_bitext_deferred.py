@@ -1,9 +1,7 @@
-"""Local verification for the registration-deferred bitext-mining tier
-(operators/bitext.py): margin-based cross-lingual pair mining, reciprocal
-best-match alignment, per-language mining report and coverage.  Same
-policy as the reports/tokenizer/privacy deferred suites — complete
-builder + oracle, exercised with the exact driver comparison, registered
-once the driver-verification backlog drains (append to registry._MODULES).
+"""Local verification for the bitext-mining tier (operators/bitext.py):
+margin-based cross-lingual pair mining, reciprocal best-match alignment,
+per-language mining report and coverage, each run through the exact driver
+comparison. The module is registered in `registry.MODULES`.
 """
 
 from __future__ import annotations

@@ -1,8 +1,7 @@
-"""Local verification for the registration-deferred probability-
-calibration tier (operators/calibration.py): reliability bins, exact ECE,
-int64-safe Brier score over the weak-label model's confidences with
-Bernoulli(conf) md5-gated ground truth. Same policy as the other deferred
-suites.
+"""Local verification for the probability-calibration tier
+(operators/calibration.py): reliability bins, exact ECE, int64-safe Brier
+score over the weak-label model's confidences with Bernoulli(conf)
+md5-gated ground truth. The module is registered in `registry.MODULES`.
 """
 
 from __future__ import annotations

@@ -1,9 +1,8 @@
-"""Local verification for the registration-deferred curriculum/annealing
-tier (operators/curriculum.py): quality-phase bucketing, anneal repeat
-plan, phase-major training layout, bigram-vocabulary phase overlap.  Same
-policy as the other deferred suites — complete builder + oracle, exercised
-with the exact driver comparison, registered once the driver-verification
-backlog drains (registry._DEFERRED_MODULE_NAMES).
+"""Local verification for the curriculum/annealing tier
+(operators/curriculum.py): quality-phase bucketing, anneal repeat plan,
+phase-major training layout, bigram-vocabulary phase overlap, each run
+through the exact driver comparison. The module is registered in
+`registry.MODULES`.
 """
 
 from __future__ import annotations

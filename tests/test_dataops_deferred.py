@@ -1,8 +1,7 @@
-"""Local verification for the registration-deferred dataset-diff tier
-(operators/dataops.py): full-outer snapshot diff, column drift, changed-key
-triage sample. Same policy as the other deferred suites — complete builder
-+ oracle, exercised with the exact driver comparison, registered once a
-backlog slot opens (registry._DEFERRED_MODULE_NAMES).
+"""Local verification for the dataset-diff tier (operators/dataops.py):
+full-outer snapshot diff, column drift, changed-key triage sample, each run
+through the exact driver comparison. The module is registered in
+`registry.MODULES`.
 """
 
 from __future__ import annotations

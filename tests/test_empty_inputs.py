@@ -64,7 +64,7 @@ def test_empty_universe_oracle_parity(spark, empty_dir):
     comparison, over a corpus where NULL-vs-0 aggregate edges and ANSI
     division-by-zero guards actually bite (this sweep found and pinned the
     approx_distinct/bloom_filter_probe 0/0 crashes and three NULL-vs-zero
-    deferred-tier edges)."""
+    edges in the round-4 to round-6 tiers)."""
     import duckdb
 
     from tests.oracle_compare import TABLES as _T, compare
@@ -75,9 +75,7 @@ def test_empty_universe_oracle_parity(spark, empty_dir):
             f"CREATE VIEW {t} AS"
             f" SELECT * FROM '{empty_dir}/{t}.parquet/*.parquet'"
         )
-    from banking_etl_pipeline_spark.registry import merged_queries
-
-    specs = merged_queries()
+    specs = all_queries()
     bad = []
     for key, spec in specs.items():
         if (spec.oracle is None or key.startswith("streaming_")

@@ -1,9 +1,8 @@
-"""Local verification for the registration-deferred epoch/dataloader
-planning tier (operators/epochs.py): per-epoch seeded shuffle heads,
-temperature-scaled largest-remainder token apportionment, crash-resume
-point against the shard manifest. Same policy as the other deferred
-suites — complete builder + oracle, exercised with the exact driver
-comparison, registered once a backlog slot opens.
+"""Local verification for the epoch/dataloader planning tier
+(operators/epochs.py): per-epoch seeded shuffle heads, temperature-scaled
+largest-remainder token apportionment, crash-resume point against the shard
+manifest, each run through the exact driver comparison. The module is
+registered in `registry.MODULES`.
 """
 
 from __future__ import annotations

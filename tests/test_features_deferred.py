@@ -1,8 +1,7 @@
-"""Local verification for the registration-deferred feature-engineering
-tier (operators/features.py): out-of-fold target encoding, WoE/IV
-screening, mutual-information audit. Same policy as the other deferred
-suites — complete builder + oracle, exercised with the exact driver
-comparison, registered once a backlog slot opens.
+"""Local verification for the feature-engineering tier
+(operators/features.py): out-of-fold target encoding, WoE/IV screening,
+mutual-information audit, each run through the exact driver comparison. The
+module is registered in `registry.MODULES`.
 """
 
 from __future__ import annotations

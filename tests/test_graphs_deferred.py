@@ -1,6 +1,6 @@
-"""Local verification for the registration-deferred graph-traversal tier
-(operators/graphs.py): bounded-round frontier-join BFS over the
-md5-derived order graph. Same policy as the other deferred suites.
+"""Local verification for the graph-traversal tier (operators/graphs.py):
+bounded-round frontier-join BFS over the md5-derived order graph. The
+module is registered in `registry.MODULES`.
 """
 
 from __future__ import annotations

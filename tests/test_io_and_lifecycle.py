@@ -126,28 +126,6 @@ def test_cli_list_and_query(spark, sf_dir, capsys):
 
     assert main(["--query", "nope_not_a_key"]) == 2
 
-    # deferred keys are listed (marked) and runnable ad hoc
-    assert main(["--list"]) == 0
-    marked = {
-        _json.loads(l)["key"]
-        for l in capsys.readouterr().out.splitlines()
-        if l.strip() and _json.loads(l).get("deferred")
-    }
-    from banking_etl_pipeline_spark.registry import deferred_queries
-
-    # state-agnostic across registration rounds: whatever is deferred NOW
-    # must be exactly the marked set, and any deferred key must run ad hoc
-    dq = set(deferred_queries())
-    assert marked == dq
-    if dq:
-        probe = sorted(dq)[0]
-        assert main(["--query", probe, "--sf-dir", sf_dir,
-                     "--limit", "1"]) == 0
-        out = [
-            l for l in capsys.readouterr().out.splitlines() if l.strip()
-        ]
-        assert out
-
 
 # ---------------------------------------------------------------------------
 # Delta Lake runtime path (reference parity: spark_session.py:19-20,

@@ -1,8 +1,8 @@
-"""Local verification for the registration-deferred incremental-view-
-maintenance tier (operators/ivm.py): join-view delta maintenance, scoped
-MAX repair under deletes, insert-only top-k maintenance. The oracle is
-always the FULL RECOMPUTE, so hash equality is the maintenance-
-correctness theorem. Same policy as the other deferred suites.
+"""Local verification for the incremental-view-maintenance tier
+(operators/ivm.py): join-view delta maintenance, scoped MAX repair under
+deletes, insert-only top-k maintenance. The oracle is always the FULL
+RECOMPUTE, so hash equality is the maintenance-correctness theorem. The
+module is registered in `registry.MODULES`.
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
-"""Local verification for the registration-deferred KMV set-operation
-sketch tier (operators/kmv.py): bottom-K sketches, merged-sketch union
-cardinality, sketch-overlap Jaccard/intersection. Same policy as the
-other deferred suites.
+"""Local verification for the KMV set-operation sketch tier
+(operators/kmv.py): bottom-K sketches, merged-sketch union cardinality,
+sketch-overlap Jaccard/intersection. The module is registered in
+`registry.MODULES`.
 """
 
 from __future__ import annotations

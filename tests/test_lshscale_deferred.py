@@ -1,9 +1,9 @@
-"""Local verification for the registration-deferred banding-parameter
-study tier (operators/lshscale.py): per-geometry candidate budgets,
-probe-set recall tradeoff, and the scaled-geometry near-dup detector.
-Same policy as the other deferred suites, plus a planted-duplicates
-corpus proving the scaled detector finds real near-dups it was built
-for (the clean corpus correctly yields zero 0.9-cosine pairs).
+"""Local verification for the banding-parameter study tier
+(operators/lshscale.py): per-geometry candidate budgets, probe-set recall
+tradeoff, and the scaled-geometry near-dup detector, plus a
+planted-duplicates corpus proving the scaled detector finds real near-dups
+it was built for (the clean corpus correctly yields zero 0.9-cosine pairs).
+The module is registered in `registry.MODULES`.
 """
 
 from __future__ import annotations

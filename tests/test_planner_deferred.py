@@ -1,8 +1,8 @@
-"""Local verification for the registration-deferred scale-planner tier
-(operators/planner.py): per-table size/partition plans, broadcast
-classification, hot-key salting, hash-bucket skew. Same policy as the
-other deferred suites: oracle parity + plan sanity + an independent
-Python model of the exact integer arithmetic.
+"""Local verification for the scale-planner tier (operators/planner.py):
+per-table size/partition plans, broadcast classification, hot-key salting,
+hash-bucket skew: oracle parity + plan sanity + an independent Python model
+of the exact integer arithmetic. The module is registered in
+`registry.MODULES`.
 """
 
 from __future__ import annotations

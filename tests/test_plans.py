@@ -515,7 +515,7 @@ def test_kmeans_argmin_group_limit(spark, sf_dir, queries):
     """The kmeans argmin is a rank-1 window with Spark's WindowGroupLimit
     partial top-1 before the exchange (r9: was a groupBy-min + equality
     join-back that evaluated and shuffled the N×K scored stream twice —
-    measured 4× slower, scripts/argmin_experiment.py)."""
+    measured 4× slower at sf0.1)."""
     for key in ("kmeans_assign", "kmeans_update"):
         p = plan_of(_build(queries, spark, sf_dir, key))
         assert "WindowGroupLimit" in p, key

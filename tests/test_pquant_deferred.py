@@ -1,8 +1,7 @@
-"""Local verification for the registration-deferred product-quantization
-tier (operators/pquant.py): packed PQ codes, codebook/distortion audits,
-ADC probe search. Same policy as the other deferred suites — complete
-builder + oracle, exercised with the exact driver comparison, registered
-once a backlog slot opens (registry._DEFERRED_MODULE_NAMES).
+"""Local verification for the product-quantization tier (operators/pquant.py):
+packed PQ codes, codebook/distortion audits, ADC probe search, each run
+through the exact driver comparison. The module is registered in
+`registry.MODULES`.
 """
 
 from __future__ import annotations

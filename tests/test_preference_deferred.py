@@ -1,9 +1,7 @@
-"""Local verification for the registration-deferred preference-pair tier
-(operators/preference.py): rank-aligned chosen/rejected pairing, gap
-report, prompt-level split, token-budget cap.  Same policy as the other
-deferred suites — complete builder + oracle, exercised with the exact
-driver comparison, registered once the driver-verification backlog drains
-(append to registry._MODULES).
+"""Local verification for the preference-pair tier (operators/preference.py):
+rank-aligned chosen/rejected pairing, gap report, prompt-level split,
+token-budget cap, each run through the exact driver comparison. The module
+is registered in `registry.MODULES`.
 """
 
 from __future__ import annotations

@@ -1,9 +1,7 @@
-"""Local verification for the registration-deferred privacy tier
-(operators/privacy.py): seeded-Laplace DP release, l-diversity audit,
-generalization-lattice release decision, masked-extract digest.  Same
-policy as the reports/tokenizer deferred suites — complete builder +
-oracle, exercised with the exact driver comparison, registered once the
-driver-verification backlog drains (append to registry._MODULES).
+"""Local verification for the privacy tier (operators/privacy.py):
+seeded-Laplace DP release, l-diversity audit, generalization-lattice
+release decision, masked-extract digest, each run through the exact driver
+comparison. The module is registered in `registry.MODULES`.
 """
 
 from __future__ import annotations

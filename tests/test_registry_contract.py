@@ -1,74 +1,50 @@
-"""Registry-ordering contract: the driver's correctness harness records
-only the first ~50 registry-order entries per round, so `all_queries()`
-must emit every never-driver-verified key BEFORE any key that already has
-a fully-green row in a past CORRECTNESS_r*.json — otherwise round-over-
-round coverage rotation silently stops. Pure-Python (no Spark session).
+"""Registry contract: `registry.MODULES` lists every operator module that
+defines queries exactly once, the keys are unique, and every key carries a
+well-typed DuckDB oracle. Pure-Python apart from the oracle DESCRIBE pass.
 """
 
 from __future__ import annotations
 
-from banking_etl_pipeline_spark.registry import (
-    all_queries,
-    driver_verified_keys,
-)
+import ast
+import pathlib
+
+from banking_etl_pipeline_spark import registry
+from banking_etl_pipeline_spark.registry import all_queries
+
+PACKAGE = pathlib.Path(registry.__file__).parent
 
 
-def test_unverified_keys_emit_before_verified():
-    # the sha-aware set (a green key whose oracle SQL changed re-queues):
-    # MUST match what all_queries() orders by, or this invariant lies
-    verified = driver_verified_keys()
-    assert verified, "r1 CORRECTNESS file should contribute green keys"
-    seen_verified = False
-    for key in all_queries():
-        if key in verified:
-            seen_verified = True
-        else:
-            assert not seen_verified, (
-                f"unverified key {key!r} ordered after a verified key — "
-                "the driver's 50-entry window would re-check old keys"
-            )
+def _defines_queries(path: pathlib.Path) -> bool:
+    """True if the module binds `QUERIES` or defines `queries()` at top level."""
+    for node in ast.parse(path.read_text()).body:
+        if isinstance(node, ast.FunctionDef) and node.name == "queries":
+            return True
+        targets = (
+            node.targets if isinstance(node, ast.Assign)
+            else [node.target] if isinstance(node, ast.AnnAssign) else []
+        )
+        if any(isinstance(t, ast.Name) and t.id == "QUERIES" for t in targets):
+            return True
+    return False
 
 
-def test_priority_families_lead_the_window():
-    """The judge-prioritized families (DQ, scans, merge upsert, the 30-day
-    frame, the dedup tier) must sit inside the first 50 entries while any
-    of them remain unverified."""
-    verified = driver_verified_keys()
-    head = list(all_queries())[:50]
-    for key in ("dq_null_counts", "dq_dup_count", "dq_range_violations",
-                "dq_orphans", "scan_csv", "scan_parquet", "merge_upsert",
-                "window_range_30d", "dedup_exact", "dedup_minhash_lsh"):
-        if key not in verified:
-            assert key in head, f"{key!r} fell out of the driver window"
-
-
-def test_oracle_sha_change_requeues_key(monkeypatch):
-    """A driver-green key whose oracle SQL changes after verification must
-    drop out of the verified set (its green row certified different
-    semantics) and re-enter the unverified-first window."""
-
-    from banking_etl_pipeline_spark import registry
-
-    recorded = registry._recorded_oracle_shas()
-    # only keys that actually carry a recorded sha can demonstrate
-    # invalidation: in the between-round state, keys green in the newest
-    # CORRECTNESS file have no recorded sha until the index refresh runs
-    candidates = sorted(driver_verified_keys() & set(recorded))
-    assert candidates, "no driver-verified key has a recorded oracle sha"
-    key = candidates[0]
-    assert key in driver_verified_keys()
-    # simulate an oracle edit: recorded sha no longer matches current SQL
-    tampered = dict(recorded)
-    tampered[key] = "0" * 16
-    monkeypatch.setattr(registry, "_recorded_oracle_shas", lambda: tampered)
-    assert key not in registry.driver_verified_keys()
-    # and the registry re-orders it into the unverified-first block
-    order = list(registry.all_queries())
-    first_verified = next(
-        i for i, k in enumerate(order)
-        if k in registry.driver_verified_keys()
+def test_every_query_module_registered_once():
+    """Every module under operators/, streaming/ and sources/ that defines
+    queries appears exactly once in the static module list, and nothing
+    else does; the 276 keys are unique."""
+    expected = sorted(
+        f"banking_etl_pipeline_spark.{sub}.{path.stem}"
+        for sub in ("operators", "streaming", "sources")
+        for path in (PACKAGE / sub).glob("*.py")
+        if _defines_queries(path)
     )
-    assert order.index(key) < first_verified
+    listed = [mod.__name__ for mod in registry.MODULES]
+    assert len(listed) == len(set(listed)), "a module is listed twice"
+    assert sorted(listed) == expected
+    # all_queries() is the modules' keys in list order, each key once
+    keys = [k for mod in registry.MODULES for k in registry.module_queries(mod)]
+    assert len(keys) == len(set(keys)) == 276
+    assert list(all_queries()) == keys
 
 
 def test_every_query_has_an_oracle():
@@ -82,15 +58,13 @@ def test_no_oracle_emits_hugeint(sf_dir):
     """r4 driver lesson (priority_line_counts, pack_sequences): DuckDB
     SUM(int)→HUGEINT and DECIMAL(38,*) pandas-convert to float64/object
     while Spark emits bigint — invisible to fetchall() compares, fails the
-    driver's value hash. DESCRIBE every oracle (registered + deferred) and
-    reject those types at the top level; <1 s for the whole surface."""
-    from banking_etl_pipeline_spark.registry import deferred_queries
+    driver's value hash. DESCRIBE every oracle and reject those types at
+    the top level; <1 s for the whole surface."""
     from tests.oracle_compare import duck_connection, oracle_type_offenders
 
     con = duck_connection(sf_dir)
     offenders = {}
-    specs = {**all_queries(), **deferred_queries()}
-    for key, spec in specs.items():
+    for key, spec in all_queries().items():
         if spec.oracle is None:
             continue
         bad = oracle_type_offenders(con, spec.oracle)
@@ -103,18 +77,13 @@ def test_no_oracle_emits_hugeint(sf_dir):
 
 
 def test_r6_registration_landed():
-    """The round-6 registrations: the eleven r4/r5 deferred tiers plus the
-    two tiers built this round (planner, lshscale) are all in the registry
-    proper (276 keys), each spec complete, and the deferred list is empty.
-    Ordering assertions are artifact-state-agnostic (the r5 lesson: a
-    hard-coded 'key X is unverified' flips the moment the next CORRECTNESS
-    file lands) — they derive from driver_verified_keys() live."""
-    from banking_etl_pipeline_spark.registry import deferred_queries
+    """The round-6 registrations: the eleven r4/r5 tiers plus the two tiers
+    built that round (planner, lshscale) are all in the registry (276
+    keys), each spec complete."""
     from banking_etl_pipeline_spark.spec import QuerySpec
 
     merged = all_queries()
     assert len(merged) == 276
-    assert deferred_queries() == {}
     for key in ("substring_dup_coverage", "pq_encode", "shard_assignment",
                 "dataset_diff", "retrieval_ndcg", "epoch_shuffle_heads",
                 "ivm_join_delta", "target_encoding_oof", "ece_report",
@@ -127,62 +96,3 @@ def test_r6_registration_landed():
         assert spec.oracle and spec.oracle.strip().upper().startswith(
             ("WITH", "SELECT")), f"{key}: oracle missing/odd"
         assert spec.doc, f"{key}: missing description"
-    # whatever is unverified NOW must emit before whatever is verified NOW
-    # (the general invariant is test_unverified_keys_emit_before_verified;
-    # here we only pin that the r6 tier keys participate in the rotation)
-    order = list(merged)
-    verified = driver_verified_keys()
-    for key in ("pq_encode", "bfs_layers"):
-        if key not in verified and "pricing_summary" in verified:
-            assert order.index(key) < order.index("pricing_summary")
-
-
-def test_deferred_tiers_ready_for_registration():
-    """Whatever is deferred NOW must drop into the registry without
-    collisions, each spec complete — enabling a tier is a one-name move in
-    registry._MODULES. State-agnostic: an empty deferred list (the post-r6
-    state) passes vacuously."""
-    from banking_etl_pipeline_spark.registry import deferred_modules
-    from banking_etl_pipeline_spark.spec import QuerySpec
-
-    registered = set(all_queries())
-    seen: set[str] = set()
-    for mod in deferred_modules():
-        qs = mod.queries()
-        assert qs, mod.__name__
-        for key, spec in qs.items():
-            assert key not in registered, f"{key} collides with registry"
-            assert key not in seen, f"{key} duplicated across deferred tiers"
-            seen.add(key)
-            assert isinstance(spec, QuerySpec), key
-            assert callable(spec.build), key
-            assert spec.oracle and spec.oracle.strip().upper().startswith(
-                ("WITH", "SELECT")), f"{key}: oracle missing/odd"
-            assert spec.doc, f"{key}: missing description"
-
-
-def test_deferred_registration_actually_works(monkeypatch):
-    """Don't just assert readiness — perform the next registration against
-    a patched _MODULES and walk the real code path (this is the test that
-    would have caught _registered() requiring a QUERIES attribute the
-    deferred modules don't have). State-agnostic: baseline counts come
-    from the live registry, not hard-coded round totals."""
-    from banking_etl_pipeline_spark import registry
-
-    base = len(registry.all_queries())
-    monkeypatch.setattr(
-        registry, "_MODULES",
-        list(registry._MODULES) + registry.deferred_modules(),
-    )
-    merged = registry.all_queries()
-    assert len(merged) == base + len(registry.deferred_queries())
-    assert "pq_encode" in merged and "pricing_summary" in merged
-    # any never-driver-verified deferred key must emit before verified keys
-    order = list(merged)
-    verified = registry.driver_verified_keys()
-    unverified_deferred = [
-        k for k in registry.deferred_queries() if k not in verified
-    ]
-    if unverified_deferred and "pricing_summary" in verified:
-        for key in unverified_deferred:
-            assert order.index(key) < order.index("pricing_summary")

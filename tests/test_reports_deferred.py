@@ -1,10 +1,8 @@
-"""Local verification for the registration-deferred reporting tier
-(operators/reports.py). These four operators are COMPLETE — builder +
-DuckDB oracle — but intentionally absent from the registry: the round-2
-verdict froze net-new query keys until the driver-verification backlog
-drains. This suite runs the exact driver comparison locally so the code
-is exercised, not parked; registration is a one-line append to
-registry._MODULES once CORRECTNESS_r04 lands.
+"""Local verification for the reporting tier (operators/reports.py):
+per-source datasheets, MinHash banding-parameter tuning, the dedup
+aggressiveness curve and a char-level gibberish signal, each run through
+the exact driver comparison. The module is registered in
+`registry.MODULES`.
 """
 
 from __future__ import annotations

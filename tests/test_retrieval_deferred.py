@@ -1,9 +1,7 @@
-"""Local verification for the registration-deferred ranked-retrieval
-evaluation tier (operators/retrieval.py): MRR, precision/recall@k,
-micro-NDCG, kNN-label accuracy over the shared banded-LSH index. Same
-policy as the other deferred suites — complete builder + oracle,
-exercised with the exact driver comparison, registered once a backlog
-slot opens (registry._DEFERRED_MODULE_NAMES).
+"""Local verification for the ranked-retrieval evaluation tier
+(operators/retrieval.py): MRR, precision/recall@k, micro-NDCG, kNN-label
+accuracy over the shared banded-LSH index, each run through the exact
+driver comparison. The module is registered in `registry.MODULES`.
 """
 
 from __future__ import annotations

@@ -1,9 +1,7 @@
-"""Local verification for the registration-deferred safety-filtering tier
-(operators/safety.py): lexicon-ratio flags, injection-pattern scan, source
-blocklist audit, cumulative safety funnel.  Same policy as the other
-deferred suites — complete builder + oracle, exercised with the exact
-driver comparison, registered once the driver-verification backlog drains
-(append to registry._MODULES).
+"""Local verification for the safety-filtering tier (operators/safety.py):
+lexicon-ratio flags, injection-pattern scan, source blocklist audit,
+cumulative safety funnel, each run through the exact driver comparison. The
+module is registered in `registry.MODULES`.
 """
 
 from __future__ import annotations

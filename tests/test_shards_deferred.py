@@ -1,9 +1,7 @@
-"""Local verification for the registration-deferred training-shard tier
-(operators/shards.py): deterministic shard assignment off the exact
-distributed prefix sum, per-shard manifest, balance gate. Same policy as
-the other deferred suites — complete builder + oracle, exercised with the
-exact driver comparison, registered once a backlog slot opens
-(registry._DEFERRED_MODULE_NAMES).
+"""Local verification for the training-shard tier (operators/shards.py):
+deterministic shard assignment off the exact distributed prefix sum,
+per-shard manifest, balance gate, each run through the exact driver
+comparison. The module is registered in `registry.MODULES`.
 """
 
 from __future__ import annotations

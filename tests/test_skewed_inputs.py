@@ -112,7 +112,6 @@ def test_skewed_universe_oracle_parity(spark, skew_dir):
     (companion to the empty-universe parity gate)."""
     import duckdb
 
-    from banking_etl_pipeline_spark.registry import all_queries
     from tests.oracle_compare import TABLES as _T, compare
 
     con = duckdb.connect()
@@ -121,9 +120,7 @@ def test_skewed_universe_oracle_parity(spark, skew_dir):
             f"CREATE VIEW {t} AS"
             f" SELECT * FROM '{skew_dir}/{t}.parquet/*.parquet'"
         )
-    from banking_etl_pipeline_spark.registry import merged_queries
-
-    specs = merged_queries()
+    specs = all_queries()
     bad = []
     for key, spec in specs.items():
         if (spec.oracle is None or key.startswith("streaming_")

@@ -1,9 +1,7 @@
-"""Local verification for the registration-deferred substring-dedup tier
-(operators/substrings.py): W-token duplicated-window coverage, corpus-wide
-hot spans, maximal-span merging, memorization risk. Same policy as the
-other deferred suites — complete builder + oracle, exercised with the
-exact driver comparison, registered once a backlog slot opens
-(registry._DEFERRED_MODULE_NAMES).
+"""Local verification for the substring-dedup tier (operators/substrings.py):
+W-token duplicated-window coverage, corpus-wide hot spans, maximal-span
+merging, memorization risk, each run through the exact driver comparison.
+The module is registered in `registry.MODULES`.
 """
 
 from __future__ import annotations

@@ -1,9 +1,7 @@
-"""Local verification for the registration-deferred tokenizer tier
-(operators/tokenizer.py): full BPE merge-training loop, fixed-merge
-compression report, Heaps'-law vocabulary growth, Zipf decade profile.
-Same policy as tests/test_reports_deferred.py — complete builder + oracle,
-exercised here with the exact driver comparison, registered once the
-driver-verification backlog drains (append to registry._MODULES).
+"""Local verification for the tokenizer tier (operators/tokenizer.py): full
+BPE merge-training loop, fixed-merge compression report, Heaps'-law
+vocabulary growth, Zipf decade profile, each run through the exact driver
+comparison. The module is registered in `registry.MODULES`.
 """
 
 from __future__ import annotations

@@ -1,9 +1,7 @@
-"""Local verification for the registration-deferred weak-supervision tier
-(operators/weaklabel.py): LF vote matrix, weighted-majority label model,
-pairwise conflict report, per-LF coverage analysis.  Same policy as the
-other deferred suites — complete builder + oracle, exercised with the
-exact driver comparison, registered once the driver-verification backlog
-drains (registry._DEFERRED_MODULE_NAMES).
+"""Local verification for the weak-supervision tier (operators/weaklabel.py):
+LF vote matrix, weighted-majority label model, pairwise conflict report,
+per-LF coverage analysis, each run through the exact driver comparison. The
+module is registered in `registry.MODULES`.
 """
 
 from __future__ import annotations
