@@ -147,7 +147,9 @@ def main(argv: list[str] | None = None) -> int:
             ok = ok and passed
             print(json.dumps({
                 "entity": entity,
-                "rows": res.output.count(),
+                # the gate's count of the published rows: counting
+                # res.output would re-run the whole transform
+                "rows": res.quality["total_rows"],
                 "overall_passed": passed,
                 "null_counts": res.quality.get("null_counts", {}),
                 "duplicate_count": res.quality.get("duplicate_count", 0),

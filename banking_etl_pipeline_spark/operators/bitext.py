@@ -363,22 +363,21 @@ ORDER BY d.tgt_lang
 """
 
 
-def queries() -> dict[str, QuerySpec]:
-    return {
-        "bitext_margin_pairs": QuerySpec(
-            bitext_margin_pairs, BITEXT_MARGIN_PAIRS_SQL,
-            "margin-based cross-lingual pair mining (CCMatrix recipe)",
-        ),
-        "bitext_reciprocal_best": QuerySpec(
-            bitext_reciprocal_best, BITEXT_RECIPROCAL_BEST_SQL,
-            "bidirectional best-match alignment pairs",
-        ),
-        "bitext_mining_report": QuerySpec(
-            bitext_mining_report, BITEXT_MINING_REPORT_SQL,
-            "per-language mining volumes and margin stats",
-        ),
-        "bitext_lang_coverage": QuerySpec(
-            bitext_lang_coverage, BITEXT_LANG_COVERAGE_SQL,
-            "aligned-document coverage per target language",
-        ),
-    }
+QUERIES: dict[str, QuerySpec] = {
+    "bitext_margin_pairs": QuerySpec(
+        bitext_margin_pairs, BITEXT_MARGIN_PAIRS_SQL,
+        "margin-based cross-lingual pair mining (CCMatrix recipe)",
+    ),
+    "bitext_reciprocal_best": QuerySpec(
+        bitext_reciprocal_best, BITEXT_RECIPROCAL_BEST_SQL,
+        "bidirectional best-match alignment pairs",
+    ),
+    "bitext_mining_report": QuerySpec(
+        bitext_mining_report, BITEXT_MINING_REPORT_SQL,
+        "per-language mining volumes and margin stats",
+    ),
+    "bitext_lang_coverage": QuerySpec(
+        bitext_lang_coverage, BITEXT_LANG_COVERAGE_SQL,
+        "aligned-document coverage per target language",
+    ),
+}

@@ -162,21 +162,20 @@ FROM graded
 """
 
 
-def queries() -> dict[str, QuerySpec]:
-    return {
-        "calibration_bins": QuerySpec(
-            calibration_bins,
-            CALIBRATION_BINS_SQL,
-            "reliability diagram: per-decile volume, mean conf, accuracy",
-        ),
-        "ece_report": QuerySpec(
-            ece_report,
-            ECE_REPORT_SQL,
-            "expected calibration error as one exact integer ratio",
-        ),
-        "brier_score": QuerySpec(
-            brier_score,
-            BRIER_SCORE_SQL,
-            "Brier score with int64-safe per-row fixed-point squares",
-        ),
-    }
+QUERIES: dict[str, QuerySpec] = {
+    "calibration_bins": QuerySpec(
+        calibration_bins,
+        CALIBRATION_BINS_SQL,
+        "reliability diagram: per-decile volume, mean conf, accuracy",
+    ),
+    "ece_report": QuerySpec(
+        ece_report,
+        ECE_REPORT_SQL,
+        "expected calibration error as one exact integer ratio",
+    ),
+    "brier_score": QuerySpec(
+        brier_score,
+        BRIER_SCORE_SQL,
+        "Brier score with int64-safe per-row fixed-point squares",
+    ),
+}

@@ -278,22 +278,21 @@ ORDER BY phase_a
 """
 
 
-def queries() -> dict[str, QuerySpec]:
-    return {
-        "curriculum_phases": QuerySpec(
-            curriculum_phases, CURRICULUM_PHASES_SQL,
-            "quality-phase bucketing: volume/token/quality per phase",
-        ),
-        "anneal_repeat_plan": QuerySpec(
-            anneal_repeat_plan, ANNEAL_REPEAT_PLAN_SQL,
-            "anneal-phase epoch multipliers per source, exact tokens",
-        ),
-        "curriculum_order": QuerySpec(
-            curriculum_order, CURRICULUM_ORDER_SQL,
-            "phase-major deterministic training layout, no global sort",
-        ),
-        "phase_vocab_overlap": QuerySpec(
-            phase_vocab_overlap, PHASE_VOCAB_OVERLAP_SQL,
-            "vocabulary Jaccard between consecutive phases, one pass",
-        ),
-    }
+QUERIES: dict[str, QuerySpec] = {
+    "curriculum_phases": QuerySpec(
+        curriculum_phases, CURRICULUM_PHASES_SQL,
+        "quality-phase bucketing: volume/token/quality per phase",
+    ),
+    "anneal_repeat_plan": QuerySpec(
+        anneal_repeat_plan, ANNEAL_REPEAT_PLAN_SQL,
+        "anneal-phase epoch multipliers per source, exact tokens",
+    ),
+    "curriculum_order": QuerySpec(
+        curriculum_order, CURRICULUM_ORDER_SQL,
+        "phase-major deterministic training layout, no global sort",
+    ),
+    "phase_vocab_overlap": QuerySpec(
+        phase_vocab_overlap, PHASE_VOCAB_OVERLAP_SQL,
+        "vocabulary Jaccard between consecutive phases, one pass",
+    ),
+}

@@ -283,18 +283,17 @@ LIMIT {TOP_CHANGED}
 """
 
 
-def queries() -> dict[str, QuerySpec]:
-    return {
-        "dataset_diff": QuerySpec(
-            dataset_diff, DATASET_DIFF_SQL,
-            "v1/v2 snapshot diff: class counts + per-column changes",
-        ),
-        "column_drift_report": QuerySpec(
-            column_drift_report, COLUMN_DRIFT_REPORT_SQL,
-            "per-snapshot null rate and exact mean-cents drift",
-        ),
-        "changed_keys_sample": QuerySpec(
-            changed_keys_sample, CHANGED_KEYS_SAMPLE_SQL,
-            "top-20 changed keys by absolute money delta",
-        ),
-    }
+QUERIES: dict[str, QuerySpec] = {
+    "dataset_diff": QuerySpec(
+        dataset_diff, DATASET_DIFF_SQL,
+        "v1/v2 snapshot diff: class counts + per-column changes",
+    ),
+    "column_drift_report": QuerySpec(
+        column_drift_report, COLUMN_DRIFT_REPORT_SQL,
+        "per-snapshot null rate and exact mean-cents drift",
+    ),
+    "changed_keys_sample": QuerySpec(
+        changed_keys_sample, CHANGED_KEYS_SAMPLE_SQL,
+        "top-20 changed keys by absolute money delta",
+    ),
+}

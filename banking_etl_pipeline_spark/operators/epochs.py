@@ -199,21 +199,20 @@ FROM rem
 """
 
 
-def queries() -> dict[str, QuerySpec]:
-    return {
-        "epoch_shuffle_heads": QuerySpec(
-            epoch_shuffle_heads,
-            EPOCH_SHUFFLE_HEADS_SQL,
-            "per-epoch seeded-shuffle heads via TakeOrdered (no global sort)",
-        ),
-        "temperature_mixture": QuerySpec(
-            temperature_mixture,
-            TEMPERATURE_MIXTURE_SQL,
-            "T=0.5 source mixing by exact largest-remainder apportionment",
-        ),
-        "resume_plan": QuerySpec(
-            resume_plan,
-            RESUME_PLAN_SQL,
-            "mid-epoch crash resume point against the shard manifest",
-        ),
-    }
+QUERIES: dict[str, QuerySpec] = {
+    "epoch_shuffle_heads": QuerySpec(
+        epoch_shuffle_heads,
+        EPOCH_SHUFFLE_HEADS_SQL,
+        "per-epoch seeded-shuffle heads via TakeOrdered (no global sort)",
+    ),
+    "temperature_mixture": QuerySpec(
+        temperature_mixture,
+        TEMPERATURE_MIXTURE_SQL,
+        "T=0.5 source mixing by exact largest-remainder apportionment",
+    ),
+    "resume_plan": QuerySpec(
+        resume_plan,
+        RESUME_PLAN_SQL,
+        "mid-epoch crash resume point against the shard manifest",
+    ),
+}

@@ -220,21 +220,20 @@ CROSS JOIN n
 """
 
 
-def queries() -> dict[str, QuerySpec]:
-    return {
-        "target_encoding_oof": QuerySpec(
-            target_encoding_oof,
-            TARGET_ENCODING_OOF_SQL,
-            "leakage-free out-of-fold mean-target encoding per category",
-        ),
-        "woe_iv_report": QuerySpec(
-            woe_iv_report,
-            WOE_IV_REPORT_SQL,
-            "weight-of-evidence + IV terms for the binary status target",
-        ),
-        "mutual_information": QuerySpec(
-            mutual_information,
-            MUTUAL_INFORMATION_SQL,
-            "per-cell mutual-information terms for priority × status",
-        ),
-    }
+QUERIES: dict[str, QuerySpec] = {
+    "target_encoding_oof": QuerySpec(
+        target_encoding_oof,
+        TARGET_ENCODING_OOF_SQL,
+        "leakage-free out-of-fold mean-target encoding per category",
+    ),
+    "woe_iv_report": QuerySpec(
+        woe_iv_report,
+        WOE_IV_REPORT_SQL,
+        "weight-of-evidence + IV terms for the binary status target",
+    ),
+    "mutual_information": QuerySpec(
+        mutual_information,
+        MUTUAL_INFORMATION_SQL,
+        "per-cell mutual-information terms for priority × status",
+    ),
+}

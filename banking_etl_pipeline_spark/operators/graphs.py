@@ -170,21 +170,20 @@ FROM t, r
 """
 
 
-def queries() -> dict[str, QuerySpec]:
-    return {
-        "bfs_layers": QuerySpec(
-            bfs_layers,
-            BFS_LAYERS_SQL,
-            "min-distance BFS layers (≤3 hops) by per-round frontier joins",
-        ),
-        "bfs_frontier_report": QuerySpec(
-            bfs_frontier_report,
-            BFS_FRONTIER_REPORT_SQL,
-            "frontier-growth curve: node count per BFS distance",
-        ),
-        "bfs_reach_report": QuerySpec(
-            bfs_reach_report,
-            BFS_REACH_REPORT_SQL,
-            "k-hop blast radius: total / reached / unreached customers",
-        ),
-    }
+QUERIES: dict[str, QuerySpec] = {
+    "bfs_layers": QuerySpec(
+        bfs_layers,
+        BFS_LAYERS_SQL,
+        "min-distance BFS layers (≤3 hops) by per-round frontier joins",
+    ),
+    "bfs_frontier_report": QuerySpec(
+        bfs_frontier_report,
+        BFS_FRONTIER_REPORT_SQL,
+        "frontier-growth curve: node count per BFS distance",
+    ),
+    "bfs_reach_report": QuerySpec(
+        bfs_reach_report,
+        BFS_REACH_REPORT_SQL,
+        "k-hop blast radius: total / reached / unreached customers",
+    ),
+}

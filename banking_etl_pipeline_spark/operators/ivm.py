@@ -165,21 +165,20 @@ WHERE rank <= {TOP_K}
 """
 
 
-def queries() -> dict[str, QuerySpec]:
-    return {
-        "ivm_join_delta": QuerySpec(
-            ivm_join_delta,
-            IVM_JOIN_DELTA_SQL,
-            "join-view maintenance: stored partials ⊎ delta-join partials",
-        ),
-        "ivm_minmax_repair": QuerySpec(
-            ivm_minmax_repair,
-            IVM_MINMAX_REPAIR_SQL,
-            "scoped MAX repair under deletes (recompute affected groups only)",
-        ),
-        "ivm_topk_maintain": QuerySpec(
-            ivm_topk_maintain,
-            IVM_TOPK_MAINTAIN_SQL,
-            "top-k maintenance: topk(topk(base) ∪ Δ) for insert-only deltas",
-        ),
-    }
+QUERIES: dict[str, QuerySpec] = {
+    "ivm_join_delta": QuerySpec(
+        ivm_join_delta,
+        IVM_JOIN_DELTA_SQL,
+        "join-view maintenance: stored partials ⊎ delta-join partials",
+    ),
+    "ivm_minmax_repair": QuerySpec(
+        ivm_minmax_repair,
+        IVM_MINMAX_REPAIR_SQL,
+        "scoped MAX repair under deletes (recompute affected groups only)",
+    ),
+    "ivm_topk_maintain": QuerySpec(
+        ivm_topk_maintain,
+        IVM_TOPK_MAINTAIN_SQL,
+        "top-k maintenance: topk(topk(base) ∪ Δ) for insert-only deltas",
+    ),
+}

@@ -313,21 +313,20 @@ ORDER BY s.t1, s.t2
 """
 
 
-def queries() -> dict[str, QuerySpec]:
-    return {
-        "kmv_type_sketch": QuerySpec(
-            kmv_type_sketch,
-            KMV_TYPE_SKETCH_SQL,
-            "bottom-K sketch per event type: exact vs (K-1)·H/theta",
-        ),
-        "kmv_union_report": QuerySpec(
-            kmv_union_report,
-            KMV_UNION_REPORT_SQL,
-            "union cardinality per type pair from merged sketches only",
-        ),
-        "kmv_jaccard_report": QuerySpec(
-            kmv_jaccard_report,
-            KMV_JACCARD_REPORT_SQL,
-            "Jaccard / intersection estimates from sketch overlap",
-        ),
-    }
+QUERIES: dict[str, QuerySpec] = {
+    "kmv_type_sketch": QuerySpec(
+        kmv_type_sketch,
+        KMV_TYPE_SKETCH_SQL,
+        "bottom-K sketch per event type: exact vs (K-1)·H/theta",
+    ),
+    "kmv_union_report": QuerySpec(
+        kmv_union_report,
+        KMV_UNION_REPORT_SQL,
+        "union cardinality per type pair from merged sketches only",
+    ),
+    "kmv_jaccard_report": QuerySpec(
+        kmv_jaccard_report,
+        KMV_JACCARD_REPORT_SQL,
+        "Jaccard / intersection estimates from sketch overlap",
+    ),
+}

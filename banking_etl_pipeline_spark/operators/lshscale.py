@@ -429,23 +429,22 @@ WHERE list_dot_product(ea.v, eb.v) / (ea.nrm * eb.nrm)
 DEDUP_EMBEDDING_COSINE_SCALED_SQL = _dedup_embedding_cosine_scaled_sql()
 
 
-def queries() -> dict[str, QuerySpec]:
-    return {
-        "lsh_paramscan_report": QuerySpec(
-            lsh_paramscan_report,
-            LSH_PARAMSCAN_REPORT_SQL,
-            "candidate-pair budget per banding geometry"
-            " (budget ∝ N²·bands/2^bits)",
-        ),
-        "lsh_recall_tradeoff_report": QuerySpec(
-            lsh_recall_tradeoff_report,
-            LSH_RECALL_TRADEOFF_REPORT_SQL,
-            "probe-set recall vs candidate budget per banding geometry",
-        ),
-        "dedup_embedding_cosine_scaled": QuerySpec(
-            dedup_embedding_cosine_scaled,
-            DEDUP_EMBEDDING_COSINE_SCALED_SQL,
-            "near-dup pairs at the scaled (24×12) geometry, 0.9 bar,"
-            " exact re-rank",
-        ),
-    }
+QUERIES: dict[str, QuerySpec] = {
+    "lsh_paramscan_report": QuerySpec(
+        lsh_paramscan_report,
+        LSH_PARAMSCAN_REPORT_SQL,
+        "candidate-pair budget per banding geometry"
+        " (budget ∝ N²·bands/2^bits)",
+    ),
+    "lsh_recall_tradeoff_report": QuerySpec(
+        lsh_recall_tradeoff_report,
+        LSH_RECALL_TRADEOFF_REPORT_SQL,
+        "probe-set recall vs candidate budget per banding geometry",
+    ),
+    "dedup_embedding_cosine_scaled": QuerySpec(
+        dedup_embedding_cosine_scaled,
+        DEDUP_EMBEDDING_COSINE_SCALED_SQL,
+        "near-dup pairs at the scaled (24×12) geometry, 0.9 bar,"
+        " exact re-rank",
+    ),
+}

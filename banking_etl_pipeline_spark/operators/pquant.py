@@ -319,22 +319,21 @@ SELECT query_id, vec_id, adc_dist, rank FROM (
 """
 
 
-def queries() -> dict[str, QuerySpec]:
-    return {
-        "pq_encode": QuerySpec(
-            pq_encode, PQ_ENCODE_SQL,
-            "packed 32-bit PQ code + exact distortion per vector",
-        ),
-        "pq_codebook_report": QuerySpec(
-            pq_codebook_report, PQ_CODEBOOK_REPORT_SQL,
-            "per-(subspace, code) population and distortion audit",
-        ),
-        "pq_distortion_report": QuerySpec(
-            pq_distortion_report, PQ_DISTORTION_REPORT_SQL,
-            "per-subspace distortion totals, means, worst vector",
-        ),
-        "pq_ann_probe": QuerySpec(
-            pq_ann_probe, PQ_ANN_PROBE_SQL,
-            "ADC top-10 for 5 md5-chosen probes, exact integer distances",
-        ),
-    }
+QUERIES: dict[str, QuerySpec] = {
+    "pq_encode": QuerySpec(
+        pq_encode, PQ_ENCODE_SQL,
+        "packed 32-bit PQ code + exact distortion per vector",
+    ),
+    "pq_codebook_report": QuerySpec(
+        pq_codebook_report, PQ_CODEBOOK_REPORT_SQL,
+        "per-(subspace, code) population and distortion audit",
+    ),
+    "pq_distortion_report": QuerySpec(
+        pq_distortion_report, PQ_DISTORTION_REPORT_SQL,
+        "per-subspace distortion totals, means, worst vector",
+    ),
+    "pq_ann_probe": QuerySpec(
+        pq_ann_probe, PQ_ANN_PROBE_SQL,
+        "ADC top-10 for 5 md5-chosen probes, exact integer distances",
+    ),
+}

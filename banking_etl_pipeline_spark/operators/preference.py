@@ -226,22 +226,21 @@ ORDER BY source, chosen_id
 """
 
 
-def queries() -> dict[str, QuerySpec]:
-    return {
-        "preference_pairs": QuerySpec(
-            preference_pairs, PREFERENCE_PAIRS_SQL,
-            "rank-aligned chosen/rejected pairs per group (DPO prep)",
-        ),
-        "preference_gap_report": QuerySpec(
-            preference_gap_report, PREFERENCE_GAP_REPORT_SQL,
-            "per-group preference-pair volume and gap stats",
-        ),
-        "preference_split": QuerySpec(
-            preference_split, PREFERENCE_SPLIT_SQL,
-            "prompt-level train/val split, zero pair leakage",
-        ),
-        "preference_budget_cap": QuerySpec(
-            preference_budget_cap, PREFERENCE_BUDGET_CAP_SQL,
-            "per-group token-budget cap via window running sum",
-        ),
-    }
+QUERIES: dict[str, QuerySpec] = {
+    "preference_pairs": QuerySpec(
+        preference_pairs, PREFERENCE_PAIRS_SQL,
+        "rank-aligned chosen/rejected pairs per group (DPO prep)",
+    ),
+    "preference_gap_report": QuerySpec(
+        preference_gap_report, PREFERENCE_GAP_REPORT_SQL,
+        "per-group preference-pair volume and gap stats",
+    ),
+    "preference_split": QuerySpec(
+        preference_split, PREFERENCE_SPLIT_SQL,
+        "prompt-level train/val split, zero pair leakage",
+    ),
+    "preference_budget_cap": QuerySpec(
+        preference_budget_cap, PREFERENCE_BUDGET_CAP_SQL,
+        "per-group token-budget cap via window running sum",
+    ),
+}

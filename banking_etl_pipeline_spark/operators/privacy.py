@@ -298,26 +298,25 @@ ORDER BY c_mktsegment
 """
 
 
-def queries() -> dict[str, QuerySpec]:
-    return {
-        "dp_count_release": QuerySpec(
-            dp_count_release,
-            DP_COUNT_RELEASE_SQL,
-            "Laplace DP histogram release, seeded deterministic noise",
-        ),
-        "l_diversity_audit": QuerySpec(
-            l_diversity_audit,
-            L_DIVERSITY_AUDIT_SQL,
-            "distinct-sensitive diversity per QI group (l-diversity)",
-        ),
-        "generalization_ladder": QuerySpec(
-            generalization_ladder,
-            GENERALIZATION_LADDER_SQL,
-            "pick release granularity: first lattice level clearing k",
-        ),
-        "pii_redact_digest": QuerySpec(
-            pii_redact_digest,
-            PII_REDACT_DIGEST_SQL,
-            "bit_xor md5 certification of the masked extract per segment",
-        ),
-    }
+QUERIES: dict[str, QuerySpec] = {
+    "dp_count_release": QuerySpec(
+        dp_count_release,
+        DP_COUNT_RELEASE_SQL,
+        "Laplace DP histogram release, seeded deterministic noise",
+    ),
+    "l_diversity_audit": QuerySpec(
+        l_diversity_audit,
+        L_DIVERSITY_AUDIT_SQL,
+        "distinct-sensitive diversity per QI group (l-diversity)",
+    ),
+    "generalization_ladder": QuerySpec(
+        generalization_ladder,
+        GENERALIZATION_LADDER_SQL,
+        "pick release granularity: first lattice level clearing k",
+    ),
+    "pii_redact_digest": QuerySpec(
+        pii_redact_digest,
+        PII_REDACT_DIGEST_SQL,
+        "bit_xor md5 certification of the masked extract per segment",
+    ),
+}

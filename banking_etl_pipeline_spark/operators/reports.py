@@ -485,24 +485,21 @@ FROM base WHERE n_in_alphabet > 0
 """
 
 
-# Oracles are built lazily because the sweep SQL composes private dedup
-# constants.
-def queries() -> dict[str, QuerySpec]:
-    return {
-        "source_quality_report": QuerySpec(
-            source_quality_report, SOURCE_QUALITY_REPORT_SQL,
-            "per-source datasheet: volume, langs, gate, near-dup exposure",
-        ),
-        "minhash_param_sweep": QuerySpec(
-            minhash_param_sweep, _sweep_sql(),
-            "banding-config sweep: precision/recall per (bands, rows)",
-        ),
-        "dedup_threshold_curve": QuerySpec(
-            dedup_threshold_curve, _curve_sql(),
-            "survivor/dropped counts per near-dup threshold",
-        ),
-        "char_entropy_quality": QuerySpec(
-            char_entropy_quality, _entropy_sql(),
-            "char-unigram entropy + out-of-alphabet ratio, shuffle-free",
-        ),
-    }
+QUERIES: dict[str, QuerySpec] = {
+    "source_quality_report": QuerySpec(
+        source_quality_report, SOURCE_QUALITY_REPORT_SQL,
+        "per-source datasheet: volume, langs, gate, near-dup exposure",
+    ),
+    "minhash_param_sweep": QuerySpec(
+        minhash_param_sweep, _sweep_sql(),
+        "banding-config sweep: precision/recall per (bands, rows)",
+    ),
+    "dedup_threshold_curve": QuerySpec(
+        dedup_threshold_curve, _curve_sql(),
+        "survivor/dropped counts per near-dup threshold",
+    ),
+    "char_entropy_quality": QuerySpec(
+        char_entropy_quality, _entropy_sql(),
+        "char-unigram entropy + out-of-alphabet ratio, shuffle-free",
+    ),
+}

@@ -398,26 +398,25 @@ FROM qset q LEFT JOIN winner w ON q.q_id = w.q_id
 """
 
 
-def queries() -> dict[str, QuerySpec]:
-    return {
-        "retrieval_mrr": QuerySpec(
-            retrieval_mrr,
-            RETRIEVAL_MRR_SQL,
-            "mean reciprocal rank of the LSH-served label-graded ranking",
-        ),
-        "retrieval_precision_recall": QuerySpec(
-            retrieval_precision_recall,
-            RETRIEVAL_PRECISION_RECALL_SQL,
-            "micro precision@k / recall@k for k in {1,5,10}",
-        ),
-        "retrieval_ndcg": QuerySpec(
-            retrieval_ndcg,
-            RETRIEVAL_NDCG_SQL,
-            "micro-NDCG@10 in exact fixed-point (split-form final ratio)",
-        ),
-        "retrieval_knn_accuracy": QuerySpec(
-            retrieval_knn_accuracy,
-            RETRIEVAL_KNN_ACCURACY_SQL,
-            "top-K majority-vote label accuracy (composite-MIN argmax)",
-        ),
-    }
+QUERIES: dict[str, QuerySpec] = {
+    "retrieval_mrr": QuerySpec(
+        retrieval_mrr,
+        RETRIEVAL_MRR_SQL,
+        "mean reciprocal rank of the LSH-served label-graded ranking",
+    ),
+    "retrieval_precision_recall": QuerySpec(
+        retrieval_precision_recall,
+        RETRIEVAL_PRECISION_RECALL_SQL,
+        "micro precision@k / recall@k for k in {1,5,10}",
+    ),
+    "retrieval_ndcg": QuerySpec(
+        retrieval_ndcg,
+        RETRIEVAL_NDCG_SQL,
+        "micro-NDCG@10 in exact fixed-point (split-form final ratio)",
+    ),
+    "retrieval_knn_accuracy": QuerySpec(
+        retrieval_knn_accuracy,
+        RETRIEVAL_KNN_ACCURACY_SQL,
+        "top-K majority-vote label accuracy (composite-MIN argmax)",
+    ),
+}

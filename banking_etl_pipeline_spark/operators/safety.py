@@ -244,22 +244,21 @@ ORDER BY lang
 """
 
 
-def queries() -> dict[str, QuerySpec]:
-    return {
-        "safety_lexicon_ratio": QuerySpec(
-            safety_lexicon_ratio, SAFETY_LEXICON_RATIO_SQL,
-            "per-source block-lexicon token-ratio flags (C4-style)",
-        ),
-        "injection_pattern_scan": QuerySpec(
-            injection_pattern_scan, INJECTION_PATTERN_SCAN_SQL,
-            "per-signature injection-pattern hit counts and rates",
-        ),
-        "safety_blocklist_audit": QuerySpec(
-            safety_blocklist_audit, SAFETY_BLOCKLIST_AUDIT_SQL,
-            "per-language doc/char mass removed by the source blocklist",
-        ),
-        "safety_funnel": QuerySpec(
-            safety_funnel, SAFETY_FUNNEL_SQL,
-            "cumulative safety-filter survivors per language, one pass",
-        ),
-    }
+QUERIES: dict[str, QuerySpec] = {
+    "safety_lexicon_ratio": QuerySpec(
+        safety_lexicon_ratio, SAFETY_LEXICON_RATIO_SQL,
+        "per-source block-lexicon token-ratio flags (C4-style)",
+    ),
+    "injection_pattern_scan": QuerySpec(
+        injection_pattern_scan, INJECTION_PATTERN_SCAN_SQL,
+        "per-signature injection-pattern hit counts and rates",
+    ),
+    "safety_blocklist_audit": QuerySpec(
+        safety_blocklist_audit, SAFETY_BLOCKLIST_AUDIT_SQL,
+        "per-language doc/char mass removed by the source blocklist",
+    ),
+    "safety_funnel": QuerySpec(
+        safety_funnel, SAFETY_FUNNEL_SQL,
+        "cumulative safety-filter survivors per language, one pass",
+    ),
+}

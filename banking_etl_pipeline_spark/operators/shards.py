@@ -143,18 +143,17 @@ FROM m
 """
 
 
-def queries() -> dict[str, QuerySpec]:
-    return {
-        "shard_assignment": QuerySpec(
-            shard_assignment, SHARD_ASSIGNMENT_SQL,
-            "per-doc training slot, exact running tokens, shard id",
-        ),
-        "shard_manifest": QuerySpec(
-            shard_manifest, SHARD_MANIFEST_SQL,
-            "per-shard doc/token mass and prefix range manifest",
-        ),
-        "shard_balance_report": QuerySpec(
-            shard_balance_report, SHARD_BALANCE_REPORT_SQL,
-            "shard count, mean tokens, worst over/underrun vs budget",
-        ),
-    }
+QUERIES: dict[str, QuerySpec] = {
+    "shard_assignment": QuerySpec(
+        shard_assignment, SHARD_ASSIGNMENT_SQL,
+        "per-doc training slot, exact running tokens, shard id",
+    ),
+    "shard_manifest": QuerySpec(
+        shard_manifest, SHARD_MANIFEST_SQL,
+        "per-shard doc/token mass and prefix range manifest",
+    ),
+    "shard_balance_report": QuerySpec(
+        shard_balance_report, SHARD_BALANCE_REPORT_SQL,
+        "shard count, mean tokens, worst over/underrun vs budget",
+    ),
+}

@@ -435,26 +435,25 @@ ORDER BY decade
 """
 
 
-def queries() -> dict[str, QuerySpec]:
-    return {
-        "bpe_merge_train": QuerySpec(
-            bpe_merge_train,
-            BPE_MERGE_TRAIN_SQL,
-            f"{N_MERGES}-round BPE merge training over the word dictionary",
-        ),
-        "bpe_encode_report": QuerySpec(
-            bpe_encode_report,
-            BPE_ENCODE_REPORT_SQL,
-            "per-lang compression under a fixed merge table (vocab lookup)",
-        ),
-        "heaps_law": QuerySpec(
-            heaps_law,
-            HEAPS_LAW_SQL,
-            "vocabulary growth at 10 corpus prefixes (Heaps' law)",
-        ),
-        "zipf_tail_report": QuerySpec(
-            zipf_tail_report,
-            ZIPF_TAIL_REPORT_SQL,
-            "token mass by count decade, rank-free Zipf profile",
-        ),
-    }
+QUERIES: dict[str, QuerySpec] = {
+    "bpe_merge_train": QuerySpec(
+        bpe_merge_train,
+        BPE_MERGE_TRAIN_SQL,
+        f"{N_MERGES}-round BPE merge training over the word dictionary",
+    ),
+    "bpe_encode_report": QuerySpec(
+        bpe_encode_report,
+        BPE_ENCODE_REPORT_SQL,
+        "per-lang compression under a fixed merge table (vocab lookup)",
+    ),
+    "heaps_law": QuerySpec(
+        heaps_law,
+        HEAPS_LAW_SQL,
+        "vocabulary growth at 10 corpus prefixes (Heaps' law)",
+    ),
+    "zipf_tail_report": QuerySpec(
+        zipf_tail_report,
+        ZIPF_TAIL_REPORT_SQL,
+        "token mass by count decade, rank-free Zipf profile",
+    ),
+}

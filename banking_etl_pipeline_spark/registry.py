@@ -1,10 +1,12 @@
 """Central query registry: key → QuerySpec(spark builder, duckdb oracle SQL).
 
-A static list of the operator modules; `all_queries()` concatenates their
-query dicts in list order. `__spark_entry__.py` exposes this to the driver;
-`tests/driver_sim.py` and `tests/test_oracle_parity.py` compare every key
-with its DuckDB oracle. An operator module that fails to import fails the
-import of this module: a broken module never silently shrinks the registry.
+The one list of the engine's queries. `MODULES` is a static tuple of the
+query modules, each binding a `QUERIES` dict; `all_queries()` concatenates
+those dicts in list order. `__spark_entry__.py` exposes this to the driver,
+`bench.py` times every non-streaming key, and `tests/driver_sim.py` and
+`tests/test_oracle_parity.py` compare every key with its DuckDB oracle. An
+operator module that fails to import fails the import of this module: a
+broken module never silently shrinks the registry.
 """
 
 from __future__ import annotations
@@ -61,16 +63,10 @@ MODULES = (
 )
 
 
-def module_queries(mod) -> dict[str, QuerySpec]:
-    """A module's query dict: its `QUERIES` attribute or `queries()`."""
-    qs = getattr(mod, "QUERIES", None)
-    return dict(qs) if qs is not None else mod.queries()
-
-
 def all_queries() -> dict[str, QuerySpec]:
     out: dict[str, QuerySpec] = {}
     for mod in MODULES:
-        for key, spec in module_queries(mod).items():
+        for key, spec in mod.QUERIES.items():
             if key in out:
                 raise ValueError(f"duplicate query key {key!r}")
             out[key] = spec

@@ -20,45 +20,43 @@ from collections.abc import Callable, Mapping
 from pyspark.sql import DataFrame, SparkSession
 
 
-# Session-scoped persist-once registry (generalizes the per-module caches
-# like dedup._LSH_CACHE): a builder's expensive reused intermediate persists
-# exactly ONCE per (session, tag) instead of once per invocation — repeated
-# invocations in one session (the bench runs each query several times, the
-# driver runs families back-to-back) would otherwise accumulate persisted
-# RDDs that are never unpersisted. Entries from dead sessions are evicted on
-# sight. At cluster scale this is the write-the-stage-to-a-staging-table-once
-# step of a real pipeline.
-_DF_CACHE: dict[tuple[str, str], DataFrame] = {}
+# Session-scoped cache (generalizes the per-module caches like
+# dedup._LSH_CACHE), keyed by (application, kind, tag):
+# - `session_persist`: a builder's expensive reused intermediate persists
+#   exactly ONCE per (session, tag) instead of once per invocation —
+#   repeated invocations in one session (the bench runs each query several
+#   times, the driver runs families back-to-back) would otherwise accumulate
+#   persisted RDDs that are never unpersisted. At cluster scale this is the
+#   write-the-stage-to-a-staging-table-once step of a real pipeline.
+# - `session_scalar`: a few builders need one driver-side scalar (a table
+#   count, a longest-series gate) to parameterize the plan. Computing it per
+#   build() call launches a real Spark job every time bench/plan-dump
+#   re-invokes the builder; per (session, tag) the input is immutable, so
+#   compute once.
+# The kind keeps a DataFrame tag and a scalar tag from colliding. Entries
+# from dead sessions are evicted on sight.
+_SESSION_CACHE: dict[tuple[str, str, str], object] = {}
+
+
+def _session_cached(spark: SparkSession, kind: str, tag: str,
+                    make: Callable[[], object]) -> object:
+    app = spark.sparkContext.applicationId
+    for stale in [k for k in _SESSION_CACHE if k[0] != app]:
+        del _SESSION_CACHE[stale]
+    key = (app, kind, tag)
+    if key not in _SESSION_CACHE:
+        _SESSION_CACHE[key] = make()
+    return _SESSION_CACHE[key]
 
 
 def session_persist(spark: SparkSession, tag: str,
                     build: Callable[[], DataFrame]) -> DataFrame:
-    app = spark.sparkContext.applicationId
-    for stale in [k for k in _DF_CACHE if k[0] != app]:
-        del _DF_CACHE[stale]
-    key = (app, tag)
-    if key not in _DF_CACHE:
-        _DF_CACHE[key] = build().persist()
-    return _DF_CACHE[key]
-
-
-# Session-scoped scalar cache, same lifecycle as _DF_CACHE: a few builders
-# need one driver-side scalar (a table count, a longest-series gate) to
-# parameterize the plan. Computing it per build() call launches a real Spark
-# job every time bench/plan-dump re-invokes the builder; per (session, tag)
-# the input is immutable, so compute once.
-_SCALAR_CACHE: dict[tuple[str, str], object] = {}
+    return _session_cached(spark, "df", tag, lambda: build().persist())
 
 
 def session_scalar(spark: SparkSession, tag: str,
                    compute: Callable[[], object]) -> object:
-    app = spark.sparkContext.applicationId
-    for stale in [k for k in _SCALAR_CACHE if k[0] != app]:
-        del _SCALAR_CACHE[stale]
-    key = (app, tag)
-    if key not in _SCALAR_CACHE:
-        _SCALAR_CACHE[key] = compute()
-    return _SCALAR_CACHE[key]
+    return _session_cached(spark, "scalar", tag, compute)
 
 
 def aqe_coalescing(env: Mapping[str, str]) -> tuple[str, str]:

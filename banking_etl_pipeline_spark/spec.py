@@ -1,9 +1,11 @@
 """Query-spec plumbing shared by all operator modules.
 
-Each operator module exposes ``QUERIES: dict[str, QuerySpec]``. A spec pairs
-the Spark DataFrame builder with the ANSI-SQL oracle string that DuckDB runs
-on the same parquet tables (``oracle=None`` → non-SQL-expressible, driver
-does a rows-only check).
+Each query module binds one module-level ``QUERIES: dict[str, QuerySpec]``,
+its only export form: ``registry.MODULES`` lists the modules and
+``registry.all_queries()`` concatenates their dicts. A spec pairs the Spark
+DataFrame builder with the ANSI-SQL oracle string that DuckDB runs on the
+same parquet tables (``oracle=None`` → non-SQL-expressible, driver does a
+rows-only check).
 
 Cross-engine determinism rules applied throughout (see tests/test_oracle_parity.py):
 - every computed/aggregate column is aliased identically in both engines;

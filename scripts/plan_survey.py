@@ -1,9 +1,9 @@
 #!/usr/bin/env python
-"""Plan survey for the optimization rounds: dump explain('formatted') for
-every benched key and tally plan-shape stats (Exchange count, scan count,
-join strategies, Python-eval nodes, pushdown) so plan-level waste stands
-out. Writes one .txt per key plus a survey.tsv summary, by default under
-the git-ignored .scratch/plan_survey.
+"""Plan survey: dump explain('formatted') for every key that bench.py times
+and tally plan-shape stats (Exchange count, scan count, join strategies,
+Python-eval nodes, pushdown) so plan-level waste stands out. Writes one .txt
+per key plus a survey.tsv summary, by default under the git-ignored
+.scratch/plan_survey.
 
 Usage: python scripts/plan_survey.py [out_dir] [sf_dir]
 """
@@ -18,7 +18,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench
 from banking_etl_pipeline_spark.plans import plan_of
-from banking_etl_pipeline_spark.registry import all_queries
 from banking_etl_pipeline_spark.session import get_spark
 
 NODES = [
@@ -47,17 +46,10 @@ def main() -> None:
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name="plan_survey")
-    queries = all_queries()
-    keys = [k for k in bench.HEADLINE if k in queries]
-    subset = os.environ.get("SPARK_GRAFT_BENCH_KEYS")
-    if subset:
-        wanted = {k.strip() for k in subset.split(",") if k.strip()}
-        keys = [k for k in keys if k in wanted]
-
     rows = []
-    for key in keys:
+    for key, spec in bench.bench_queries().items():
         try:
-            df = queries[key].build(spark, sf_dir)
+            df = spec.build(spark, sf_dir)
             plan = plan_of(df)
         except Exception as exc:  # survey must not die on one key
             rows.append((key, {"ERROR": 1}, str(exc)[:120]))

@@ -24,7 +24,7 @@ from __future__ import annotations
 import pytest
 
 from banking_etl_pipeline_spark.registry import all_queries
-from banking_etl_pipeline_spark.session import _DF_CACHE, _SCALAR_CACHE
+from banking_etl_pipeline_spark.session import _SESSION_CACHE
 
 from .oracle_compare import compare, duck_connection
 
@@ -62,10 +62,10 @@ def _clear_session_caches() -> None:
     # persisted intermediates (LSH bands, truth tiers, scalars) must be
     # REBUILT under the conf being tested, not reused from the 8-partition
     # fixture session that shares this applicationId
-    for df in _DF_CACHE.values():
-        df.unpersist()
-    _DF_CACHE.clear()
-    _SCALAR_CACHE.clear()
+    for (_, kind, _), value in _SESSION_CACHE.items():
+        if kind == "df":
+            value.unpersist()
+    _SESSION_CACHE.clear()
 
 
 @pytest.fixture(scope="module")

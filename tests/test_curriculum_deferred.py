@@ -11,15 +11,10 @@ import pytest
 
 from banking_etl_pipeline_spark.operators.curriculum import (
     N_BATCHES,
-    queries as cur_queries,
+    QUERIES,
 )
 from banking_etl_pipeline_spark.plans import plan_of
 from tests.oracle_compare import compare, duck_connection
-
-
-@pytest.fixture(scope="module")
-def cur():
-    return cur_queries()
 
 
 @pytest.mark.parametrize(
@@ -27,16 +22,16 @@ def cur():
     ["curriculum_phases", "anneal_repeat_plan", "curriculum_order",
      "phase_vocab_overlap"],
 )
-def test_curriculum_oracle_parity(key, spark, sf_dir, cur):
-    spec = cur[key]
+def test_curriculum_oracle_parity(key, spark, sf_dir):
+    spec = QUERIES[key]
     res = compare(spec.build(spark, sf_dir), duck_connection(sf_dir),
                   spec.oracle)
     assert res["row_count_match"] and res["columns_match"] \
         and res["values_match"], f"{key}: {res['detail']}"
 
 
-def test_curriculum_plans_scale_sane(spark, sf_dir, cur):
-    for key, spec in cur.items():
+def test_curriculum_plans_scale_sane(spark, sf_dir):
+    for key, spec in QUERIES.items():
         p = plan_of(spec.build(spark, sf_dir))
         assert "CartesianProduct" not in p, f"{key}: cartesian"
         assert "BroadcastNestedLoopJoin" not in p, f"{key}: NLJ"
@@ -44,8 +39,8 @@ def test_curriculum_plans_scale_sane(spark, sf_dir, cur):
             assert marker not in p, f"{key}: python eval"
 
 
-def test_phases_partition_the_corpus(spark, sf_dir, cur):
-    rows = cur["curriculum_phases"].build(spark, sf_dir).collect()
+def test_phases_partition_the_corpus(spark, sf_dir):
+    rows = QUERIES["curriculum_phases"].build(spark, sf_dir).collect()
     assert [r["phase"] for r in rows] == sorted(r["phase"] for r in rows)
     assert all(r["n_docs"] > 0 for r in rows)
     # mean quality must increase with phase (that's the curriculum)
@@ -53,8 +48,8 @@ def test_phases_partition_the_corpus(spark, sf_dir, cur):
     assert means == sorted(means)
 
 
-def test_anneal_repeats_spread_and_account(spark, sf_dir, cur):
-    rows = cur["anneal_repeat_plan"].build(spark, sf_dir).collect()
+def test_anneal_repeats_spread_and_account(spark, sf_dir):
+    rows = QUERIES["anneal_repeat_plan"].build(spark, sf_dir).collect()
     assert rows
     # thresholds must split sources, not rubber-stamp them (at larger SFs
     # per-source means concentrate, so demand ≥2 distinct multipliers,
@@ -66,8 +61,8 @@ def test_anneal_repeats_spread_and_account(spark, sf_dir, cur):
         assert 1 <= r["repeats"] <= 3
 
 
-def test_order_is_phase_major_and_complete(spark, sf_dir, cur):
-    rows = cur["curriculum_order"].build(spark, sf_dir).collect()
+def test_order_is_phase_major_and_complete(spark, sf_dir):
+    rows = QUERIES["curriculum_order"].build(spark, sf_dir).collect()
     from banking_etl_pipeline_spark.catalog import table
 
     assert len(rows) == table(spark, sf_dir, "documents").count()
@@ -77,38 +72,38 @@ def test_order_is_phase_major_and_complete(spark, sf_dir, cur):
         assert r["phase"] in (1, 2, 3)
 
 
-def test_vocab_overlap_bounds(spark, sf_dir, cur):
-    rows = cur["phase_vocab_overlap"].build(spark, sf_dir).collect()
+def test_vocab_overlap_bounds(spark, sf_dir):
+    rows = QUERIES["phase_vocab_overlap"].build(spark, sf_dir).collect()
     assert [(r["phase_a"], r["phase_b"]) for r in rows] == [(1, 2), (2, 3)]
     for r in rows:
         assert r["vocab_common"] <= min(r["vocab_a"], r["vocab_b"])
         assert 0.0 <= r["jaccard"] <= 1.0
 
 
-def test_curriculum_empty_universe(spark, sf_dir, cur):
+def test_curriculum_empty_universe(spark, sf_dir):
     from tests.conftest import build_empty_universe
 
     empty = build_empty_universe(spark, sf_dir)
-    for key, spec in cur.items():
+    for key, spec in QUERIES.items():
         df = spec.build(spark, empty)
         assert len(df.schema) > 0, key
         assert df.count() >= 0, key
 
 
-def test_curriculum_hot_key(spark, sf_dir, cur):
+def test_curriculum_hot_key(spark, sf_dir):
     from tests.conftest import build_skewed_universe
 
     skew = build_skewed_universe(spark, sf_dir)
-    for key, spec in cur.items():
+    for key, spec in QUERIES.items():
         assert spec.build(spark, skew).count() >= 0, key
 
 
-def test_curriculum_repeat_deterministic(spark, sf_dir, cur):
+def test_curriculum_repeat_deterministic(spark, sf_dir):
     from collections import Counter
 
     from tests.oracle_compare import _norm
 
-    for key, spec in cur.items():
+    for key, spec in QUERIES.items():
         sets = []
         for _ in range(2):
             rows = spec.build(spark, sf_dir).collect()

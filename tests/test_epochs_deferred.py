@@ -13,45 +13,40 @@ from banking_etl_pipeline_spark.catalog import table
 from banking_etl_pipeline_spark.operators.epochs import (
     EPOCHS,
     HEADS,
+    QUERIES,
     T_BUDGET,
-    queries as ep_queries,
 )
 from banking_etl_pipeline_spark.plans import plan_of
 from tests.oracle_compare import compare, duck_connection
 
 
-@pytest.fixture(scope="module")
-def eq():
-    return ep_queries()
-
-
 @pytest.mark.parametrize(
     "key", ["epoch_shuffle_heads", "temperature_mixture", "resume_plan"]
 )
-def test_epochs_oracle_parity(key, spark, sf_dir, eq):
-    spec = eq[key]
+def test_epochs_oracle_parity(key, spark, sf_dir):
+    spec = QUERIES[key]
     res = compare(spec.build(spark, sf_dir), duck_connection(sf_dir),
                   spec.oracle)
     assert res["row_count_match"] and res["columns_match"] \
         and res["values_match"], f"{key}: {res['detail']}"
 
 
-def test_epochs_plans_scale_sane(spark, sf_dir, eq):
-    for key, spec in eq.items():
+def test_epochs_plans_scale_sane(spark, sf_dir):
+    for key, spec in QUERIES.items():
         p = plan_of(spec.build(spark, sf_dir))
         assert "CartesianProduct" not in p, f"{key}: cartesian"
         for marker in ("BatchEvalPython", "ArrowEvalPython"):
             assert marker not in p, f"{key}: python eval"
     # each epoch head is a bounded top-HEADS heap, not a global sort
-    p = plan_of(eq["epoch_shuffle_heads"].build(spark, sf_dir))
+    p = plan_of(QUERIES["epoch_shuffle_heads"].build(spark, sf_dir))
     assert "TakeOrderedAndProject" in p
 
 
-def test_shuffle_heads_shape(spark, sf_dir, eq):
+def test_shuffle_heads_shape(spark, sf_dir):
     """EPOCHS·HEADS rows, positions 1..HEADS per epoch, the heads really
     are that epoch's hash minima, and different epochs disagree (the
     reshuffle reshuffles)."""
-    rows = eq["epoch_shuffle_heads"].build(spark, sf_dir).collect()
+    rows = QUERIES["epoch_shuffle_heads"].build(spark, sf_dir).collect()
     assert len(rows) == EPOCHS * HEADS
     by_epoch: dict = {}
     for r in rows:
@@ -67,11 +62,11 @@ def test_shuffle_heads_shape(spark, sf_dir, eq):
     assert len(set(orders)) > 1, "epochs produced identical head orders"
 
 
-def test_mixture_apportions_exactly(spark, sf_dir, eq):
+def test_mixture_apportions_exactly(spark, sf_dir):
     """Quotas are non-negative, sum EXACTLY to the budget, and differ from
     plain floor allocation by at most 1 (largest-remainder property);
     weights stay far inside the int64 product bound."""
-    rows = eq["temperature_mixture"].build(spark, sf_dir).collect()
+    rows = QUERIES["temperature_mixture"].build(spark, sf_dir).collect()
     assert sum(r["quota"] for r in rows) == T_BUDGET
     w_total = sum(r["w_fp"] for r in rows)
     for r in rows:
@@ -84,12 +79,12 @@ def test_mixture_apportions_exactly(spark, sf_dir, eq):
     assert len(rows) == n_src
 
 
-def test_resume_plan_consistency(spark, sf_dir, eq):
+def test_resume_plan_consistency(spark, sf_dir):
     """The remaining token mass equals total − (largest prefix ≤ offset),
     and the shard range is the manifest's tail."""
     from banking_etl_pipeline_spark.operators.shards import _assignment
 
-    plan = eq["resume_plan"].build(spark, sf_dir).collect()[0]
+    plan = QUERIES["resume_plan"].build(spark, sf_dir).collect()[0]
     a = sorted(
         _assignment(spark, sf_dir).collect(), key=lambda r: r["prefix"]
     )

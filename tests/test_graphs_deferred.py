@@ -13,31 +13,26 @@ from banking_etl_pipeline_spark.catalog import table
 from banking_etl_pipeline_spark.operators.graphs import (
     GRAPH_SEED,
     MAX_DEPTH,
+    QUERIES,
     SEED_MOD,
-    queries as graph_queries,
 )
 from banking_etl_pipeline_spark.plans import plan_of
 from tests.oracle_compare import compare, duck_connection
 
 
-@pytest.fixture(scope="module")
-def gq():
-    return graph_queries()
-
-
 @pytest.mark.parametrize(
     "key", ["bfs_layers", "bfs_frontier_report", "bfs_reach_report"]
 )
-def test_graphs_oracle_parity(key, spark, sf_dir, gq):
-    spec = gq[key]
+def test_graphs_oracle_parity(key, spark, sf_dir):
+    spec = QUERIES[key]
     res = compare(spec.build(spark, sf_dir), duck_connection(sf_dir),
                   spec.oracle)
     assert res["row_count_match"] and res["columns_match"] \
         and res["values_match"], f"{key}: {res['detail']}"
 
 
-def test_graphs_plans_scale_sane(spark, sf_dir, gq):
-    for key, spec in gq.items():
+def test_graphs_plans_scale_sane(spark, sf_dir):
+    for key, spec in QUERIES.items():
         p = plan_of(spec.build(spark, sf_dir))
         assert "CartesianProduct" not in p, f"{key}: cartesian"
         for marker in ("BatchEvalPython", "ArrowEvalPython"):
@@ -56,7 +51,7 @@ def test_customer_keys_are_dense_from_zero(spark, sf_dir):
     assert keys == list(range(len(keys)))
 
 
-def test_bfs_matches_python_model(spark, sf_dir, gq):
+def test_bfs_matches_python_model(spark, sf_dir):
     """Re-derive the whole traversal in Python from the same md5 edge
     formula and compare min-distances exactly."""
     n_cust = table(spark, sf_dir, "customer").count()
@@ -82,9 +77,9 @@ def test_bfs_matches_python_model(spark, sf_dir, gq):
             dist[v] = r
         frontier = nxt
     got = {r["k"]: r["dist"]
-           for r in gq["bfs_layers"].build(spark, sf_dir).collect()}
+           for r in QUERIES["bfs_layers"].build(spark, sf_dir).collect()}
     assert got == dist
-    reach = gq["bfs_reach_report"].build(spark, sf_dir).collect()[0]
+    reach = QUERIES["bfs_reach_report"].build(spark, sf_dir).collect()[0]
     assert reach["n_customers"] == n_cust
     assert reach["n_reached"] == len(dist)
     assert reach["n_unreached"] == n_cust - len(dist)

@@ -106,6 +106,10 @@ def test_cli_demo_runs_all_pipelines(spark, capsys):
     assert entities == {"customer", "account", "transaction"}
     assert out[-1] == {"overall_passed": True}
     assert all(r["overall_passed"] for r in out if "entity" in r)
+    # the demo seeds unique non-null ids and positive amounts, so the
+    # cleaners keep every seeded row
+    rows = {r["entity"]: r["rows"] for r in out if "entity" in r}
+    assert rows == {"customer": 200, "account": 300, "transaction": 3000}
 
 
 def test_cli_list_and_query(spark, sf_dir, capsys):

@@ -13,38 +13,33 @@ from banking_etl_pipeline_spark.catalog import table
 from banking_etl_pipeline_spark.operators.ivm import (
     DELETE_MOD,
     GRP_MOD,
+    QUERIES,
     TOP_K,
     TOPK_MOD,
-    queries as ivm_queries,
 )
 from banking_etl_pipeline_spark.plans import plan_of
 from tests.oracle_compare import compare, duck_connection
 
 
-@pytest.fixture(scope="module")
-def iq():
-    return ivm_queries()
-
-
 @pytest.mark.parametrize(
     "key", ["ivm_join_delta", "ivm_minmax_repair", "ivm_topk_maintain"]
 )
-def test_ivm_oracle_parity(key, spark, sf_dir, iq):
-    spec = iq[key]
+def test_ivm_oracle_parity(key, spark, sf_dir):
+    spec = QUERIES[key]
     res = compare(spec.build(spark, sf_dir), duck_connection(sf_dir),
                   spec.oracle)
     assert res["row_count_match"] and res["columns_match"] \
         and res["values_match"], f"{key}: {res['detail']}"
 
 
-def test_ivm_plans_scale_sane(spark, sf_dir, iq):
-    for key, spec in iq.items():
+def test_ivm_plans_scale_sane(spark, sf_dir):
+    for key, spec in QUERIES.items():
         p = plan_of(spec.build(spark, sf_dir))
         assert "CartesianProduct" not in p, f"{key}: cartesian"
         for marker in ("BatchEvalPython", "ArrowEvalPython"):
             assert marker not in p, f"{key}: python eval"
     # both top-k stages are bounded heaps, never a global sort
-    p = plan_of(iq["ivm_topk_maintain"].build(spark, sf_dir))
+    p = plan_of(QUERIES["ivm_topk_maintain"].build(spark, sf_dir))
     assert "TakeOrderedAndProject" in p
     assert "Exchange rangepartitioning" not in p
 
@@ -69,7 +64,7 @@ def test_minmax_repair_is_scoped(spark, sf_dir):
             survivors.setdefault(r["grp"], []).append(r["price_c"])
     out = {
         r["grp"]: r["max_price_c"]
-        for r in ivm_queries()["ivm_minmax_repair"].build(spark, sf_dir)
+        for r in QUERIES["ivm_minmax_repair"].build(spark, sf_dir)
         .collect()
     }
     assert set(out) == set(survivors)
@@ -80,10 +75,10 @@ def test_minmax_repair_is_scoped(spark, sf_dir):
             assert out[g] == stored[g]
 
 
-def test_topk_identity_holds(spark, sf_dir, iq):
+def test_topk_identity_holds(spark, sf_dir):
     """topk(topk(base) ∪ Δ) really equals topk(all) with the total
     tie-break order, and the output is exactly TOP_K ranked rows."""
-    rows = iq["ivm_topk_maintain"].build(spark, sf_dir).collect()
+    rows = QUERIES["ivm_topk_maintain"].build(spark, sf_dir).collect()
     assert [r["rank"] for r in rows] == list(range(1, TOP_K + 1))
     keys = [(-r["price_c"], r["o_orderkey"]) for r in rows]
     assert keys == sorted(keys)

@@ -15,30 +15,25 @@ from banking_etl_pipeline_spark.operators.kmv import (
     H_DOMAIN,
     KMV_K,
     KMV_SEED,
-    queries as kmv_queries,
+    QUERIES,
 )
 from banking_etl_pipeline_spark.plans import plan_of
 from tests.oracle_compare import compare, duck_connection
 
 
-@pytest.fixture(scope="module")
-def kq():
-    return kmv_queries()
-
-
 @pytest.mark.parametrize(
     "key", ["kmv_type_sketch", "kmv_union_report", "kmv_jaccard_report"]
 )
-def test_kmv_oracle_parity(key, spark, sf_dir, kq):
-    spec = kq[key]
+def test_kmv_oracle_parity(key, spark, sf_dir):
+    spec = QUERIES[key]
     res = compare(spec.build(spark, sf_dir), duck_connection(sf_dir),
                   spec.oracle)
     assert res["row_count_match"] and res["columns_match"] \
         and res["values_match"], f"{key}: {res['detail']}"
 
 
-def test_kmv_plans_scale_sane(spark, sf_dir, kq):
-    for key, spec in kq.items():
+def test_kmv_plans_scale_sane(spark, sf_dir):
+    for key, spec in QUERIES.items():
         p = plan_of(spec.build(spark, sf_dir))
         assert "CartesianProduct" not in p, f"{key}: cartesian"
         for marker in ("BatchEvalPython", "ArrowEvalPython"):
@@ -56,14 +51,14 @@ def _model_hashes(spark, sf_dir):
     return sets
 
 
-def test_sketch_matches_python_model(spark, sf_dir, kq):
+def test_sketch_matches_python_model(spark, sf_dir):
     """Exact counts, fill levels, and the (K-1)·H/theta estimate re-derived
     from the same 48-bit md5 hashes; the estimate must also be within the
     standard KMV error envelope (~4/sqrt(K)) when the estimator branch is
     active."""
     sets = _model_hashes(spark, sf_dir)
     out = {r["event_type"]: r
-           for r in kq["kmv_type_sketch"].build(spark, sf_dir).collect()}
+           for r in QUERIES["kmv_type_sketch"].build(spark, sf_dir).collect()}
     assert set(out) == set(sets)
     for t, hs in sets.items():
         r = out[t]
@@ -78,15 +73,16 @@ def test_sketch_matches_python_model(spark, sf_dir, kq):
             assert rel < 4 / KMV_K ** 0.5, (t, r["n_est"], len(hs))
 
 
-def test_union_and_jaccard_identities(spark, sf_dir, kq):
+def test_union_and_jaccard_identities(spark, sf_dir):
     """Merged-sketch union estimates match a Python replay; exact
     intersections / unions obey inclusion-exclusion; Jaccard fixed-points
     are consistent with their own numerators."""
     sets = _model_hashes(spark, sf_dir)
     uni = {tuple(sorted(r.asDict().items())) and (r["t1"], r["t2"]): r
-           for r in kq["kmv_union_report"].build(spark, sf_dir).collect()}
+           for r in QUERIES["kmv_union_report"].build(spark, sf_dir).collect()}
     jac = {(r["t1"], r["t2"]): r
-           for r in kq["kmv_jaccard_report"].build(spark, sf_dir).collect()}
+           for r in QUERIES["kmv_jaccard_report"].build(spark, sf_dir)
+           .collect()}
     types = sorted(sets)
     for i, t1 in enumerate(types):
         for t2 in types[i + 1:]:

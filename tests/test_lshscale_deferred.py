@@ -16,44 +16,39 @@ from banking_etl_pipeline_spark.catalog import table
 from banking_etl_pipeline_spark.operators.lshscale import (
     CONFIGS,
     DUP_THRESHOLD_SCALED,
-    queries as lshscale_queries,
+    QUERIES,
 )
 from banking_etl_pipeline_spark.plans import plan_of
 from tests.oracle_compare import compare, duck_connection
-
-
-@pytest.fixture(scope="module")
-def lq():
-    return lshscale_queries()
 
 
 @pytest.mark.parametrize(
     "key", ["lsh_paramscan_report", "lsh_recall_tradeoff_report",
             "dedup_embedding_cosine_scaled"]
 )
-def test_lshscale_oracle_parity(key, spark, sf_dir, lq):
-    spec = lq[key]
+def test_lshscale_oracle_parity(key, spark, sf_dir):
+    spec = QUERIES[key]
     res = compare(spec.build(spark, sf_dir), duck_connection(sf_dir),
                   spec.oracle)
     assert res["row_count_match"] and res["columns_match"] \
         and res["values_match"], f"{key}: {res['detail']}"
 
 
-def test_lshscale_plans_scale_sane(spark, sf_dir, lq):
-    for key, spec in lq.items():
+def test_lshscale_plans_scale_sane(spark, sf_dir):
+    for key, spec in QUERIES.items():
         p = plan_of(spec.build(spark, sf_dir))
         assert "CartesianProduct" not in p, f"{key}: cartesian"
         for marker in ("BatchEvalPython", "ArrowEvalPython"):
             assert marker not in p, f"{key}: python eval"
 
 
-def test_paramscan_matches_band_relation(spark, sf_dir, lq):
+def test_paramscan_matches_band_relation(spark, sf_dir):
     """Budgets re-derived from the same per-geometry band relation the
     joins would consume, plus the Σ n(n−1)/2 identity."""
     from banking_etl_pipeline_spark.operators.lshscale import _bands_for
 
     rows = {(r["n_bands"], r["band_bits"]): r
-            for r in lq["lsh_paramscan_report"].build(spark, sf_dir)
+            for r in QUERIES["lsh_paramscan_report"].build(spark, sf_dir)
             .collect()}
     assert set(rows) == set(CONFIGS)
     for (nb, bb) in CONFIGS:
@@ -68,15 +63,15 @@ def test_paramscan_matches_band_relation(spark, sf_dir, lq):
             n * (n - 1) // 2 for n in sizes.values())
 
 
-def test_tradeoff_monotone_in_band_bits(spark, sf_dir, lq):
+def test_tradeoff_monotone_in_band_bits(spark, sf_dir):
     """The study's claim in data: finer banding must strictly shrink the
     candidate budget and cannot raise recall; caught ≤ truth; recall
     per-mille consistent with its own numerator."""
     scan = {(r["n_bands"], r["band_bits"]): r
-            for r in lq["lsh_paramscan_report"].build(spark, sf_dir)
+            for r in QUERIES["lsh_paramscan_report"].build(spark, sf_dir)
             .collect()}
     rec = {(r["n_bands"], r["band_bits"]): r
-           for r in lq["lsh_recall_tradeoff_report"].build(spark, sf_dir)
+           for r in QUERIES["lsh_recall_tradeoff_report"].build(spark, sf_dir)
            .collect()}
     assert set(rec) == set(CONFIGS)
     ordered = sorted(CONFIGS, key=lambda c: c[1])
@@ -92,15 +87,15 @@ def test_tradeoff_monotone_in_band_bits(spark, sf_dir, lq):
             r["n_caught"] * 1000 // max(r["n_true_pairs"], 1)
 
 
-def test_scaled_dedup_empty_on_clean_corpus(spark, sf_dir, lq):
+def test_scaled_dedup_empty_on_clean_corpus(spark, sf_dir):
     """The clean testdata corpus has no 0.9-cosine pairs — the scaled
     detector's correct output is empty (true negative, not a no-op: the
     banded join still ran)."""
-    assert lq["dedup_embedding_cosine_scaled"].build(spark, sf_dir) \
+    assert QUERIES["dedup_embedding_cosine_scaled"].build(spark, sf_dir) \
         .count() == 0
 
 
-def test_scaled_dedup_finds_planted_duplicates(spark, sf_dir, tmp_path, lq):
+def test_scaled_dedup_finds_planted_duplicates(spark, sf_dir, tmp_path):
     """Plant near-identical copies (first component +0.001, new ids) and
     require the scaled detector to recover ≥90% of the planted pairs with
     every reported pair genuinely above the bar — the duplicated-corpus
@@ -121,7 +116,7 @@ def test_scaled_dedup_finds_planted_duplicates(spark, sf_dir, tmp_path, lq):
     planted_dir = os.path.join(str(tmp_path), "planted")
     e.unionByName(copies).coalesce(1).write.parquet(
         os.path.join(planted_dir, "embeddings.parquet"))
-    found = lq["dedup_embedding_cosine_scaled"].build(
+    found = QUERIES["dedup_embedding_cosine_scaled"].build(
         spark, planted_dir).collect()
     planted = {(r["vec_id"], r["vec_id"] + 1_000_000)
                for r in e.select("vec_id").collect()}

@@ -18,33 +18,28 @@ from banking_etl_pipeline_spark.operators.planner import (
     MAX_PARTITION_BYTES,
     N_BUCKETS,
     PROJECTION,
+    QUERIES,
     SALT_SEED,
     SHUFFLE_PARTITIONS,
-    queries as planner_queries,
 )
 from banking_etl_pipeline_spark.plans import plan_of
 from tests.oracle_compare import compare, duck_connection
-
-
-@pytest.fixture(scope="module")
-def pq():
-    return planner_queries()
 
 
 @pytest.mark.parametrize(
     "key", ["shuffle_partition_plan", "broadcast_plan", "salting_plan",
             "partition_skew_report", "lsh_candidate_report"]
 )
-def test_planner_oracle_parity(key, spark, sf_dir, pq):
-    spec = pq[key]
+def test_planner_oracle_parity(key, spark, sf_dir):
+    spec = QUERIES[key]
     res = compare(spec.build(spark, sf_dir), duck_connection(sf_dir),
                   spec.oracle)
     assert res["row_count_match"] and res["columns_match"] \
         and res["values_match"], f"{key}: {res['detail']}"
 
 
-def test_planner_plans_scale_sane(spark, sf_dir, pq):
-    for key, spec in pq.items():
+def test_planner_plans_scale_sane(spark, sf_dir):
+    for key, spec in QUERIES.items():
         p = plan_of(spec.build(spark, sf_dir))
         assert "CartesianProduct" not in p, f"{key}: cartesian"
         for marker in ("BatchEvalPython", "ArrowEvalPython"):
@@ -66,11 +61,11 @@ def _model_est_bytes(spark, sf_dir, name):
     return n, n * fixed + var
 
 
-def test_partition_plan_matches_python_model(spark, sf_dir, pq):
+def test_partition_plan_matches_python_model(spark, sf_dir):
     """est_bytes re-derived row-by-row in Python for every table, plus the
     ceil-division and clamping identities for both horizons."""
     out = {r["table_name"]: r
-           for r in pq["shuffle_partition_plan"].build(spark, sf_dir)
+           for r in QUERIES["shuffle_partition_plan"].build(spark, sf_dir)
            .collect()}
     assert set(out) == set(_WIDTHS)
     for name in _WIDTHS:
@@ -85,10 +80,10 @@ def test_partition_plan_matches_python_model(spark, sf_dir, pq):
         assert r["partitions_1000x"] >= r["partitions_now"]
 
 
-def test_broadcast_plan_consistent(spark, sf_dir, pq):
+def test_broadcast_plan_consistent(spark, sf_dir):
     """Classification follows the threshold exactly, and a side too big to
     broadcast today can never become broadcastable at 1000x."""
-    rows = pq["broadcast_plan"].build(spark, sf_dir).collect()
+    rows = QUERIES["broadcast_plan"].build(spark, sf_dir).collect()
     assert {r["table_name"] for r in rows} == set(_WIDTHS)
     for r in rows:
         want_now = ("broadcast" if r["est_bytes"] <= BROADCAST_THRESHOLD
@@ -106,13 +101,13 @@ def test_broadcast_plan_consistent(spark, sf_dir, pq):
         assert by_name[dim]["strategy_now"] == "broadcast"
 
 
-def test_salting_plan_matches_python_model(spark, sf_dir, pq):
+def test_salting_plan_matches_python_model(spark, sf_dir):
     counts: dict = {}
     for r in table(spark, sf_dir, "events").select("user_id").collect():
         counts[r["user_id"]] = counts.get(r["user_id"], 0) + 1
     total = sum(counts.values())
     want = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
-    got = pq["salting_plan"].build(spark, sf_dir).collect()
+    got = QUERIES["salting_plan"].build(spark, sf_dir).collect()
     assert [(r["user_id"], r["cnt"]) for r in got] == want
     for r in got:
         assert r["share_permille"] == r["cnt"] * 1000 // max(total, 1)
@@ -121,13 +116,13 @@ def test_salting_plan_matches_python_model(spark, sf_dir, pq):
         assert r["salt_factor"] >= 1
 
 
-def test_skew_report_matches_python_model(spark, sf_dir, pq):
+def test_skew_report_matches_python_model(spark, sf_dir):
     buckets: dict = {}
     for r in table(spark, sf_dir, "events").select("user_id").collect():
         h = hashlib.md5(f"{SALT_SEED}:{r['user_id']}".encode()).hexdigest()
         b = int(h[:15], 16) % N_BUCKETS
         buckets[b] = buckets.get(b, 0) + 1
-    [row] = pq["partition_skew_report"].build(spark, sf_dir).collect()
+    [row] = QUERIES["partition_skew_report"].build(spark, sf_dir).collect()
     assert row["n_buckets"] == len(buckets)
     assert row["total_rows"] == sum(buckets.values())
     assert row["max_bucket_rows"] == max(buckets.values())
@@ -140,7 +135,7 @@ def test_skew_report_matches_python_model(spark, sf_dir, pq):
     assert row["skew_permille"] >= 999
 
 
-def test_lsh_candidate_report_matches_bands(spark, sf_dir, pq):
+def test_lsh_candidate_report_matches_bands(spark, sf_dir):
     """candidate_pairs re-derived from the actual cached band relation the
     dedup/ANN joins consume — the report must price exactly the join that
     would run — plus the Σ n(n−1)/2 identity per band."""
@@ -153,7 +148,7 @@ def test_lsh_candidate_report_matches_bands(spark, sf_dir, pq):
     for r in lsh_bands_cached(spark, sf_dir).collect():
         sizes.setdefault(r["band"], {}).setdefault(r["sig"], 0)
         sizes[r["band"]][r["sig"]] += 1
-    rows = pq["lsh_candidate_report"].build(spark, sf_dir).collect()
+    rows = QUERIES["lsh_candidate_report"].build(spark, sf_dir).collect()
     assert len(rows) == N_BANDS == len(sizes)
     for r in rows:
         b = sizes[r["band"]]

@@ -11,16 +11,11 @@ import pytest
 from banking_etl_pipeline_spark.operators.preference import (
     GAP6_T,
     PREF_K,
+    QUERIES,
     TOKEN_BUDGET,
-    queries as pref_queries,
 )
 from banking_etl_pipeline_spark.plans import plan_of
 from tests.oracle_compare import compare, duck_connection
-
-
-@pytest.fixture(scope="module")
-def pref():
-    return pref_queries()
 
 
 @pytest.mark.parametrize(
@@ -28,16 +23,16 @@ def pref():
     ["preference_pairs", "preference_gap_report", "preference_split",
      "preference_budget_cap"],
 )
-def test_preference_oracle_parity(key, spark, sf_dir, pref):
-    spec = pref[key]
+def test_preference_oracle_parity(key, spark, sf_dir):
+    spec = QUERIES[key]
     res = compare(spec.build(spark, sf_dir), duck_connection(sf_dir),
                   spec.oracle)
     assert res["row_count_match"] and res["columns_match"] \
         and res["values_match"], f"{key}: {res['detail']}"
 
 
-def test_preference_plans_scale_sane(spark, sf_dir, pref):
-    for key, spec in pref.items():
+def test_preference_plans_scale_sane(spark, sf_dir):
+    for key, spec in QUERIES.items():
         p = plan_of(spec.build(spark, sf_dir))
         assert "CartesianProduct" not in p, f"{key}: cartesian"
         assert "BroadcastNestedLoopJoin" not in p, f"{key}: NLJ"
@@ -45,8 +40,8 @@ def test_preference_plans_scale_sane(spark, sf_dir, pref):
             assert marker not in p, f"{key}: python eval"
 
 
-def test_pairs_semantics(spark, sf_dir, pref):
-    rows = pref["preference_pairs"].build(spark, sf_dir).collect()
+def test_pairs_semantics(spark, sf_dir):
+    rows = QUERIES["preference_pairs"].build(spark, sf_dir).collect()
     assert rows
     per_group: dict[str, int] = {}
     for r in rows:
@@ -62,8 +57,8 @@ def test_pairs_semantics(spark, sf_dir, pref):
         assert not (ch & rj), f"{src}: doc on both sides"
 
 
-def test_split_is_group_atomic(spark, sf_dir, pref):
-    rows = pref["preference_split"].build(spark, sf_dir).collect()
+def test_split_is_group_atomic(spark, sf_dir):
+    rows = QUERIES["preference_split"].build(spark, sf_dir).collect()
     assert rows
     sides: dict[str, set] = {}
     for r in rows:
@@ -72,8 +67,8 @@ def test_split_is_group_atomic(spark, sf_dir, pref):
     assert {r["split"] for r in rows} == {"train", "val"}
 
 
-def test_budget_cap_respected(spark, sf_dir, pref):
-    rows = pref["preference_budget_cap"].build(spark, sf_dir).collect()
+def test_budget_cap_respected(spark, sf_dir):
+    rows = QUERIES["preference_budget_cap"].build(spark, sf_dir).collect()
     assert rows
     per_group: dict[str, int] = {}
     for r in rows:
@@ -83,40 +78,40 @@ def test_budget_cap_respected(spark, sf_dir, pref):
     for src, tot in per_group.items():
         assert tot <= TOKEN_BUDGET, f"{src}: budget exceeded"
     # the cap must actually bind somewhere (fewer rows than raw pairs)
-    n_pairs = pref["preference_pairs"].build(spark, sf_dir).count()
+    n_pairs = QUERIES["preference_pairs"].build(spark, sf_dir).count()
     assert len(rows) < n_pairs
 
 
-def test_gap_report_bounds(spark, sf_dir, pref):
-    for r in pref["preference_gap_report"].build(spark, sf_dir).collect():
+def test_gap_report_bounds(spark, sf_dir):
+    for r in QUERIES["preference_gap_report"].build(spark, sf_dir).collect():
         assert 1 <= r["n_pairs"] <= PREF_K
         assert GAP6_T <= r["min_gap6"] <= r["mean_gap6"] <= r["max_gap6"]
 
 
-def test_preference_empty_universe(spark, sf_dir, pref):
+def test_preference_empty_universe(spark, sf_dir):
     from tests.conftest import build_empty_universe
 
     empty = build_empty_universe(spark, sf_dir)
-    for key, spec in pref.items():
+    for key, spec in QUERIES.items():
         df = spec.build(spark, empty)
         assert len(df.schema) > 0, key
         assert df.count() >= 0, key
 
 
-def test_preference_hot_key(spark, sf_dir, pref):
+def test_preference_hot_key(spark, sf_dir):
     from tests.conftest import build_skewed_universe
 
     skew = build_skewed_universe(spark, sf_dir)
-    for key, spec in pref.items():
+    for key, spec in QUERIES.items():
         assert spec.build(spark, skew).count() >= 0, key
 
 
-def test_preference_repeat_deterministic(spark, sf_dir, pref):
+def test_preference_repeat_deterministic(spark, sf_dir):
     from collections import Counter
 
     from tests.oracle_compare import _norm
 
-    for key, spec in pref.items():
+    for key, spec in QUERIES.items():
         sets = []
         for _ in range(2):
             rows = spec.build(spark, sf_dir).collect()

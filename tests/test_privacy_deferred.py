@@ -11,15 +11,10 @@ import pytest
 from banking_etl_pipeline_spark.operators.privacy import (
     DP_EPSILON,
     K_RELEASE,
-    queries as privacy_queries,
+    QUERIES,
 )
 from banking_etl_pipeline_spark.plans import plan_of
 from tests.oracle_compare import compare, duck_connection
-
-
-@pytest.fixture(scope="module")
-def priv():
-    return privacy_queries()
 
 
 @pytest.mark.parametrize(
@@ -27,24 +22,24 @@ def priv():
     ["dp_count_release", "l_diversity_audit", "generalization_ladder",
      "pii_redact_digest"],
 )
-def test_privacy_oracle_parity(key, spark, sf_dir, priv):
-    spec = priv[key]
+def test_privacy_oracle_parity(key, spark, sf_dir):
+    spec = QUERIES[key]
     res = compare(spec.build(spark, sf_dir), duck_connection(sf_dir),
                   spec.oracle)
     assert res["row_count_match"] and res["columns_match"] \
         and res["values_match"], f"{key}: {res['detail']}"
 
 
-def test_privacy_plans_scale_sane(spark, sf_dir, priv):
-    for key, spec in priv.items():
+def test_privacy_plans_scale_sane(spark, sf_dir):
+    for key, spec in QUERIES.items():
         p = plan_of(spec.build(spark, sf_dir))
         assert "CartesianProduct" not in p, f"{key}: cartesian"
         for marker in ("BatchEvalPython", "ArrowEvalPython"):
             assert marker not in p, f"{key}: python eval"
 
 
-def test_dp_noise_is_laplace_shaped(spark, sf_dir, priv):
-    rows = priv["dp_count_release"].build(spark, sf_dir).collect()
+def test_dp_noise_is_laplace_shaped(spark, sf_dir):
+    rows = QUERIES["dp_count_release"].build(spark, sf_dir).collect()
     assert rows
     for r in rows:
         # released = exact + noise (6-dp truncation applied to both)
@@ -57,15 +52,15 @@ def test_dp_noise_is_laplace_shaped(spark, sf_dir, priv):
         assert any(n < 0 for n in noises) and any(n > 0 for n in noises)
 
 
-def test_dp_release_deterministic_replay(spark, sf_dir, priv):
-    a = priv["dp_count_release"].build(spark, sf_dir).collect()
-    b = priv["dp_count_release"].build(spark, sf_dir).collect()
+def test_dp_release_deterministic_replay(spark, sf_dir):
+    a = QUERIES["dp_count_release"].build(spark, sf_dir).collect()
+    b = QUERIES["dp_count_release"].build(spark, sf_dir).collect()
     assert a == b
     assert DP_EPSILON == 1.0
 
 
-def test_generalization_ladder_decision(spark, sf_dir, priv):
-    rows = priv["generalization_ladder"].build(spark, sf_dir).collect()
+def test_generalization_ladder_decision(spark, sf_dir):
+    rows = QUERIES["generalization_ladder"].build(spark, sf_dir).collect()
     assert [r["rank"] for r in rows] == [1, 2, 3]
     chosen = [r for r in rows if r["chosen"]]
     passing = [r for r in rows if r["min_group_size"] >= K_RELEASE]
@@ -79,36 +74,36 @@ def test_generalization_ladder_decision(spark, sf_dir, priv):
     assert rows[0]["n_groups"] >= rows[1]["n_groups"] >= rows[2]["n_groups"]
 
 
-def test_l_diversity_bounds(spark, sf_dir, priv):
-    r = priv["l_diversity_audit"].build(spark, sf_dir).collect()[0]
+def test_l_diversity_bounds(spark, sf_dir):
+    r = QUERIES["l_diversity_audit"].build(spark, sf_dir).collect()[0]
     assert 1 <= r["min_l"] <= r["max_l"]
     assert 0 <= r["n_under_diverse"] <= r["n_groups"]
 
 
-def test_privacy_empty_universe(spark, sf_dir, priv):
+def test_privacy_empty_universe(spark, sf_dir):
     from tests.conftest import build_empty_universe
 
     empty = build_empty_universe(spark, sf_dir)
-    for key, spec in priv.items():
+    for key, spec in QUERIES.items():
         df = spec.build(spark, empty)
         assert len(df.schema) > 0, key
         assert df.count() >= 0, key
 
 
-def test_privacy_hot_key(spark, sf_dir, priv):
+def test_privacy_hot_key(spark, sf_dir):
     from tests.conftest import build_skewed_universe
 
     skew = build_skewed_universe(spark, sf_dir)
-    for key, spec in priv.items():
+    for key, spec in QUERIES.items():
         assert spec.build(spark, skew).count() >= 0, key
 
 
-def test_privacy_repeat_deterministic(spark, sf_dir, priv):
+def test_privacy_repeat_deterministic(spark, sf_dir):
     from collections import Counter
 
     from tests.oracle_compare import _norm
 
-    for key, spec in priv.items():
+    for key, spec in QUERIES.items():
         sets = []
         for _ in range(2):
             rows = spec.build(spark, sf_dir).collect()

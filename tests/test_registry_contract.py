@@ -1,6 +1,7 @@
-"""Registry contract: `registry.MODULES` lists every operator module that
-defines queries exactly once, the keys are unique, and every key carries a
-well-typed DuckDB oracle. Pure-Python apart from the oracle DESCRIBE pass.
+"""Registry contract: `registry.MODULES` lists every query module exactly
+once, each binds a `QUERIES` dict of `QuerySpec`s (the one registry form),
+the keys are unique, and every key carries a well-typed DuckDB oracle.
+Pure-Python apart from the oracle DESCRIBE pass.
 """
 
 from __future__ import annotations
@@ -10,15 +11,22 @@ import pathlib
 
 from banking_etl_pipeline_spark import registry
 from banking_etl_pipeline_spark.registry import all_queries
+from banking_etl_pipeline_spark.spec import QuerySpec
 
 PACKAGE = pathlib.Path(registry.__file__).parent
+QUERY_MODULE_FILES = sorted(
+    path for sub in ("operators", "streaming", "sources")
+    for path in (PACKAGE / sub).glob("*.py")
+)
 
 
-def _defines_queries(path: pathlib.Path) -> bool:
-    """True if the module binds `QUERIES` or defines `queries()` at top level."""
+def _module_name(path: pathlib.Path) -> str:
+    return f"banking_etl_pipeline_spark.{path.parent.name}.{path.stem}"
+
+
+def _binds_queries(path: pathlib.Path) -> bool:
+    """True if the module binds `QUERIES` at top level."""
     for node in ast.parse(path.read_text()).body:
-        if isinstance(node, ast.FunctionDef) and node.name == "queries":
-            return True
         targets = (
             node.targets if isinstance(node, ast.Assign)
             else [node.target] if isinstance(node, ast.AnnAssign) else []
@@ -29,22 +37,36 @@ def _defines_queries(path: pathlib.Path) -> bool:
 
 
 def test_every_query_module_registered_once():
-    """Every module under operators/, streaming/ and sources/ that defines
-    queries appears exactly once in the static module list, and nothing
+    """Every module under operators/, streaming/ and sources/ that binds
+    `QUERIES` appears exactly once in the static module list, and nothing
     else does; the 276 keys are unique."""
     expected = sorted(
-        f"banking_etl_pipeline_spark.{sub}.{path.stem}"
-        for sub in ("operators", "streaming", "sources")
-        for path in (PACKAGE / sub).glob("*.py")
-        if _defines_queries(path)
+        _module_name(path) for path in QUERY_MODULE_FILES
+        if _binds_queries(path)
     )
     listed = [mod.__name__ for mod in registry.MODULES]
     assert len(listed) == len(set(listed)), "a module is listed twice"
     assert sorted(listed) == expected
     # all_queries() is the modules' keys in list order, each key once
-    keys = [k for mod in registry.MODULES for k in registry.module_queries(mod)]
+    keys = [k for mod in registry.MODULES for k in mod.QUERIES]
     assert len(keys) == len(set(keys)) == 276
     assert list(all_queries()) == keys
+
+
+def test_one_registry_form():
+    """Every registered module exports its queries one way: a module-level
+    `QUERIES` dict of `QuerySpec`s. No query module defines a `queries()`
+    function beside or instead of it."""
+    for mod in registry.MODULES:
+        assert isinstance(mod.QUERIES, dict), mod.__name__
+        assert all(isinstance(spec, QuerySpec)
+                   for spec in mod.QUERIES.values()), mod.__name__
+    with_function = [
+        _module_name(path) for path in QUERY_MODULE_FILES
+        if any(isinstance(node, ast.FunctionDef) and node.name == "queries"
+               for node in ast.parse(path.read_text()).body)
+    ]
+    assert with_function == []
 
 
 def test_every_query_has_an_oracle():
@@ -80,8 +102,6 @@ def test_r6_registration_landed():
     """The round-6 registrations: the eleven r4/r5 tiers plus the two tiers
     built that round (planner, lshscale) are all in the registry (276
     keys), each spec complete."""
-    from banking_etl_pipeline_spark.spec import QuerySpec
-
     merged = all_queries()
     assert len(merged) == 276
     for key in ("substring_dup_coverage", "pq_encode", "shard_assignment",

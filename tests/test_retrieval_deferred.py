@@ -9,20 +9,15 @@ from __future__ import annotations
 import pytest
 
 from banking_etl_pipeline_spark.operators.retrieval import (
+    QUERIES,
     RET_K,
     RET_KS,
     RET_Q_MOD,
     _qset,
     _ranked,
-    queries as ret_queries,
 )
 from banking_etl_pipeline_spark.plans import plan_of
 from tests.oracle_compare import compare, duck_connection
-
-
-@pytest.fixture(scope="module")
-def rq():
-    return ret_queries()
 
 
 @pytest.mark.parametrize(
@@ -30,16 +25,16 @@ def rq():
     ["retrieval_mrr", "retrieval_precision_recall", "retrieval_ndcg",
      "retrieval_knn_accuracy"],
 )
-def test_retrieval_oracle_parity(key, spark, sf_dir, rq):
-    spec = rq[key]
+def test_retrieval_oracle_parity(key, spark, sf_dir):
+    spec = QUERIES[key]
     res = compare(spec.build(spark, sf_dir), duck_connection(sf_dir),
                   spec.oracle)
     assert res["row_count_match"] and res["columns_match"] \
         and res["values_match"], f"{key}: {res['detail']}"
 
 
-def test_retrieval_plans_scale_sane(spark, sf_dir, rq):
-    for key, spec in rq.items():
+def test_retrieval_plans_scale_sane(spark, sf_dir):
+    for key, spec in QUERIES.items():
         p = plan_of(spec.build(spark, sf_dir))
         assert "CartesianProduct" not in p, f"{key}: cartesian"
         for marker in ("BatchEvalPython", "ArrowEvalPython"):
@@ -61,16 +56,16 @@ def test_ranked_is_a_valid_topk(spark, sf_dir):
         assert q % RET_Q_MOD == 0
 
 
-def test_metric_bounds(spark, sf_dir, rq):
+def test_metric_bounds(spark, sf_dir):
     """Every fixed-point metric sits in [0, 1e6]; hit counts respect the
     counting identities."""
-    mrr = rq["retrieval_mrr"].build(spark, sf_dir).collect()[0]
+    mrr = QUERIES["retrieval_mrr"].build(spark, sf_dir).collect()[0]
     assert 0 <= mrr["mrr_x1e6"] <= 1_000_000
     assert mrr["n_hit"] <= mrr["n_queries"]
     assert mrr["sum_recip_x1e6"] <= mrr["n_hit"] * 1_000_000
 
     pr = {r["k"]: r for r in
-          rq["retrieval_precision_recall"].build(spark, sf_dir).collect()}
+          QUERIES["retrieval_precision_recall"].build(spark, sf_dir).collect()}
     assert set(pr) == set(RET_KS)
     for k, r in pr.items():
         assert 0 <= r["precision_x1e6"] <= 1_000_000
@@ -82,11 +77,11 @@ def test_metric_bounds(spark, sf_dir, rq):
     for a, b in zip(ks, ks[1:]):
         assert pr[a]["hits"] <= pr[b]["hits"]
 
-    nd = rq["retrieval_ndcg"].build(spark, sf_dir).collect()[0]
+    nd = QUERIES["retrieval_ndcg"].build(spark, sf_dir).collect()[0]
     assert 0 <= nd["micro_ndcg_x1e6"] <= 1_000_000
     assert nd["sum_dcg_fp"] <= nd["sum_idcg_fp"]
 
-    acc = rq["retrieval_knn_accuracy"].build(spark, sf_dir).collect()[0]
+    acc = QUERIES["retrieval_knn_accuracy"].build(spark, sf_dir).collect()[0]
     assert 0 <= acc["accuracy_x1e6"] <= 1_000_000
     assert acc["n_correct"] <= acc["n_predicted"] <= acc["n_queries"]
 

@@ -64,7 +64,11 @@ def test_session_persist_materializes_once(spark):
     repeated (session, tag) — the leak guard for builders whose expensive
     intermediate is re-invoked by bench/driver loops — and distinct
     frames for distinct tags."""
-    from banking_etl_pipeline_spark.session import _DF_CACHE, session_persist
+    from banking_etl_pipeline_spark.session import (
+        _SESSION_CACHE,
+        session_persist,
+        session_scalar,
+    )
 
     calls = {"n": 0}
 
@@ -79,8 +83,13 @@ def test_session_persist_materializes_once(spark):
     assert calls["n"] == 2  # one build per tag, not per call
     assert a.storageLevel.useMemory  # actually persisted
     # dead-session entries evict on sight
-    _DF_CACHE[("dead-app", "zombie")] = a
+    _SESSION_CACHE[("dead-app", "df", "zombie")] = a
     session_persist(spark, "t3-test", build)
-    assert ("dead-app", "zombie") not in _DF_CACHE
+    assert ("dead-app", "df", "zombie") not in _SESSION_CACHE
+    # a scalar with a DataFrame's tag is a separate entry
+    assert session_scalar(spark, "t1-test", lambda: 7) == 7
+    assert session_persist(spark, "t1-test", build) is a
+    app = spark.sparkContext.applicationId
     for tag in ("t1-test", "t2-test", "t3-test"):
-        _DF_CACHE.pop((spark.sparkContext.applicationId, tag), None)
+        _SESSION_CACHE.pop((app, "df", tag), None)
+    _SESSION_CACHE.pop((app, "scalar", "t1-test"), None)

@@ -10,31 +10,26 @@ import pytest
 
 from banking_etl_pipeline_spark.catalog import table
 from banking_etl_pipeline_spark.operators.shards import (
+    QUERIES,
     SHARD_TOKENS,
-    queries as shard_queries,
 )
 from banking_etl_pipeline_spark.plans import plan_of
 from tests.oracle_compare import compare, duck_connection
 
 
-@pytest.fixture(scope="module")
-def sh():
-    return shard_queries()
-
-
 @pytest.mark.parametrize(
     "key", ["shard_assignment", "shard_manifest", "shard_balance_report"]
 )
-def test_shards_oracle_parity(key, spark, sf_dir, sh):
-    spec = sh[key]
+def test_shards_oracle_parity(key, spark, sf_dir):
+    spec = QUERIES[key]
     res = compare(spec.build(spark, sf_dir), duck_connection(sf_dir),
                   spec.oracle)
     assert res["row_count_match"] and res["columns_match"] \
         and res["values_match"], f"{key}: {res['detail']}"
 
 
-def test_shards_plans_scale_sane(spark, sf_dir, sh):
-    for key, spec in sh.items():
+def test_shards_plans_scale_sane(spark, sf_dir):
+    for key, spec in QUERIES.items():
         p = plan_of(spec.build(spark, sf_dir))
         assert "CartesianProduct" not in p, f"{key}: cartesian"
         assert "BroadcastNestedLoopJoin" not in p, f"{key}: NLJ"
@@ -42,12 +37,12 @@ def test_shards_plans_scale_sane(spark, sf_dir, sh):
             assert marker not in p, f"{key}: python eval"
 
 
-def test_assignment_is_a_packing(spark, sf_dir, sh):
+def test_assignment_is_a_packing(spark, sf_dir):
     """Every document lands in exactly one shard; prefixes telescope (the
     last prefix equals the corpus token total); shard ids are the
     contiguous range implied by that total; every shard holds > 0 and,
     before the final shard, close to the budget."""
-    rows = sh["shard_assignment"].build(spark, sf_dir).collect()
+    rows = QUERIES["shard_assignment"].build(spark, sf_dir).collect()
     n_docs = table(spark, sf_dir, "documents").count()
     assert len(rows) == n_docs
     total = sum(r["n_tokens"] for r in rows)
@@ -58,10 +53,10 @@ def test_assignment_is_a_packing(spark, sf_dir, sh):
         assert r["shard_id"] == (r["prefix"] - 1) // SHARD_TOKENS
 
 
-def test_manifest_consistent_with_assignment(spark, sf_dir, sh):
-    a = sh["shard_assignment"].build(spark, sf_dir).collect()
+def test_manifest_consistent_with_assignment(spark, sf_dir):
+    a = QUERIES["shard_assignment"].build(spark, sf_dir).collect()
     m = {r["shard_id"]: r for r in
-         sh["shard_manifest"].build(spark, sf_dir).collect()}
+         QUERIES["shard_manifest"].build(spark, sf_dir).collect()}
     per_shard: dict[int, list] = {}
     for r in a:
         per_shard.setdefault(r["shard_id"], []).append(r)
@@ -73,14 +68,14 @@ def test_manifest_consistent_with_assignment(spark, sf_dir, sh):
         assert m[sid]["last_prefix"] == max(r["prefix"] for r in rs)
 
 
-def test_balance_gate_bounds(spark, sf_dir, sh):
+def test_balance_gate_bounds(spark, sf_dir):
     """Cumulative-end packing can overshoot the budget by at most one
     document minus one token, and only the LAST shard can be underfull."""
-    bal = sh["shard_balance_report"].build(spark, sf_dir).collect()[0]
-    m = sh["shard_manifest"].build(spark, sf_dir).collect()
+    bal = QUERIES["shard_balance_report"].build(spark, sf_dir).collect()[0]
+    m = QUERIES["shard_manifest"].build(spark, sf_dir).collect()
     max_doc = max(
         r["n_tokens"] for r in
-        sh["shard_assignment"].build(spark, sf_dir).collect()
+        QUERIES["shard_assignment"].build(spark, sf_dir).collect()
     )
     assert bal["n_shards"] == len(m)
     assert bal["worst_overrun"] < max_doc
@@ -88,30 +83,30 @@ def test_balance_gate_bounds(spark, sf_dir, sh):
     assert len(underfull) <= 1  # only the tail shard may run light
 
 
-def test_shards_empty_universe(spark, sf_dir, sh):
+def test_shards_empty_universe(spark, sf_dir):
     from tests.conftest import build_empty_universe
 
     empty = build_empty_universe(spark, sf_dir)
-    for key, spec in sh.items():
+    for key, spec in QUERIES.items():
         df = spec.build(spark, empty)
         assert len(df.schema) > 0, key
         assert df.count() >= 0, key
 
 
-def test_shards_hot_key(spark, sf_dir, sh):
+def test_shards_hot_key(spark, sf_dir):
     from tests.conftest import build_skewed_universe
 
     skew = build_skewed_universe(spark, sf_dir)
-    for key, spec in sh.items():
+    for key, spec in QUERIES.items():
         assert spec.build(spark, skew).count() >= 0, key
 
 
-def test_shards_repeat_deterministic(spark, sf_dir, sh):
+def test_shards_repeat_deterministic(spark, sf_dir):
     from collections import Counter
 
     from tests.oracle_compare import _norm
 
-    for key, spec in sh.items():
+    for key, spec in QUERIES.items():
         sets = []
         for _ in range(2):
             rows = spec.build(spark, sf_dir).collect()
