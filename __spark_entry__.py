@@ -30,8 +30,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        name: spec.oracle
-        for name, spec in all_queries().items()
-        if spec.oracle is not None
-    }
+    return {name: spec.oracle for name, spec in all_queries().items()}

@@ -89,8 +89,7 @@ def main(argv: list[str] | None = None) -> int:
         from .registry import all_queries
 
         for key, spec in sorted(all_queries().items()):
-            print(json.dumps({"key": key, "doc": spec.doc,
-                              "oracle": spec.oracle is not None}))
+            print(json.dumps({"key": key, "doc": spec.doc}))
         return 0
 
     if args.query:

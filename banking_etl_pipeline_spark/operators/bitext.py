@@ -77,10 +77,10 @@ def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     output."""
     from .dedup import pair_cos_cached
 
-    # r10 (r9 VERDICT item 2): the candidate+verify stage is the SHARED
-    # `pair_cos_cached` materialization (all base-geometry band-collision
-    # pairs vec_a < vec_b with exact cosine) — one verify join per session
-    # for this family AND the dedup detector, instead of two. A collision
+    # The candidate+verify stage is the SHARED `pair_cos_cached`
+    # materialization (all base-geometry band-collision pairs vec_a < vec_b
+    # with exact cosine) — one verify join per session for this family AND
+    # the dedup detector, instead of two. A collision
     # pair {x, y} is a bitext candidate iff its langs are mixed en/non-en;
     # the en side becomes src regardless of id order. The cosine double is
     # orientation-independent (per-element products commute, the fold order

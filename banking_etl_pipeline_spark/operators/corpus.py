@@ -1,5 +1,5 @@
 """Corpus-analytics operators over `documents` — the statistics layer of a
-training-data pipeline (BASELINE.json north star, beyond reference parity):
+training-data pipeline (engine extension beyond reference parity):
 TF-IDF distinguishing terms, Gopher-style repetition quality rules,
 language-stratified sampling, and duplicate-cluster assignment (connected
 components over the MinHash-LSH near-dup graph).
@@ -331,8 +331,8 @@ def propagate_min_labels(
 def propagate_to_fixpoint(
     pairs: DataFrame, max_iterations: int = CC_MAX_ITERATIONS
 ) -> DataFrame:
-    """Hash-min label propagation iterated to CONVERGENCE (VERDICT r1
-    item 3: a fixed 3-round pass only labels components of diameter ≤ 3).
+    """Hash-min label propagation iterated to CONVERGENCE (a fixed
+    3-round pass only labels components of diameter ≤ 3).
 
     Labels are monotone non-increasing (each round takes a min that
     includes the vertex's own prior label via the self-loop), so
@@ -532,7 +532,7 @@ def lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exploded corpus (∝ total tokens). Left unhinted, Catalyst's
     # post-explode size estimate of `big` can sit under the broadcast
     # threshold and it builds-left — broadcasting the FACT side, which
-    # inverts scaling locally (r9 SCALE.md: lm_score 8.0 s at sf3 vs
+    # inverts scaling locally (measured: lm_score 8.0 s at sf3 vs
     # 4.5 s at sf10) and would OOM a real cluster at 100 TB.
     scored = (
         big.join(F.broadcast(stats.select("bg", "c2", "c1")), "bg")

@@ -1,5 +1,5 @@
-"""Advanced corpus-curation operators over `documents` (engine extension,
-BASELINE.json north star): the second tier of a training-data pipeline —
+"""Advanced corpus-curation operators over `documents` (engine extension
+beyond reference parity): the second tier of a training-data pipeline —
 importance resampling, incremental (new-batch-vs-index) dedup, containment
 detection, and boilerplate stripping.
 

@@ -1,5 +1,5 @@
-"""Deduplication operators over `documents`/`embeddings` (engine extension,
-BASELINE.json north star: exact, MinHash+LSH, SimHash, n-gram Jaccard,
+"""Deduplication operators over `documents`/`embeddings` (engine extension
+beyond reference parity: exact, MinHash+LSH, SimHash, n-gram Jaccard,
 embedding-cosine near-dup).
 
 Scale design:
@@ -152,9 +152,10 @@ def shingle_pair_commons(spark: SparkSession, sf_dir: str,
     `max_doc_freq` caps a shingle's posting list: the equi-join is quadratic
     per shingle (df² candidate pairs), so hot boilerplate shingles must be
     dropped before the join or one viral shingle melts the stage at corpus
-    scale (SCALE.md). The cap is ON by default (VERDICT r1 item 4) and the
-    DuckDB oracles apply the identical df filter, so parity holds at every
-    cap value; `None` restores the uncapped exact-verification tier. Sizes
+    scale. The cap is ON by default, so a viral shingle costs at most
+    JACCARD_MAX_DF² = 16 k pairs instead of df² over the corpus. The DuckDB
+    oracles apply the identical df filter, so parity holds at every cap
+    value; `None` restores the uncapped exact-verification tier. Sizes
     are computed BEFORE the cap so the ratio denominators stay exact — a
     capped run can only under-report `common` for docs sharing ultra-hot
     shingles, never inflate it.
@@ -402,10 +403,10 @@ WHERE CAST(list_sum(list_transform(range(1, {N_HASHES + 1}),
 # Session-scoped cache of the LSH pair output: dedup_minhash_lsh,
 # dup_clusters, and dedup_survivors all consume the same signature→band→join
 # pipeline; when one driver session runs them back-to-back (the bench, the
-# correctness harness) the expensive stage should materialize ONCE (VERDICT
-# r1 item 7). Keyed on (applicationId, sf_dir); entries from dead sessions
-# are evicted on sight. At cluster scale this is the "write the pair stage
-# to a staging table once" step of a real dedup pipeline.
+# correctness harness) the expensive stage should materialize ONCE rather
+# than once per consumer. Keyed on (applicationId, sf_dir); entries from
+# dead sessions are evicted on sight. At cluster scale this is the "write
+# the pair stage to a staging table once" step of a real dedup pipeline.
 def minhash_lsh_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_persist(
         spark, f"minhash_lsh:{sf_dir}",
@@ -482,7 +483,7 @@ FROM s
 # ---------------------------------------------------------------------------
 
 # Band width derives from corpus size so the candidate budget stays LINEAR
-# in N (the semdedup_prune precedent, r6 VERDICT item 1): expected bucket
+# in N (as semdedup_prune derives its cell count from N): expected bucket
 # size per band is N/2^band_bits, so picking the smallest band_bits with
 # 2^band_bits * DEDUP_TARGET_BUCKET >= N pins buckets at ~DEDUP_TARGET_BUCKET
 # rows and the per-band candidate budget at ~N*DEDUP_TARGET_BUCKET/2
@@ -510,9 +511,9 @@ def dedup_band_bits(n: int) -> int:
 def _pair_cos(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The base-geometry verify stage: every sign-LSH band-collision pair
     (vec_a < vec_b) with its exact cosine, UNFILTERED. This is the stage
-    two operator families consume (r9 VERDICT item 2 — the largest
-    remaining compute tier was this verify join computed twice per
-    session): `dedup_embedding_cosine` thresholds it at
+    two operator families consume (computed once per session instead of
+    twice, it was the largest compute tier left in the suite):
+    `dedup_embedding_cosine` thresholds it at
     COSINE_DUP_THRESHOLD, and the bitext miner (`bitext._scored`) derives
     its en×non-en candidate cosines from the same pairs (the cosine double
     is orientation-independent: per-element products commute and the fold
@@ -583,8 +584,8 @@ def pair_cos_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup pairs: sign-LSH banded candidate generation +
-    exact cosine verification (VERDICT r1 item 4 — the previous all-pairs
-    `a.vec_id < b.vec_id` form planned as a BroadcastNestedLoopJoin, O(n²)
+    exact cosine verification (an all-pairs `a.vec_id < b.vec_id` form
+    plans as a BroadcastNestedLoopJoin, O(n²)
     at any scale). The candidate+verify stage is shared with the bitext
     family (`pair_cos_cached`); this detector is the threshold gate over
     it — every emitted pair truly clears COSINE_DUP_THRESHOLD."""
@@ -599,8 +600,9 @@ def _dedup_embedding_cosine_sql() -> str:
     # band width derived from COUNT(embeddings) by the same integer formula
     # as dedup_band_bits (MIN over the bit range — no float log2, so the
     # threshold boundaries are bit-exact cross-engine). `e` and `sigs` are
-    # consumed more than once -> MATERIALIZED (the sf1 CTE-re-execution
-    # lesson from triangle_count, SCALE.md).
+    # consumed more than once -> MATERIALIZED: DuckDB inlines a CTE at each
+    # reference, so an unmaterialized one re-executes per consumer
+    # (triangle_count's edge CTE spilled >80 GB at sf1 that way).
     from .similarity import BAND_BITS, N_BANDS, _SQL_PLANE
 
     return f"""

@@ -199,8 +199,8 @@ GROUP BY 1
 
 
 def banking_txn_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seed → clean → enrich → metrics, reduced to a cents-exact digest
-    (VERDICT r1 item 6: this was the last rows-only batch query).
+    """Seed → clean → enrich → metrics, reduced to a cents-exact digest,
+    so the whole pipeline is checked against an oracle, not by row count.
 
     The seed is md5-deterministic column algebra (domain/seed.py), so the
     DuckDB oracle replays the ENTIRE pipeline — account seeding, active-FK

@@ -1,14 +1,13 @@
-"""Banding-parameter scaling study over `embeddings` (REGISTERED in
-round 6 — all three keys are in registry.py and driver-green).
+"""Banding-parameter scaling study over `embeddings` (all three keys
+are registered and oracle-checked).
 
-Round 6 measured the quadratic LSH candidate cliff (SCALE.md: 469 k
-candidate pairs at N=2 k → 47 M at N=20 k with the fixed BAND_BITS=6
-geometry — dedup_embedding_cosine's 29× sf1 blowup). This tier turned
-the documented mitigation ("raise BAND_BITS with corpus size") into
-measured, oracle-checked operators; round 7 then closed the loop by
-making the registered detector itself corpus-derived
-(`dedup.dedup_band_bits` — the geometry picked FROM this study's data),
-and round 8 extended that derivation to the bitext family and to
+With the fixed BAND_BITS=6 geometry the LSH candidate budget is
+quadratic: 469 k candidate pairs at N=2 k → 47 M at N=20 k, measured
+at sf0.1 and sf1 — dedup_embedding_cosine's 29× sf1 blowup. This tier
+turns the mitigation ("raise BAND_BITS with corpus size") into
+measured, oracle-checked operators; the registered detector itself is
+corpus-derived (`dedup.dedup_band_bits` — the geometry picked FROM this
+study's data), and so are the bitext family and
 `dedup_embedding_cosine_scaled` (`scaled_band_bits`: the same integer
 search floored at SCALED_BITS=12, so the finer production geometry is
 kept up to 131 k vectors and widens beyond). The base (16, 6) constants
@@ -25,7 +24,7 @@ oracles, which are |probes|×N and have no quadratic path:
   the banding catches, as recall per-mille. On this near-uniform
   corpus (true-pair cosine ≈ 0.35 → P[sign-bit match] ≈ 0.61) the
   curve quantifies exactly how fast low-threshold recall decays with
-  band width — the data an operator needs to pick the r7 geometry.
+  band width — the data an operator needs to pick the geometry.
 - dedup_embedding_cosine_scaled: the scaled geometry (24 bands ×
   `scaled_band_bits(N)` ≥ 12 bits) end-to-end at the corpus-realistic
   near-dup threshold 0.9, where sign-agreement is ~0.86/bit and
@@ -37,9 +36,11 @@ oracles, which are |probes|×N and have no quadratic path:
   geometry. tests/test_lshscale_deferred.py plants dups to prove it.
 
 Scale: per-geometry signatures are linear scans (hyperplane weights
-precomputed driver-side as literal arrays — the constant-folding lesson
-in SCALE.md), candidates come from banded equi-joins only, the probe
-truth is |probes|×N not N², and every report is a bounded aggregate.
+precomputed driver-side as literal arrays: Catalyst never constant-folds
+a HOF lambda, so computed in-plan they cost ~6k md5 calls per vector —
+14.8 s against 1.5 s for the sf0.1 signature stage), candidates come
+from banded equi-joins only, the probe truth is |probes|×N not N², and
+every report is a bounded aggregate.
 """
 
 from __future__ import annotations
@@ -235,10 +236,10 @@ def lsh_recall_tradeoff_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         # budget + caught in ONE scan of the cand subtree: referencing cand
         # twice (count agg + semi-join) re-executed the broadcast join +
         # distinct per consumer — the oracle hoists cand_{g} MATERIALIZED,
-        # this is the Spark-side equivalent (r8 VERDICT item 3: this key's
-        # isolated cost was ~2× the paramscan's). truth is persisted,
-        # distinct pairs, and probe-bounded -> broadcast left join keeps
-        # count(*) == |cand| while flagging the true pairs.
+        # this is the Spark-side equivalent (with cand referenced twice,
+        # this key's isolated cost was ~2× the paramscan's). truth is
+        # persisted, distinct pairs, and probe-bounded -> broadcast left
+        # join keeps count(*) == |cand| while flagging the true pairs.
         stats = (
             cand.join(
                 F.broadcast(truth.withColumn("is_true", F.lit(1))),
@@ -270,11 +271,11 @@ def lsh_recall_tradeoff_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_cand_cte(n_bands: int, band_bits: int) -> str:
     """Named MATERIALIZED CTEs for one geometry: sigs (referenced twice by
     its cand join) and the distinct probe-candidate set (referenced twice —
-    budget count + truth join). Hoisting these replaced the r6 form that
+    budget count + truth join). Hoisting these replaced a form that
     inlined the full sigs pipeline four times per geometry, including
-    inside a per-truth-row correlated EXISTS — the same DuckDB
-    CTE-re-execution class that spilled the triangle_count oracle at sf1
-    (VERDICT r6 item 3 / ADVICE r6)."""
+    inside a per-truth-row correlated EXISTS — DuckDB inlines a CTE at
+    each reference, the re-execution that spilled the triangle_count
+    oracle past 80 GB at sf1."""
     g = f"{n_bands}x{band_bits}"
     return f"""
 sigs_{g} AS MATERIALIZED {_sql_sigs(n_bands, band_bits)},
@@ -340,8 +341,8 @@ def dedup_embedding_cosine_scaled(spark: SparkSession,
     realistic 0.9 near-dup bar: banded equi-join candidates, exact cosine
     verification. Empty on the clean corpus (true negative); finds planted
     near-identical pairs on duplicated corpora at ~1/40th the base
-    candidate budget (SCALE.md sf1 measurement). Band width is corpus-
-    derived above 131 k vectors (`scaled_band_bits`, r8)."""
+    candidate budget (measured on the sf1 replica corpus). Band width is
+    corpus-derived above 131 k vectors (`scaled_band_bits`)."""
     from ..session import session_scalar
 
     n = session_scalar(

@@ -1,4 +1,5 @@
-"""Multimodal-column plumbing (engine extension, BASELINE.json north star).
+"""Multimodal-column plumbing (engine extension
+beyond reference parity).
 
 Images/audio/video are opaque `binary` columns with typed metadata, processed
 by Arrow-batched `mapInPandas` operators. The image/audio decode libraries

@@ -1,12 +1,13 @@
-"""Scale-planning advisors (REGISTERED in round 6 — all five keys are in
-registry.py and driver-green).
+"""Scale-planning advisors (all five keys are registered and
+oracle-checked).
 
 The engine's 100 TB posture is configuration: shuffle-partition counts
 sized so partitions fit executor memory, dim tables broadcast below
-`spark.sql.autoBroadcastJoinThreshold`, and hot join keys salted
-(SCALE.md). These operators turn that posture into DATA — a physical
-plan advisor computed from table statistics with exact integer math, so
-the recommendations themselves are oracle-checkable:
+`spark.sql.autoBroadcastJoinThreshold`, and hot join keys salted; no
+code path changes between local and cluster. These operators turn that
+posture into DATA — a physical plan advisor computed from table
+statistics with exact integer math, so the recommendations themselves are
+oracle-checkable:
 
 - shuffle_partition_plan: per table — rows, estimated bytes (fixed
   column widths from the schema + exact string/array byte sums), and

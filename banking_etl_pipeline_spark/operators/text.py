@@ -1,5 +1,5 @@
-"""Text-analysis operators over the `documents` table (engine extension,
-BASELINE.json north star: language-ID, quality scoring, token counting,
+"""Text-analysis operators over the `documents` table (engine extension
+beyond reference parity: language-ID, quality scoring, token counting,
 document fingerprinting).
 
 All pure Spark column expressions (split/transform/aggregate/filter) — no

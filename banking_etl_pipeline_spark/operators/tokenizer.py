@@ -101,8 +101,9 @@ def _adjacent_pairs(df: DataFrame) -> DataFrame:
     """Explode each symbol string into its adjacent pairs, weighted by word
     frequency.  Multiplicity within a word counts (standard BPE support).
     The split is hoisted into a named column — inside the transform lambda
-    it would be re-evaluated per element (the HOF constant-folding rule
-    SCALE.md documents)."""
+    it would be re-evaluated per element: Catalyst never constant-folds a
+    higher-order-function lambda, so every expression inside it runs once
+    per array element per row."""
     toked = df.withColumn("toks", F.split(F.col("sym"), " "))
     pair_arr = F.expr(
         "transform(sequence(1, size(toks) - 1),"

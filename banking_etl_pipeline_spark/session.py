@@ -1,21 +1,25 @@
 """SparkSession factory.
 
-Reconstructs the reference's session builder
-(`/root/reference/src/utils/spark_session.py:17-33`) the Spark-first way:
-AQE + partition coalescing stay on, shuffle parallelism is parameterized by
-environment instead of hard-coded to 4, Hive support is dropped (nothing in
-the reference uses a metastore), and the session timezone is pinned to UTC so
-results are comparable across engines (DuckDB timestamps are UTC-naive).
+Reconstructs the reference's session builder (`src/utils/spark_session.py`)
+the Spark-first way: AQE and its partition coalescing are left at Spark's
+defaults (on), shuffle parallelism follows the core count instead of being
+hard-coded to 4, Hive support is dropped (nothing in the reference uses a
+metastore), and the session timezone is pinned to UTC so results are
+comparable across engines (DuckDB timestamps are UTC-naive).
 
-At cluster scale the same builder is used with `master` unset (picked up from
-spark-submit) and `shuffle_partitions` sized to ~2-3× total executor cores.
+Three environment settings remain: `SPARK_GRAFT_CPUS` (local cores, and the
+default shuffle parallelism), `SPARK_GRAFT_DRIVER_MEM` and
+`SPARK_GRAFT_WAREHOUSE`.
+
+At cluster scale the same builder is used with `master=` passed explicitly
+(the builder always sets a master, and a builder-set master overrides
+spark-submit's) and `shuffle_partitions` sized to ~2-3× total executor cores.
 """
 
 from __future__ import annotations
 
 import os
-import re
-from collections.abc import Callable, Mapping
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -59,23 +63,6 @@ def session_scalar(spark: SparkSession, tag: str,
     return _session_cached(spark, "scalar", tag, compute)
 
 
-def aqe_coalescing(env: Mapping[str, str]) -> tuple[str, str]:
-    """``(parallelismFirst, advisoryPartitionSizeInBytes)`` for AQE from
-    ``SPARK_GRAFT_AQE_PARALLELISM_FIRST`` (``true``/``false``) and
-    ``SPARK_GRAFT_ADVISORY_PARTITION`` (a Spark byte size such as ``64m``).
-    A malformed value raises a ``ValueError`` naming its variable here,
-    rather than an opaque error from the session build."""
-    first = env.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true").strip().lower()
-    if first not in ("true", "false"):
-        raise ValueError("SPARK_GRAFT_AQE_PARALLELISM_FIRST must be true or "
-                         f"false, not {first!r}")
-    size = env.get("SPARK_GRAFT_ADVISORY_PARTITION", "64m").strip().lower()
-    if not re.fullmatch(r"[0-9]+([kmgtp]?b|[kmgtp])?", size):
-        raise ValueError("SPARK_GRAFT_ADVISORY_PARTITION must be a byte size "
-                         f"such as 64m or 134217728, not {size!r}")
-    return first, size
-
-
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -89,37 +76,21 @@ def get_spark(
     """Build (or fetch) the engine session.
 
     Scale notes: every config here is local-mode-safe and cluster-correct.
-    AQE handles runtime partition coalescing and skew-join splitting, so the
-    static `shuffle_partitions` only needs to be an upper bound at scale.
+    AQE (on by Spark's default) handles runtime partition coalescing and
+    skew-join splitting, so the static `shuffle_partitions` only needs to be
+    an upper bound at scale. The builder sets no AQE key, so a deployment's
+    Spark conf (`spark-defaults.conf`, `--conf`, `extra_conf`) decides the
+    policy: locally, Spark's parallelism-first coalescing measured 1.20-1.26×
+    faster than size-derived partitions on local[32]; on a real cluster, set
+    `spark.sql.adaptive.coalescePartitions.parallelismFirst=false` and a
+    64-256 MB `spark.sql.adaptive.advisoryPartitionSizeInBytes`.
     """
     cpus = default_parallelism()
-    parallelism_first, advisory_partition = aqe_coalescing(os.environ)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.default.parallelism", str(shuffle_partitions or cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # r10 (r9 VERDICT item 3 — the 8c≈32c suite observation): AQE's
-        # post-shuffle partition policy is now env-parameterized. The
-        # MEASURED local answer (OPTIMIZATION_r10.md: 26-key and 10-key
-        # alternating A/Bs at sf0.1) is that size-derived coalescing
-        # (parallelismFirst=false, 8-64 MB advisory) is 1.20-1.26× SLOWER
-        # than parallelism-first on local[32] — an in-process scheduler's
-        # per-task overhead is far below the parallelism it forfeits
-        # (basket_pairs 2.9×, bipartite_rank 1.5× worse) — so the local
-        # default keeps Spark's parallelism-first default and the driver's
-        # bench stays comparable. On a REAL cluster the Spark docs
-        # recommend parallelismFirst=false with a 64-256 MB advisory
-        # (network fetch + scheduler RPC per task dominate tiny
-        # partitions); deployments set SPARK_GRAFT_AQE_PARALLELISM_FIRST=
-        # false and size SPARK_GRAFT_ADVISORY_PARTITION there.
-        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-                parallelism_first)
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-                advisory_partition)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
@@ -135,7 +106,7 @@ def get_spark(
         # local sf0.1 parquet is a single file, AQE re-splits post-shuffle.
         # openCostInBytes default 4m makes split size = max(4m, bytes/cores),
         # which leaves most cores idle scanning mid-size (10-100 MB) tables —
-        # the r9 sf3/sf10 ladder measured the text tier 10x slower for it.
+        # measured 10x slower on the text tier at sf3/sf10.
         # 256k restores bytes/cores sizing (full fan-out on splittable files)
         # and at cluster scale only packs small files a little tighter.
         .config("spark.sql.files.openCostInBytes", str(256 * 1024))

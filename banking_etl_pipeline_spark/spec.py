@@ -4,8 +4,8 @@ Each query module binds one module-level ``QUERIES: dict[str, QuerySpec]``,
 its only export form: ``registry.MODULES`` lists the modules and
 ``registry.all_queries()`` concatenates their dicts. A spec pairs the Spark
 DataFrame builder with the ANSI-SQL oracle string that DuckDB runs on the
-same parquet tables (``oracle=None`` → non-SQL-expressible, driver does a
-rows-only check).
+same parquet tables. Every query has an oracle: the driver compares each
+key's rows with its oracle's, and has no rows-only check.
 
 Cross-engine determinism rules applied throughout (see tests/test_oracle_parity.py):
 - every computed/aggregate column is aliased identically in both engines;
@@ -32,5 +32,5 @@ Builder = Callable[[SparkSession, str], DataFrame]
 @dataclass(frozen=True)
 class QuerySpec:
     build: Builder
-    oracle: str | None  # ANSI SQL for DuckDB over the same tables, or None
+    oracle: str  # ANSI SQL for DuckDB over the same tables
     doc: str = ""

@@ -1,9 +1,9 @@
 #!/usr/bin/env python
 """Build an sf1-equivalent bench dataset by 10x-replicating sf0.1.
 
-The driver ships parquet at sf{0.001,0.01,0.1} only; SCALE.md's claims
-("this plan survives a scale-up") deserve at least one measured datapoint
-above sf0.1. This script replicates each SCALING table 10x with
+The test data ships parquet at sf{0.001,0.01,0.1} only; a claim that a
+plan survives a scale-up deserves at least one measured datapoint above
+sf0.1. This script replicates each SCALING table 10x with
 per-replica key offsets — every replica joins within itself, exactly how
 disjoint key ranges behave on a real 10x dataset — and copies the
 fixed-size dimensions (region, nation) as-is, matching TPC-H semantics
@@ -14,7 +14,7 @@ the workload (documents.text gets a per-replica marker token so the
 near-dup structure doesn't explode 10x; embeddings get a tiny
 deterministic first-component shift so cosine buckets stay spread).
 
-Output: /root/repo/.scratch/sf1/*.parquet (gitignored, ~170 MB).
+Output: .scratch/sf1/*.parquet under the repo root (gitignored, ~170 MB).
 Usage:  python scripts/make_scale_data.py [replicas]
 Then:   SPARK_GRAFT_SF_DIR=$PWD/.scratch/sf1 python bench.py
 """
@@ -35,10 +35,10 @@ DST_ROOT = os.path.join(
 # every sf)
 DIMS = ("region", "nation")
 
-# DuckDB's default ~122k-row groups made the r6-r8 scale sets nearly
+# DuckDB's default ~122k-row groups made the scale sets nearly
 # unsplittable (documents: 1/2/5 row groups at sf1/sf3/sf10), so scans of
 # the text tier ran 1-5 way on a 32-core box and the measured "constants"
-# were idle cores (SCALE.md r9). 16k-row groups keep every table splittable
+# were idle cores. 16k-row groups keep every table splittable
 # down to bytes/cores-sized partitions at all bench scales.
 ROW_GROUP_ROWS = 16384
 

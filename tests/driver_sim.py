@@ -68,7 +68,8 @@ def main() -> int:
             tuple(_norm(r[c]) for c in sorted(r.asDict())) for r in sdf.collect()
         ]
         if key not in osql:
-            print(f"{key}: rows-only ({len(srows)} rows)")
+            print(f"{key}: ERR no oracle in oracle_sql()")
+            bad.append(key)
             continue
         # driver-fidelity guard 2: the driver pandas-converts the oracle
         # result, where HUGEINT/DECIMAL(38) become float64/object vs Spark

@@ -45,9 +45,9 @@ def test_dedup_band_bits_boundaries():
 @given(st.integers(min_value=0, max_value=(1 << 26) * DEDUP_TARGET_BUCKET))
 @settings(max_examples=300, deadline=None)
 def test_dedup_band_bits_properties(n):
-    """The sawtooth bound as a property over ARBITRARY corpus sizes (r7
-    VERDICT item 5), not just the hand-picked boundary cases: between the
-    base-geometry floor and the saturation cap, expected bucket size
+    """The sawtooth bound as a property over ARBITRARY corpus sizes, not
+    just the hand-picked boundary cases: between the base-geometry floor
+    and the saturation cap, expected bucket size
     n / 2^bb stays in (TARGET/2, TARGET] — the candidate budget per band
     is therefore Θ(n·TARGET) with a bounded power-of-two sawtooth on the
     constant, never growth in n — and the derivation is monotone

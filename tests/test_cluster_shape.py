@@ -1,15 +1,16 @@
-"""Config-only local→cluster claim, pinned (r8 VERDICT item 4).
+"""Config-only local→cluster claim, pinned.
 
-SCALE.md ("Config deltas local → cluster") claims the engine moves from
-local[32] to a multi-executor cluster with ONLY configuration changes —
-same builders, same oracles. The testable core of that claim is
-repartition-insensitivity: re-running the exact driver comparison under a
-cluster-shaped SQL conf (shuffle.partitions 8→96, ~2-3× a 32-core
-executor's tasks, plus small file-split sizing so scans arrive in many
-input partitions) must produce bit-identical oracle matches for every
-representative key. Spark's `newSession()` shares the context but owns
-its SQLConf — exactly how a cluster submit re-parameterizes the session —
-so the test also pins that the override is session-isolated.
+The engine moves from local[32] to a multi-executor cluster with ONLY
+configuration changes (master, shuffle partitions, driver memory, AQE
+coalescing policy, warehouse paths) — same builders, same oracles. The
+testable core of that claim is repartition-insensitivity: re-running the
+exact driver comparison under a cluster-shaped SQL conf (shuffle.partitions
+8→96, ~2-3× a 32-core executor's tasks, plus small file-split sizing so
+scans arrive in many input partitions) must produce bit-identical oracle
+matches for every representative key. Spark's `newSession()` shares the
+context but owns its SQLConf — exactly how a cluster submit
+re-parameterizes the session — so the test also pins that the override is
+session-isolated.
 
 The representative set spans every shuffle-sensitive plan class in the
 registry: hash aggregate, distinct, window (row + range frame), equi/anti

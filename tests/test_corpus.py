@@ -36,10 +36,10 @@ def test_propagation_three_hops_on_chain(spark):
 
 
 def test_fixpoint_labels_diameter5_chain(spark):
-    """VERDICT r1 item 3: fixed 3-round propagation only labels components
-    of diameter ≤ 3. The fixpoint driver must fully converge a diameter-5
-    chain (1-2-3-4-5-6): every vertex gets the component min regardless of
-    hop distance, and a disjoint pair keeps its own label."""
+    """Fixed 3-round propagation only labels components of diameter ≤ 3.
+    The fixpoint driver must fully converge a diameter-5 chain
+    (1-2-3-4-5-6): every vertex gets the component min regardless of hop
+    distance, and a disjoint pair keeps its own label."""
     pairs = [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (20, 21)]
     df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
     got = {

@@ -78,8 +78,8 @@ def test_empty_universe_oracle_parity(spark, empty_dir):
     specs = all_queries()
     bad = []
     for key, spec in specs.items():
-        if (spec.oracle is None or key.startswith("streaming_")
-                or key in _SKIP or key in _EMPTY_ORACLE_DIVERGENCES):
+        if (key.startswith("streaming_") or key in _SKIP
+                or key in _EMPTY_ORACLE_DIVERGENCES):
             continue
         r = compare(spec.build(spark, empty_dir), con, spec.oracle)
         if not (r["row_count_match"] and r["columns_match"]

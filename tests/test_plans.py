@@ -552,16 +552,17 @@ def test_rate_limit_single_shuffle(spark, sf_dir, queries):
 
 def test_dedup_ngram_jaccard_df_capped_equi_join(spark, sf_dir, queries):
     """The shingle pair join must stay an equi join over df-capped posting
-    lists (VERDICT r1: default-uncapped df² blowup) — never a nested loop."""
+    lists (uncapped, a shingle in df documents emits df² pairs) — never a
+    nested loop."""
     p = plan_of(_build(queries, spark, sf_dir, "dedup_ngram_jaccard"))
     assert "BroadcastNestedLoopJoin" not in p
     assert "CartesianProduct" not in p
 
 
 def test_dedup_embedding_cosine_banded_not_allpairs(spark, sf_dir, queries):
-    """Candidate generation must ride the sign-LSH band equi join (VERDICT
-    r1: the all-pairs `a.vec_id < b.vec_id` form planned a
-    BroadcastNestedLoopJoin, O(n²) at any scale)."""
+    """Candidate generation must ride the sign-LSH band equi join (the
+    all-pairs `a.vec_id < b.vec_id` form plans a BroadcastNestedLoopJoin,
+    O(n²) at any scale)."""
     p = plan_of(_build(queries, spark, sf_dir, "dedup_embedding_cosine"))
     assert "BroadcastNestedLoopJoin" not in p
     assert "CartesianProduct" not in p
@@ -694,9 +695,9 @@ def test_ann_brute_force_probe_containment(spark, sf_dir, queries):
 
 
 def test_semdedup_cell_count_scales_with_corpus():
-    """VERDICT r2 item 2: per-cell pair cost is (n/C)² · C; C must grow
-    with n so expected cell size stays ≈ TARGET_CELL. Pin the bound under
-    10× and 100× growth (pure formula test, no Spark needed)."""
+    """Per-cell pair cost is (n/C)² · C; C must grow with n so expected
+    cell size stays ≈ TARGET_CELL. Pin the bound under 10× and 100× growth
+    (pure formula test, no Spark needed)."""
     from banking_etl_pipeline_spark.operators.similarity import (
         SEMDEDUP_MIN_CELLS,
         SEMDEDUP_TARGET_CELL,

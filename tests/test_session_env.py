@@ -1,38 +1,63 @@
-"""The AQE coalescing settings are checked before they reach the Spark
-config, so a malformed value fails naming its variable. No session is
-built."""
+"""`get_spark` leaves AQE policy to Spark's own config: a deployment's
+`spark-defaults.conf` reaches the session, `extra_conf` still beats it, and
+with no conf file the AQE keys read Spark's defaults. Each case runs in a
+fresh interpreter, because Spark reads its conf dir once, at JVM launch."""
 
 from __future__ import annotations
 
-import pytest
+import json
+import os
+import subprocess
+import sys
 
-from banking_etl_pipeline_spark.session import aqe_coalescing
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-FIRST = "SPARK_GRAFT_AQE_PARALLELISM_FIRST"
-SIZE = "SPARK_GRAFT_ADVISORY_PARTITION"
+AQE = "spark.sql.adaptive."
+FIRST = AQE + "coalescePartitions.parallelismFirst"
+ADVISORY = AQE + "advisoryPartitionSizeInBytes"
+FACTOR = AQE + "skewJoin.skewedPartitionFactor"
+SWITCHES = (AQE + "enabled", AQE + "coalescePartitions.enabled",
+            AQE + "skewJoin.enabled")
+KEYS = (*SWITCHES, FIRST, ADVISORY, FACTOR)
+
+_CHILD = """
+import json, sys
+from banking_etl_pipeline_spark.session import get_spark
+spark = get_spark(extra_conf=json.loads(sys.argv[1]))
+print(json.dumps({k: spark.conf.get(k) for k in sys.argv[2:]}))
+spark.stop()
+"""
 
 
-@pytest.mark.parametrize("env, want", [
-    ({}, ("true", "64m")),
-    ({FIRST: "false", SIZE: "256m"}, ("false", "256m")),
-    ({FIRST: " TRUE ", SIZE: "128MB"}, ("true", "128mb")),
-    ({SIZE: "134217728"}, ("true", "134217728")),
-    ({SIZE: "1g"}, ("true", "1g")),
-    ({SIZE: "512kb"}, ("true", "512kb")),
-])
-def test_valid_settings_pass_through(env, want):
-    assert aqe_coalescing(env) == want
+def _session_conf(conf_dir, extra_conf):
+    env = dict(os.environ, SPARK_CONF_DIR=str(conf_dir),
+               SPARK_GRAFT_DRIVER_MEM="1g", SPARK_GRAFT_CPUS="1",
+               PYTHONPATH=REPO)
+    out = subprocess.run(
+        [sys.executable, "-c", _CHILD, json.dumps(extra_conf), *KEYS],
+        env=env, cwd=REPO, capture_output=True, text=True, timeout=300,
+        check=True)
+    return json.loads(out.stdout.strip().splitlines()[-1])
 
 
-@pytest.mark.parametrize("env, var", [
-    ({FIRST: "yes"}, FIRST),
-    ({FIRST: ""}, FIRST),
-    ({SIZE: "64 MB"}, SIZE),
-    ({SIZE: "-64m"}, SIZE),
-    ({SIZE: "1.5g"}, SIZE),
-    ({SIZE: "big"}, SIZE),
-    ({SIZE: "64mib"}, SIZE),
-])
-def test_malformed_settings_name_their_variable(env, var):
-    with pytest.raises(ValueError, match=var):
-        aqe_coalescing(env)
+def _bytes(size):
+    unit = {"b": 0, "k": 10, "m": 20, "g": 30}[size[-1].lower()]
+    return int(size[:-1]) << unit
+
+
+def test_spark_conf_sets_aqe_policy(tmp_path):
+    tuned = tmp_path / "tuned"
+    tuned.mkdir()
+    (tuned / "spark-defaults.conf").write_text(
+        f"{FIRST} false\n{ADVISORY} 128m\n{FACTOR} 7\n")
+    conf = _session_conf(tuned, {FACTOR: "9"})
+    assert conf[FIRST] == "false"
+    assert _bytes(conf[ADVISORY]) == 128 << 20
+    assert conf[FACTOR] == "9"
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    conf = _session_conf(empty, {})
+    assert [conf[k] for k in (*SWITCHES, FIRST)] == ["true"] * 4
+    assert _bytes(conf[ADVISORY]) == 64 << 20
+    assert float(conf[FACTOR]) == 5

@@ -86,7 +86,7 @@ def test_restart_from_checkpoint_is_exactly_once(spark, tmp_path):
 # Stateful restart: the two lambda-parity proofs must carry their GroupState
 # (a FLOAT for ewma) across a checkpoint kill/restart and produce output
 # identical to an uninterrupted run — in-session parity alone doesn't prove
-# the state round-trips the checkpoint store losslessly (VERDICT r2 item 5).
+# the state round-trips the checkpoint store losslessly.
 # ---------------------------------------------------------------------------
 
 def _staged_prefix_split(spark, tmp_path, cols, nonnull_value=False):
