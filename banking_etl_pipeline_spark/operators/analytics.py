@@ -1056,7 +1056,7 @@ def min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q2-shaped min-cost supplier per part within a region.
 
     The correlated MIN subquery decorrelates to ONE min() window over the
-    partkey partition + an equality filter (r9, guide §2.4 — the former
+    partkey partition + an equality filter (the former
     per-part groupBy-min joined back on equality evaluated the
     region-filtered relation twice and its two partkey exchanges were not
     canonically identical, so AQE could not reuse them; the window form is
@@ -1257,10 +1257,10 @@ def bipartite_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     grows — loop to convergence by re-running the same two-shuffle step.
     Output: top-25 customers by received 2-hop mass.
 
-    r9 restructure (guide §2.4): customer degree rides a count() window on
-    the edge list (so the edge subtree with its degree column appears ONCE
-    and its exchange is runtime-reused by both consumers) instead of a
-    separate cdeg aggregate joined back three times; supplier degree needs
+    Customer degree rides a count() window on the edge list (so the edge
+    subtree with its degree column appears ONCE and its exchange is
+    runtime-reused by both consumers) instead of a separate cdeg aggregate
+    joined back three times; supplier degree needs
     no join at all — it IS the group count of the step-1 aggregate, and
     the step-2 per-edge share `s_mass div sd` is constant per supplier, so
     it is computed once per supplier and attached with one equi-join
@@ -1281,7 +1281,8 @@ def bipartite_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # step 1: every customer splits RANK_SCALE across its suppliers.
     # Exact integer `div`, matching the oracle's `//` bit-for-bit: the
     # double form floor(x / y) drifts once the numerator outgrows ~2^45
-    # (div error > 1/denominator), the ADVICE-r1 HLL pattern.
+    # (div error > 1/denominator), the same hazard as the HLL
+    # register index.
     # sd (supplier degree) is the group count of this same aggregate.
     supplier_mass = (
         e1.groupBy("s")
@@ -1344,10 +1345,10 @@ def basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     key, and the count is map-side combined — the same plan FP-growth
     preprocessing uses.
 
-    r9 (guide §2.4): the basket-size cap is a count() window on the
-    orderkey partition instead of a separate size aggregate + semi
-    join-back — the window's orderkey exchange is exactly the partitioning
-    the self-join needs, so the cap costs no extra shuffle and the deduped
+    The basket-size cap is a count() window on the orderkey partition
+    instead of a separate size aggregate + semi join-back — the window's
+    orderkey exchange is exactly the partitioning the self-join needs, so
+    the cap costs no extra shuffle and the deduped
     line list is evaluated once instead of three times."""
     li = table(spark, sf_dir, "lineitem")
     lines = li.select("l_orderkey", "l_partkey").distinct()
@@ -1582,7 +1583,7 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     3·triangles / wedges (exact integer inputs, truncated double out)."""
     li = table(spark, sf_dir, "lineitem")
     lines = li.select("l_orderkey", "l_partkey").distinct()
-    # same window-based basket cap as basket_pairs (r9, guide §2.4)
+    # same window-based basket cap as basket_pairs
     b = (
         lines.withColumn(
             "nb", F.count(F.lit(1)).over(Window.partitionBy("l_orderkey"))
@@ -1656,8 +1657,8 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 # MATERIALIZED hints: DuckDB inlines CTEs per reference, so the pair-join
 # behind `edges` (30M rows at sf1) re-executed for each of its three
 # consumers and spilled >80 GB; materialized once it runs in 3.8 s under
-# an 8 GB cap (measured r6, .scratch/sf1). Pure plan hint — semantics and
-# results unchanged (the sha re-queue this causes is intentional).
+# an 8 GB cap (measured at sf1). Pure plan hint — semantics and
+# results unchanged.
 TRIANGLE_COUNT_SQL = f"""
 WITH lines AS MATERIALIZED (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
 small AS (

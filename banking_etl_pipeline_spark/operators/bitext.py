@@ -32,7 +32,7 @@ with avgK the mean cosine of the K nearest candidates.  Four operators:
   translation-data curator tracks per crawl.
 
 Scale: the candidate stage is the banded equi-join on (band, sig) — never
-a cross join — and the band width is CORPUS-DERIVED (r8: `dedup_band_bits`,
+a cross join — and the band width is CORPUS-DERIVED (`dedup_band_bits`,
 shared with dedup_embedding_cosine's session-persisted band table), so
 bucket width is pinned at ~32 rows and the candidate volume stays linear
 in N at any corpus size.  The doc⋈embedding lang
@@ -64,8 +64,8 @@ def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidate cross-lingual pairs with fixed-point cosines:
     (src_id en-doc, tgt_id non-en doc, tgt_lang, c6 = floor(cos·1e6)).
 
-    Band geometry is CORPUS-DERIVED (r8 — the sf3 instrument caught this
-    family as the next fixed-geometry quadratic: at N=60 k the base 6-bit
+    Band geometry is CORPUS-DERIVED (the sf3 measurement found this
+    family to be the next fixed-geometry quadratic: at N=60 k the base 6-bit
     bands hold ~940 rows each, so the src×tgt bucket join emits ∝N²/64
     candidates — three of the four keys spilled >35 GB and timed out at
     sf3). Same derivation as dedup_embedding_cosine (`dedup_band_bits`:
@@ -122,11 +122,11 @@ def _margin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_src = Window.partitionBy("src_id", "tgt_lang").orderBy(
         F.desc("c6"), F.asc("tgt_id"))
     w_tgt = Window.partitionBy("tgt_id").orderBy(F.desc("c6"), F.asc("src_id"))
-    # each side ranks ONLY with its own window (r9: a shared `ranked` with
+    # each side ranks ONLY with its own window (a shared `ranked` with
     # both rank columns made ss and ts each evaluate BOTH windows — four
     # exchange+sort passes over the candidate set for two top-K sums; the
     # rank a side filters on never depends on the other side's window, and
-    # each window's groupBy reuses its own window exchange per guide §2.4)
+    # each window's groupBy reuses its own window exchange)
     ss = (sc.withColumn("rs", F.row_number().over(w_src))
           .filter(F.col("rs") <= K_MARGIN)
           .groupBy("src_id", "tgt_lang")
@@ -229,7 +229,7 @@ e AS MATERIALIZED (
   FROM embeddings
 ),
 params AS (  -- corpus-derived band width, same integer search as
-             -- dedup_band_bits (r8: the fixed 6-bit geometry was ∝N²/64)
+             -- dedup_band_bits (the fixed 6-bit geometry was ∝N²/64)
   SELECT COALESCE((
     SELECT MIN(b) FROM range({BAND_BITS}, {DEDUP_MAX_BAND_BITS + 1}) t(b)
     WHERE (CAST(1 AS BIGINT) << CAST(b AS INTEGER)) * {DEDUP_TARGET_BUCKET}

@@ -395,7 +395,7 @@ def dup_clusters_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 # terminates), and MIN(r) per v is the component-min label, which is exactly
 # the fixpoint of hash-min propagation on a symmetric graph. No iteration
 # count appears on either side, so the oracle can no longer mask an
-# under-iterated Spark result (the r1 parity blind spot).
+# under-iterated Spark result (both sides would stop early together).
 DUP_CLUSTERS_SQL = f"""
 WITH RECURSIVE pairs AS (
   SELECT doc_a, doc_b FROM ({DEDUP_MINHASH_LSH_SQL}) z
@@ -437,7 +437,7 @@ def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     members = clusters.join(docs, "doc_id")
     # struct sort key (n_chars desc-tiebreak form): same winner as the
-    # oracle's printf string key without a per-member string alloc (r9)
+    # oracle's printf string key without a per-member string alloc
     key = F.struct(
         F.col("n_chars"),
         (F.lit(9_999_999_999) - F.col("doc_id")).alias("nk"),
@@ -851,7 +851,7 @@ def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cab",
             # Rank by the IEEE-double ratio (identical mult/div order in the
             # oracle → bit-identical cross-engine); keep the exact int64
-            # fraction only when it provably fits (ADVICE r1: cab·nu² can
+            # fraction only when it provably fits (cab·nu² can
             # overflow int64 at larger corpora — Spark wraps silently while
             # DuckDB errors, an asymmetric parity break). PMI_INT_SAFE has a
             # >200-ulp margin below 2^63-1, so the double-vs-int comparison
@@ -1017,7 +1017,7 @@ def feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_bucket = buckets.groupBy("doc_id", "bucket").agg(
         F.count(F.lit(1)).alias("c")
     )
-    # struct key: (count, bucket-asc tiebreak) — r9, no per-bucket string
+    # struct key: (count, bucket-asc tiebreak): no per-bucket string
     key = F.struct(F.col("c"), (F.lit(10**9) - F.col("bucket")).alias("nb"))
     return per_bucket.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("nnz"),

@@ -199,7 +199,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["in_doc", "corpus_doc"])
         .select("in_doc", "corpus_doc", n_match.alias("n_match"))
     )
-    # struct key: (n_match, corpus_doc-asc tiebreak) — r9, same winner as
+    # struct key: (n_match, corpus_doc-asc tiebreak): same winner as
     # the oracle's printf key without a per-candidate string alloc
     best_key = F.struct(
         F.col("n_match"),
@@ -334,7 +334,7 @@ def boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     The strip SET is tiny by construction (only tokens in >60% of all
     documents qualify), so it broadcasts as ONE sorted-array row and the
     strip itself is a per-row higher-order filter over the split token
-    array — token order survives natively (r9, guide §2.3/§2.4: the
+    array — token order survives natively (the
     former keep-set equi-join shuffled every token OCCURRENCE and
     re-assembled documents with a collect_list + array_sort groupBy; now
     the only occurrence-level shuffle left is the df aggregate itself).

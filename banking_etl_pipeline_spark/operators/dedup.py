@@ -523,9 +523,9 @@ def _pair_cos(spark: SparkSession, sf_dir: str) -> DataFrame:
     (band, signature) — the same md5-derived hyperplane family the ANN path
     and its DuckDB oracle replay, so the candidate set (and therefore every
     consumer's output) is deterministic and oracle-checked end-to-end. Band
-    width is corpus-derived (`dedup_band_bits`, r7: the r6-measured
-    quadratic cliff fix) so the candidate budget stays linear in N; at the
-    base geometry the band table delegates to the shared
+    width is corpus-derived (`dedup_band_bits`: a fixed width made the
+    candidate count quadratic in N) so the candidate budget stays linear
+    in N; at the base geometry the band table delegates to the shared
     `similarity.lsh_bands_cached` materialization. Each surviving candidate
     pays one exact cosine; recall is probabilistic per banding theory while
     precision is exact."""
@@ -551,10 +551,11 @@ def _pair_cos(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    # no repartition here (r9): it added a round-robin exchange of the full
+    # no repartition here: it added a round-robin exchange of the full
     # vector payload feeding straight into the verify join's own exchange /
     # broadcast — scan fan-out is the session's openCostInBytes job, not a
-    # per-query repartition (guide §2.4: remove shuffles outright)
+    # per-query repartition (a shuffle that feeds another shuffle only adds
+    # a copy of the payload)
     e = (
         table(spark, sf_dir, "embeddings")
         .select("vec_id", as_double(F.col("embedding")).alias("v"))

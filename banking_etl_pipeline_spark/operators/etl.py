@@ -99,7 +99,7 @@ def latest_event_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = table(spark, sf_dir, "events")
     # struct (micros, event_id) sort key: same total order as the
-    # oracle's zero-padded printf key, no per-event string alloc (r9)
+    # oracle's zero-padded printf key, no per-event string alloc
     key = F.struct(F.unix_micros(F.col("ts")).alias("us"), F.col("event_id"))
     return (
         e.select("user_id", "ts", "event_type", "value", key.alias("k"))
@@ -462,7 +462,7 @@ def cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("event_type") == "error", F.lit("D"))
         .otherwise(F.lit("U"))
     )
-    # struct (micros, event_id) key — r9, same order as the printf form
+    # struct (micros, event_id) key: same order as the printf form
     key = F.struct(F.unix_micros(F.col("ts")).alias("us"), F.col("event_id"))
     applied = (
         e.select(

@@ -74,11 +74,11 @@ def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _bands_for(spark: SparkSession, sf_dir: str,
                n_bands: int, band_bits: int) -> DataFrame:
     """(vec_id, band, sig) for one geometry; session-persisted per
-    (sf_dir, geometry) — the paramscan, recall, scaled-dedup, and (r7)
+    (sf_dir, geometry) — the paramscan, recall, scaled-dedup and
     base-dedup consumers share one materialization. The base (16, 6)
     geometry delegates to `similarity.lsh_bands_cached` — the identical
     relation by construction (same hyperplane family, same packing) — so
-    a session never holds two persisted copies of it (ADVICE r6)."""
+    a session never holds two persisted copies of it."""
     from .similarity import BAND_BITS as BASE_BITS
     from .similarity import N_BANDS as BASE_BANDS
     from .similarity import lsh_bands_cached
@@ -326,7 +326,7 @@ def scaled_band_bits(n: int) -> int:
     as `dedup.dedup_band_bits` but FLOORED at SCALED_BITS=12 — this key's
     point is the finer production geometry, so it never narrows below it,
     and past 2^12·32 = 131 k vectors it keeps growing so buckets stay
-    pinned at ~32 rows (r8: the fixed 12-bit geometry spilled ~45 GB at
+    pinned at ~32 rows (the fixed 12-bit geometry spilled ~45 GB at
     sf10's 200 k vectors — ~49-row buckets × 24 bands of candidates into
     one DISTINCT sort). Identical output for every corpus ≤131 k vectors,
     which covers all driver SFs and the sf1/sf3 scale sets."""

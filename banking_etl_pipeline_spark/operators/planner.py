@@ -31,10 +31,10 @@ oracle-checkable:
   (measured: 469 k at sf0.1 → 47 M at sf1, quadratic — the sf1 bench's
   one super-linear query traced to exactly this), so this report is the
   pre-flight check that tells an operator to raise BAND_BITS BEFORE
-  paying the join. (r7 closed the loop: dedup_embedding_cosine now
-  derives its band width from corpus size — dedup.dedup_band_bits — so
-  the registered detector's budget stays linear; this report still
-  audits the FIXED base geometry the ANN probe index uses.)
+  paying the join. (dedup_embedding_cosine derives its band width from
+  corpus size — dedup.dedup_band_bits — so the registered detector's
+  budget stays linear; this report still audits the FIXED base geometry
+  the ANN probe index uses.)
 
 Widths are schema constants (TESTDATA.md schemas are fixed): 8 for
 BIGINT/DOUBLE/TIMESTAMP, 4 for INTEGER/FLOAT elements, exact

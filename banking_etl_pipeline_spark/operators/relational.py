@@ -1135,7 +1135,7 @@ def variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Null-aware oracle (ADVICE r1): Spark's try_variant_get returns SQL NULL
+# Null-aware oracle: Spark's try_variant_get returns SQL NULL
 # for a missing path, a present-but-JSON-null value, AND a non-castable
 # value; DuckDB's json_extract returns a JSON 'null' (not SQL NULL) for the
 # middle case and CAST would error on the last. TRY_CAST(json_extract_string)

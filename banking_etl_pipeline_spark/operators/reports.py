@@ -135,12 +135,12 @@ SWEEP_CONFIGS = [(16, 1), (8, 2), (4, 4)]
 # (doc_id < SWEEP_PROBE_DOCS — the lowest ids, so `doc_a < doc_b` keeps
 # every probe-anchored pair exactly once). Un-anchored, the (16, 1) layout
 # is quadratic: single-hash buckets collect every doc sharing a frequent
-# min-shingle, so buckets grow ∝N and candidates ∝N² (measured on the r7
+# min-shingle, so buckets grow ∝N and candidates ∝N² (measured on the
 # sf1 corpus: 174 k pairs at 5 k docs → 20.6 M at 50 k, 118× on 10× rows —
-# the same cliff class dedup_embedding_cosine had pre-r7). Probe-anchoring
-# bounds every config at |probes|·bucket ≈ linear in N, the
-# lsh_recall_tradeoff_report stance; precision/recall on the fixed probe
-# sample estimate the corpus-wide ratios.
+# the same cliff class dedup_embedding_cosine had with a fixed band
+# width). Probe-anchoring bounds every config at |probes|·bucket ≈
+# linear in N, the lsh_recall_tradeoff_report stance; precision/recall on
+# the fixed probe sample estimate the corpus-wide ratios.
 SWEEP_PROBE_DOCS = 200
 
 

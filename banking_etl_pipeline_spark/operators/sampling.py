@@ -176,10 +176,10 @@ FROM chunks
 def heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-50 most frequent whitespace tokens across the corpus, exact.
     Ties broken by token string so the top-k cut is deterministic.
-    Rides the session-persisted shared token-frequency table (r9 —
-    cms_topk builds the identical aggregate; previously the CacheManager
-    substituted that cache here implicitly whenever cms ran first, now
-    the sharing is explicit and deterministic)."""
+    Rides the session-persisted shared token-frequency table, the
+    aggregate cms_topk builds too: sharing it explicitly is deterministic,
+    where Spark's CacheManager substituted cms's cache only when cms ran
+    first."""
     from .skew import token_frequencies
 
     return (
@@ -445,9 +445,9 @@ def mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every product uses the split form `(a div m)·w + ((a mod m)·w) div m`
     = exact floor(a·w/m) without ever forming a·w — at 100 TB budgets
     (B ~ 10^15 tokens) the naive product overflows int64 silently in
-    Spark while DuckDB errors, the asymmetric-failure pattern ADVICE r1
-    flagged on PMI. Everything after the per-stratum aggregate is
-    ≤|langs| rows of integer algebra."""
+    Spark while DuckDB errors, so the two engines would fail differently
+    on the same input (the same hazard as PMI's product). Everything after
+    the per-stratum aggregate is ≤|langs| rows of integer algebra."""
     d = table(spark, sf_dir, "documents")
     avail = (
         d.select("lang", F.size(F.split(F.col("text"), " ")).alias("t"))

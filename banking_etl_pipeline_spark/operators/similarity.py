@@ -227,7 +227,7 @@ def _ivf_assignments(e: DataFrame, centroids: DataFrame, n_best: int,
     """Top-`n_best` centroid cells per vector by cosine (ties → cell_id).
 
     n_best == 1 (the corpus-sized call sites) is an argmax, computed as ONE
-    min(struct(-sim, cell_id)) hash aggregate (r9, guide §2.3): map-side
+    min(struct(-sim, cell_id)) hash aggregate: map-side
     partials shuffle ≤1 row per id per partition instead of sorting the
     full id×cell scored stream through a rank window. Sims are never
     NULL/NaN here (finite vectors, non-zero norms — ANSI division would
@@ -430,8 +430,8 @@ def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     (squared L2 via the dot-product identity), reported as a
     (label, assigned_label) confusion matrix with mean distance.
 
-    The argmin is ONE rank-1 row_number window over the scored rows (r9,
-    guide §2.3/§2.4 — the former decorrelated groupBy-min + equality
+    The argmin is ONE rank-1 row_number window over the scored rows (the
+    former decorrelated groupBy-min + equality
     join-back evaluated the N×K scored relation twice and shuffled it
     twice; rn=1 with ordering (dist, cent_label) is the same semantics —
     min dist, ties to the smaller label — and Spark's WindowGroupLimit
@@ -514,8 +514,8 @@ def _assignments(e: DataFrame) -> DataFrame:
     """(vec_id, v, assigned_label): nearest-centroid assignment — the shared
     first half of a Lloyd iteration (see kmeans_assign for the plan: one
     broadcast of the centroids + ONE rank-1 window with the
-    WindowGroupLimit partial top-1; r9 removed the decorrelated join-back
-    that evaluated and shuffled the N×K scored relation twice)."""
+    WindowGroupLimit partial top-1; the decorrelated join-back it replaced
+    evaluated and shuffled the N×K scored relation twice)."""
     cent = _centroid_frame(e).select(
         F.col("label").alias("cent_label"),
         "c",
@@ -881,7 +881,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             simq.alias("sq"),
         )
     )
-    # packed BIGINT sort key (r9): (sq, c_id DESC) lexicographic order as
+    # packed BIGINT sort key: (sq, c_id DESC) lexicographic order as
     # sq·2^40 + (2^40−1−c_id) — same ordering as the former
     # printf('%07d:%010d', sq, 9999999999−c_id) string key without a
     # per-pair string allocation. Bounds: 0 < sq ≤ 3·10^6 < 2^22 and
@@ -940,20 +940,20 @@ SEMDEDUP_THRESHOLD = 0.35
 # 1-row count; DuckDB: a scalar subquery), so the oracle is parameterized
 # identically by construction. At the test SFs (≤2000 vectors) this resolves
 # to MIN_CELLS=16 — the same quantizer as before. TARGET_CELL was cut
-# 512 -> 256 in r8: the sf3 wall (42.1 s) was the per-cell pair scan whose
+# 512 -> 256: the sf3 wall (42.1 s) was the per-cell pair scan whose
 # per-row constant is ~TARGET_CELL/2 cosines; halving it trades ~128
 # pair-scan cosines/row for ~+9 assignment cosines/row (C doubles, so the
 # two-level N·2√C term grows √2×) — a measured net win at sf1/sf3.
 SEMDEDUP_TARGET_CELL = 256
 SEMDEDUP_MIN_CELLS = 16
-# Ceiling on the coarse-group search (r8, ADVICE): the oracle's
+# Ceiling on the coarse-group search: the oracle's
 # MIN-over-range subquery scans range(2, CAP+1) and would yield NULL past
 # CAP² fine cells (~2.1 B vectors at CAP=2048) while the unbounded Python
 # search kept going — a silent cross-engine divergence. Both sides now
 # saturate at the SAME cap (Python stops the linear search, SQL wraps the
 # subquery in COALESCE(..., CAP)), mirroring the dedup_band_bits pattern.
 SEMDEDUP_COARSE_CAP = 2048
-# Above this many fine cells the quantizer goes TWO-LEVEL (r7 — the sf3
+# Above this many fine cells the quantizer goes TWO-LEVEL (the sf3
 # measurement found the flat assignment's N×C cosine pass is the next
 # quadratic path: C ∝ N makes assignment N²/512; at N=60 k that is 7 M
 # cosines and growing with the square). Two-level: vectors pick a coarse
@@ -997,12 +997,12 @@ def _two_level_cells(e: DataFrame, centroids: DataFrame,
     )
     gsim = dot(F.col("cv"), F.col("gv")) / (F.col("cn") * F.col("gn"))
     # All three nearest-of picks below are argmaxes computed as ONE
-    # min(struct(-sim, id)) hash aggregate each (r9, guide §2.3 — they were
+    # min(struct(-sim, id)) hash aggregate each (they were
     # rank-1 row_number windows, i.e. a full sort of every scored stream;
     # the aggregate folds map-side and shuffles ≤1 row per key per
     # partition). Sims are never NULL/NaN (finite vectors, non-zero norms),
     # so struct-min ≡ (sim DESC, id ASC) rank 1 exactly.
-    # Coarse cells map to THEMSELVES by construction (r8, ADVICE): ranking
+    # Coarse cells map to THEMSELVES by construction: ranking
     # a coarse cell against the groups can, under float rounding on
     # near-parallel vectors, tie cosine(g, h) with cosine(g, g)=1 for a
     # lower-id group h and steal cell g — leaving group g empty, so any
@@ -1083,8 +1083,8 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         cells = _ivf_assignments(e, centroids, 1, "vec_id")
     else:
         cells = _two_level_cells(e, centroids, n_coarse)
-    # vectors are attached ONLY where the pair scan needs them (r9, guide
-    # §2.3: shuffle keys and metadata, not payloads) — cell sizes and the
+    # vectors are attached ONLY where the pair scan needs them (shuffle
+    # keys and metadata, not payloads) — cell sizes and the
     # final id-level report run on the bare (vec_id, cell_id) assignment,
     # so the e-join with its 64-double payload is evaluated once (its two
     # pair-scan sides share one exchange), not in four branches, and the
@@ -1140,7 +1140,7 @@ nc AS (  -- cell count derived from corpus size, same formula as Spark side
 ),
 ncg AS (  -- coarse-group count: 1 (flat) small, else ceil-sqrt by integer
           -- search — same derivation as semdedup_coarse_cells, saturating
-          -- at the shared cap instead of NULLing past range() (r8 ADVICE)
+          -- at the shared cap instead of NULLing past range()
   SELECT CASE WHEN (SELECT n FROM nc) <= {SEMDEDUP_FLAT_MAX_CELLS} THEN 1
          ELSE COALESCE(
                (SELECT MIN(k)
@@ -1157,7 +1157,7 @@ grp AS (
   WHERE vec_id BETWEEN {N_QUERIES} AND {N_QUERIES} + (SELECT g FROM ncg) - 1
 ),
 f2c AS MATERIALIZED (  -- fine cell -> coarse group (C x sqrt(C), tiny);
-                       -- coarse cells self-map so no group is empty (r8)
+                       -- coarse cells self-map so no group is empty
   SELECT g_id AS cell_id, g_id FROM grp
   UNION ALL
   SELECT cell_id, g_id FROM (

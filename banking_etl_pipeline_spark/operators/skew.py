@@ -158,7 +158,7 @@ CMS_PROBE_K = 25  # exact top-k tokens probed against the sketch
 def token_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact corpus token-frequency table (token, exact_n), session-
     persisted once (vocabulary-sized). Shared by cms_topk (sketch build +
-    probe ground truth) and sampling.heavy_hitters (r9 — the two keys
+    probe ground truth) and sampling.heavy_hitters (the two keys
     used to rebuild the same aggregate; one materialization, two
     consumers, the `_bands_for` precedent)."""
     d = table(spark, sf_dir, "documents")
@@ -177,7 +177,7 @@ def cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (row, cell) sum-of-frequencies is THE sketch (4096 cells regardless of
     input size — the fixed-size summary you ship to the driver or merge
     across 100 TB shards by cell-wise addition). Aggregating BEFORE hashing
-    (r9, guide §2.3 "aggregate before you shuffle") is exact: a token's 4
+    (aggregate before you shuffle) is exact: a token's 4
     cells depend only on the token, so summing its frequency into those
     cells yields bit-identically the occurrence-count sketch while the
     md5 + explode work drops from 4 per occurrence to 4 per distinct token
@@ -285,7 +285,7 @@ GROUP BY p.token, p.exact_n
 
 HLL_M = 256  # registers (2^8)
 HLL_SHIFT = 8  # log2(HLL_M): exact integer >>8 == DuckDB hv // 256 (float "/" can
-# drift for h > 2^53 — ADVICE r1)
+# drift for h > 2^53, where a double cannot hold h exactly)
 assert (1 << HLL_SHIFT) == HLL_M
 HLL_HASH_BITS = 52  # md5_long is 60-bit; use 8 for the bucket, 52 for rho
 HLL_ALPHA = 0.7213 / (1 + 1.079 / HLL_M)  # same literal in both engines
@@ -438,7 +438,7 @@ def bloom_filter_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     def probe(probe_keys: DataFrame) -> DataFrame:
         cells = probe_keys.select("key", positions(F.col("key")).alias("pos"))
         # bits is bounded by BLOOM_M (2^17 positions) at ANY corpus size —
-        # broadcast it explicitly (r9, guide §3.1/§3.2: the probe side must
+        # broadcast it explicitly (the probe side must
         # never shuffle for this join; AQE happened to pick broadcast from
         # size estimates already, this pins the scale-safe strategy)
         hits = (
@@ -863,7 +863,7 @@ def skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         # sortable struct key (freq desc, key asc): struct max == (max
         # freq, then smallest key) — deterministic under ties, same winner
         # as the oracle's printf string key, without allocating a 40-char
-        # string per distinct key (r9; max_by accepts any orderable type,
+        # string per distinct key (max_by accepts any orderable type,
         # and unlike a packed integer the struct cannot overflow at any
         # freq/key magnitude)
         F.max_by(

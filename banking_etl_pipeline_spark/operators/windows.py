@@ -203,7 +203,7 @@ def asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Orders are first deduped to one per (custkey, date) — ties broken by max
     orderkey — because "the" as-of row must be unique for determinism. The
-    dedup is a rank-1 row_number window (r9, guide §2.4 — the former
+    dedup is a rank-1 row_number window (the former
     groupBy-max + join-back scanned and shuffled orders twice; rn=1 under
     orderkey DESC is the same row, and WindowGroupLimit reduces it to a
     per-partition top-1 before the exchange).
@@ -511,7 +511,7 @@ def ohlc_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events")
     # unique sortable key: (epoch-µs, event_id) STRUCT — same total order
     # as the former zero-padded string key (the oracle keeps its printf
-    # form; winners are identical) without a per-event string alloc (r9);
+    # form; winners are identical) without a per-event string alloc;
     # min_by/max_by accept any orderable type
     key = F.struct(F.unix_micros(F.col("ts")).alias("us"), F.col("event_id"))
     return (
@@ -553,7 +553,7 @@ def gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
        aggregate (the only full-data shuffle);
     2. one `lead(hr)` window over the hourly rollup, then each observed
        hour EXPLODES its own span `sequence(hr, next_hr − 1h, 1h)`
-       carrying its value forward (r9, guide §2.4: the former
+       carrying its value forward (the former
        spine-generate → left-join-back → locf-window plan paid a second
        per-user aggregate, a (user, hr) join exchange on both sides and a
        second window sort; the carry identity — between two observations
@@ -895,8 +895,8 @@ def peak_daily_concurrency(intervals: DataFrame) -> DataFrame:
     brute-force overlap counter in tests/test_properties.py."""
     # exact integer `div` (not floor of a double quotient): epoch-µs values
     # exceed 2^52, where double division error reaches whole µs and can
-    # misbucket a day-boundary event (ADVICE-r1 HLL pattern; the oracle
-    # uses `//`)
+    # misbucket a day-boundary event (the HLL register index has the same
+    # hazard; the oracle uses `//`)
     per_day = intervals.select(
         "s_us",
         "e_us",

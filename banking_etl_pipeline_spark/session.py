@@ -7,6 +7,12 @@ hard-coded to 4, Hive support is dropped (nothing in the reference uses a
 metastore), and the session timezone is pinned to UTC so results are
 comparable across engines (DuckDB timestamps are UTC-naive).
 
+Every parquet file the session writes (appended batches, warehouse
+generations, query results) is zstd-compressed, about a quarter smaller than
+Spark's snappy default; `extra_conf` or a writer's `compression` option
+overrides that, and readers follow each file's footer, so a target may mix
+codecs.
+
 Three environment settings remain: `SPARK_GRAFT_CPUS` (local cores, and the
 default shuffle parallelism), `SPARK_GRAFT_DRIVER_MEM` and
 `SPARK_GRAFT_WAREHOUSE`.
@@ -121,6 +127,15 @@ def get_spark(
         # addresses at most 8192 pages per task, so this still allows 32 GiB
         # per task, and a record larger than a page gets a page of its own.
         .config("spark.buffer.pageSize", "4m")
+        # Every parquet file the engine writes (appended batches, warehouse
+        # generations, query results) pays for its bytes at the target.
+        # zstd at parquet-mr's default level 3 writes about a quarter fewer
+        # bytes than Spark's snappy default: on 4 vCPU, a 100 k-row
+        # transaction batch's write_amp fell 0.5435 -> 0.4112 and registry
+        # query results' 0.0667 -> 0.0520, for about 5% more CPU per batch.
+        # lz4_raw saved only 4%; gzip matched zstd's size at more CPU. Each
+        # file's footer names its codec, so snappy targets read unchanged.
+        .config("spark.sql.parquet.compression.codec", "zstd")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

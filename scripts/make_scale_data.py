@@ -60,7 +60,7 @@ KEYED = {
 # from the domain's own values — max(col)+1 over every member column — not
 # from the host table's PK: events.user_id is its own domain, and reusing
 # the event_id stride would silently overlap replica user_id ranges if
-# max(user_id) ever exceeded max(event_id) (ADVICE r6).
+# max(user_id) ever exceeded max(event_id).
 DOMAIN_OF = {
     "c_custkey": "custkey", "o_custkey": "custkey",
     "s_suppkey": "suppkey", "l_suppkey": "suppkey",

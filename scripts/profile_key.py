@@ -1,6 +1,6 @@
 #!/usr/bin/env python
-"""Per-stage profile of one benched key (guide §1/§7: find WHERE time goes
-before changing anything). Runs the key exactly like bench.py (build, count
+"""Per-stage profile of one benched key (find WHERE time goes before
+changing anything). Runs the key exactly like bench.py (build, count
 warmup, timed noop sink) with the UI enabled, then reads the UI REST API
 for per-stage wall time, task count, input/shuffle bytes.
 

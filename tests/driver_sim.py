@@ -45,7 +45,7 @@ def main() -> int:
         unknown = wanted - set(q)
         if unknown:
             # a typo'd key list must not print "0/0 ok" and exit 0 — that
-            # reads as success on a debug/resume run (ADVICE r6)
+            # reads as success on a debug/resume run
             raise SystemExit(
                 f"SPARK_GRAFT_ONLY_KEYS names unknown keys: {sorted(unknown)}"
             )

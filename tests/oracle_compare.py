@@ -61,7 +61,8 @@ def oracle_type_offenders(con: duckdb.DuckDBPyConnection, sql: str) -> list:
     oracle's result to pandas, where DuckDB HUGEINT/UHUGEINT (the default
     SUM(int) output) and DECIMAL(38,*) become float64/object while Spark
     emits bigint — a value-hash mismatch invisible to fetchall()-based
-    local compares (r4 lesson: priority_line_counts, pack_sequences).
+    local compares (priority_line_counts and pack_sequences once failed
+    this way).
     Returns [(column, type)] for any top-level offender; oracles must CAST
     such columns to BIGINT/DOUBLE explicitly."""
     rows = con.execute(f"DESCRIBE {sql}").fetchall()

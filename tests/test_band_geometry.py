@@ -1,6 +1,6 @@
-"""Corpus-derived LSH band geometry for dedup_embedding_cosine (r7 — the
-r6-measured quadratic-candidate fix): the integer band_bits derivation is
-pinned at its boundaries, proven bit-identical to the oracle's
+"""Corpus-derived LSH band geometry for dedup_embedding_cosine (a fixed
+width made the candidate count quadratic in N): the integer band_bits
+derivation is pinned at its boundaries, proven bit-identical to the oracle's
 MIN-over-range SQL across a value sweep, and the detector is oracle-parity
 checked on a corpus large enough to actually trigger a wider-than-base
 geometry (the path sf0.001/sf0.01 never exercises).
@@ -178,7 +178,7 @@ def test_dedup_embedding_cosine_oracle_parity_at_wide_geometry(
 
 
 def test_scaled_band_bits_boundaries_and_sql_parity():
-    """The scaled detector's geometry (r8 — the fixed 24x12 banding
+    """The scaled detector's geometry (the fixed 24x12 banding
     spilled ~45 GB at sf10's 200 k vectors): same derivation as
     dedup_band_bits but floored at SCALED_BITS, so every corpus up to
     2^12*32 = 131 k vectors keeps the historical 12-bit geometry
@@ -220,7 +220,7 @@ def test_scaled_band_bits_properties(n):
     base derivation and the SCALED_BITS floor — so it inherits
     dedup_band_bits' bucket bound wherever the floor is not binding, is
     monotone non-decreasing, and never narrows below the production
-    geometry (the invariant the r8 fix relies on for ≤131 k-vector
+    geometry (the invariant the scaled geometry relies on for ≤131 k-vector
     bit-identity)."""
     from banking_etl_pipeline_spark.operators.dedup import dedup_band_bits
     from banking_etl_pipeline_spark.operators.lshscale import (
@@ -239,7 +239,8 @@ def test_scaled_band_bits_properties(n):
 
 
 # ---------------------------------------------------------------------------
-# semdedup two-level quantizer (r7 — the sf3-measured N×C assignment fix)
+# semdedup two-level quantizer (the flat N×C assignment, measured at sf3, is
+# quadratic once C grows with N)
 # ---------------------------------------------------------------------------
 
 
@@ -261,7 +262,8 @@ def test_semdedup_coarse_cells_boundaries():
     assert semdedup_coarse_cells(121) == 11   # perfect square
     assert semdedup_coarse_cells(122) == 12
     assert semdedup_coarse_cells(234) == 16   # the sf3 corpus (N=60k @ 256)
-    # saturation: past CAP^2 fine cells both engines stop at CAP (r8)
+    # saturation: past CAP^2 fine cells both engines stop at CAP, so the
+    # coarse grouping stays bounded however large the corpus grows
     assert semdedup_coarse_cells(SEMDEDUP_COARSE_CAP ** 2) \
         == SEMDEDUP_COARSE_CAP
     assert semdedup_coarse_cells(SEMDEDUP_COARSE_CAP ** 2 + 1) \
@@ -345,7 +347,7 @@ def test_semdedup_two_level_oracle_parity(spark, twolevel_corpus_dir):
     res = compare(spec.build(spark, twolevel_corpus_dir), con, spec.oracle)
     assert res["row_count_match"] and res["columns_match"] \
         and res["values_match"], res["detail"]
-    # row conservation (r8, ADVICE): every input vector must appear in the
+    # row conservation: every input vector must appear in the
     # output exactly once — the failure mode was a vector whose coarse
     # group owned zero fine cells vanishing with BOTH engines agreeing, so
     # parity alone can't catch it; the f2c self-map rows guarantee it.

@@ -64,7 +64,7 @@ def test_empty_universe_oracle_parity(spark, empty_dir):
     comparison, over a corpus where NULL-vs-0 aggregate edges and ANSI
     division-by-zero guards actually bite (this sweep found and pinned the
     approx_distinct/bloom_filter_probe 0/0 crashes and three NULL-vs-zero
-    edges in the round-4 to round-6 tiers)."""
+    edges in the operator tiers)."""
     import duckdb
 
     from tests.oracle_compare import TABLES as _T, compare

@@ -141,11 +141,10 @@ def test_delta_round_trip_or_pinned_skip(spark, tmp_path):
     """Exercise write_delta + MERGE end-to-end when delta-spark is on the
     classpath; otherwise pin the exact environment blocker as a skip.
 
-    Blocker in this sandbox (verified r2): no `delta` Python package, no
-    delta-spark/delta-core jar anywhere on disk, no ivy cache, and no
-    network or package installs permitted — so the jars cannot be fetched
-    via --packages either. The parquet stage→merge→atomic-swap path in
-    sinks/writers.py is the documented fallback and carries all merge
+    The usual blocker offline: no `delta` Python package, no
+    delta-spark/delta-core jar on disk and no ivy cache, so the jars cannot
+    be fetched via --packages either. The parquet stage→merge→atomic-swap
+    path in sinks/writers.py is the documented fallback and carries all merge
     coverage (test_cli_list_and_query, merge_upsert oracle)."""
     from banking_etl_pipeline_spark.sinks.writers import HAVE_DELTA, write_delta
 

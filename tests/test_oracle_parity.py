@@ -33,7 +33,8 @@ def test_compare_rejects_array_outputs(spark, sf_dir, con):
     """Driver-canonicalizer contract: a top-level array/map output column
     crashes the driver's pandas sort (unhashable 'list'), so compare() must
     reject it before the tuple-izing local comparison can mask the class
-    (the round-3 embedding_quantize / multimodal_features failure mode)."""
+    (embedding_quantize and multimodal_features once returned arrays and
+    passed local compares while failing the driver)."""
     df = spark.createDataFrame([(1, [1, 2])], "id int, xs array<int>")
     with pytest.raises(AssertionError, match="array/map"):
         compare(df, con, "SELECT 1 AS id, [1, 2] AS xs")

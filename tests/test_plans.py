@@ -248,7 +248,7 @@ def _unbounded_broadcast_explodes(plan: str) -> list[str]:
     relation between them, whose own input hits a FileScan before any
     bounding node. Catalyst keeps the pre-explode size estimate for
     Generate, so such a relation can slip under the broadcast threshold
-    locally while being ∝ corpus size — the r9 lm_score pathology
+    locally while being ∝ corpus size — the lm_score pathology
     (the exploded bigram FACT side broadcast at sf3: 8.0 s → 1.77 s once
     the stats side carried the explicit broadcast; at 100 TB it would
     have OOMed the build side). Bounded shapes stay legal: explode over
@@ -296,7 +296,7 @@ def _unbounded_broadcast_explodes(plan: str) -> list[str]:
 
 
 def test_no_unbounded_broadcast_explode_anywhere(spark, sf_dir, queries):
-    """Global invariant (r9): no query may broadcast an exploded fact-side
+    """Global invariant: no query may broadcast an exploded fact-side
     relation — every BroadcastExchange containing a Generate must explode
     over a bounded input (aggregate / Range dimension / persisted
     relation), never directly over a table scan."""
@@ -500,7 +500,7 @@ def test_bm25_no_python_no_explode_join(spark, sf_dir, queries):
 
 def test_basket_pairs_window_cap_then_equi(spark, sf_dir, queries):
     """The basket cap must plan as a count() window on the orderkey
-    partition (r9: was a size aggregate + semi join-back — one extra
+    partition (not a size aggregate + semi join-back — one extra
     shuffle and two extra evaluations of the deduped line list) and pair
     generation as an equi join on the order key — never a nested-loop
     pair product."""
@@ -513,7 +513,7 @@ def test_basket_pairs_window_cap_then_equi(spark, sf_dir, queries):
 
 def test_kmeans_argmin_group_limit(spark, sf_dir, queries):
     """The kmeans argmin is a rank-1 window with Spark's WindowGroupLimit
-    partial top-1 before the exchange (r9: was a groupBy-min + equality
+    partial top-1 before the exchange (not a groupBy-min + equality
     join-back that evaluated and shuffled the N×K scored stream twice —
     measured 4× slower at sf0.1)."""
     for key in ("kmeans_assign", "kmeans_update"):
@@ -524,7 +524,8 @@ def test_kmeans_argmin_group_limit(spark, sf_dir, queries):
 
 def test_gap_fill_no_join(spark, sf_dir, queries):
     """gap_fill carries locf through ONE lead() window + explode — the
-    spine join and the second (locf) window must stay gone (r9)."""
+    spine join and the second (locf) window must stay gone: each re-adds a
+    shuffle over the whole series."""
     p = plan_of(_build(queries, spark, sf_dir, "gap_fill"))
     assert "Join" not in p
     assert "Generate" in p  # the span explode
@@ -728,7 +729,7 @@ def test_top_paths_prefix_bounded_one_user_exchange(spark, sf_dir, queries):
 
 
 # ---------------------------------------------------------------------------
-# Round-3 pins for the scale-critical shapes the r2 review praised in prose:
+# Pins for the scale-critical shapes:
 # each test freezes the property that makes the operator survive 100 TB, so
 # a refactor can't silently regress it. (Formatted plans put Exchange args
 # on their own line — match 'hashpartitioning(' / 'rangepartitioning(',
@@ -761,7 +762,7 @@ def test_single_exchange_aggregation_ops(spark, sf_dir, queries):
         p = plan_of(_build(queries, spark, sf_dir, key))
         if "InMemoryTableScan" in p:
             # the aggregate rides a session-persisted shared relation
-            # (r9: heavy_hitters shares cms_topk's token-frequency table);
+            # (heavy_hitters shares cms_topk's token-frequency table);
             # any hashpartitioning in the text is the cached relation's
             # BUILD lineage, not a per-run shuffle
             continue

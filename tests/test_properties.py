@@ -483,7 +483,7 @@ def test_md5_long_cross_engine(spark, ss):
 @settings(**SETTINGS)
 def test_integer_div_mod_cross_engine(spark, pairs):
     """Spark `div`/`%` vs DuckDB `//`/`%`: BOTH truncate toward zero —
-    including negatives (the corrected model from ADVICE r2). Every
+    including negatives (neither floors, as a Python model would). Every
     closed-form date/bucket/quantile formula in the repo assumes this."""
     df = spark.createDataFrame(
         [(i, a, b) for i, (a, b) in enumerate(pairs)],
@@ -901,7 +901,7 @@ def test_distributed_prefix_sum_null_semantics(spark, vals):
     min_size=1, max_size=60))
 @settings(**SETTINGS)
 def test_distributed_row_number_is_long_and_exact(spark, rows):
-    """ADVICE r4 regression pin: the global rank column is LongType (an
+    """Regression pin: the global rank column is LongType (an
     int rank wraps past 2.15 B rows) and matches the enumeration of the
     total order exactly, across partition layouts."""
     from banking_etl_pipeline_spark.functions.ranks import (

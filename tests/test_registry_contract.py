@@ -78,7 +78,7 @@ def test_every_query_has_an_oracle():
 
 
 def test_no_oracle_emits_hugeint(sf_dir):
-    """r4 driver lesson (priority_line_counts, pack_sequences): DuckDB
+    """priority_line_counts and pack_sequences once failed this way: DuckDB
     SUM(int)→HUGEINT and DECIMAL(38,*) pandas-convert to float64/object
     while Spark emits bigint — invisible to fetchall() compares, fails the
     driver's value hash. DESCRIBE every oracle and reject those types at
@@ -98,9 +98,8 @@ def test_no_oracle_emits_hugeint(sf_dir):
 
 
 def test_r6_registration_landed():
-    """The round-6 registrations: the eleven r4/r5 tiers plus the two tiers
-    built that round (planner, lshscale) are all in the registry (276
-    keys), each spec complete."""
+    """Every operator tier, planner and lshscale included, is in the
+    registry (276 keys), each spec complete."""
     merged = all_queries()
     assert len(merged) == 276
     for key in ("substring_dup_coverage", "pq_encode", "shard_assignment",
