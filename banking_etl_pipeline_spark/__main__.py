@@ -6,11 +6,13 @@ Two modes:
 
 - ``--config cfg.json``: run a reference-shaped config
   (`config/config.json:23-86` ports unedited through
-  :func:`pipeline.load_config`).
-- ``--demo``: seed the banking entities (deterministic distributed seed,
-  `domain/seed.py`) into a temp raw zone as CSV, synthesize the matching
-  config, and run all three pipelines end-to-end into a parquet warehouse —
-  the smoke run the reference's seed + main.py pair performs.
+  :func:`pipeline.load_config`). A config with a ``redshift`` target
+  needs ``--warehouse-dir``, the root its tables are published under.
+- ``--demo``: seed the three entities the pipelines read (deterministic
+  distributed seed, `domain/seed.py`) into a temp raw zone as CSV,
+  synthesize the matching config, and run all three pipelines end-to-end
+  into parquet under the same temp dir, which is removed on exit — the
+  smoke run the reference's seed + main.py pair performs.
 - ``--query KEY [--sf-dir DIR] [--limit N] [--explain]``: run any
   registered analytic query from the SURVEY §2 inventory against a table
   directory and print the result (or its physical plan). ``--list``
@@ -33,8 +35,10 @@ from .session import get_spark
 from .sinks.writers import ParquetWarehouse, write_csv
 
 
+_DEMO_ENTITIES = ("customer", "account", "transaction")
+
+
 def _demo_config(raw_dir: str, out_dir: str) -> dict:
-    entities = ("customer", "account", "transaction")
     return {
         "pipelines": {
             e: {
@@ -55,7 +59,7 @@ def _demo_config(raw_dir: str, out_dir: str) -> dict:
                     "key_columns": [f"{e}_id"],
                 },
             }
-            for e in entities
+            for e in _DEMO_ENTITIES
         }
     }
 
@@ -73,7 +77,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--demo", action="store_true",
                     help="seed demo banking data and run all pipelines")
     ap.add_argument("--warehouse-dir", help="parquet warehouse root "
-                    "(default: temp dir)")
+                    "(required by a config with a redshift target)")
     ap.add_argument("--query", help="run one registered query by key")
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01",
                     help="table directory for --query")
@@ -119,27 +123,29 @@ def main(argv: list[str] | None = None) -> int:
 
     if not args.config and not args.demo:
         ap.error("one of --config, --demo, --query or --list is required")
+    wanted = args.pipelines.split(",") if args.pipelines else None
+    specs = [] if args.demo else load_config(args.config)
+    if not args.warehouse_dir and any(
+            s.target.kind == "warehouse"
+            and (wanted is None or s.entity in wanted) for s in specs):
+        ap.error("--warehouse-dir is required: the config loads warehouse "
+                 "tables")
 
     from pyspark.sql import SparkSession
 
     owns_session = SparkSession.getActiveSession() is None
     spark = get_spark(app_name="banking-etl-pipeline")
-    tmp = tempfile.mkdtemp(prefix="betl_")
     try:
-        if args.demo:
-            data = seed_all(spark, num_customers=200, num_accounts=300,
-                            num_transactions=3000)
-            for name, df in data.items():
-                write_csv(df, f"{tmp}/raw/{name}")
-            cfg = _demo_config(f"{tmp}/raw", f"{tmp}/out")
-            specs = load_config(cfg)
-        else:
-            specs = load_config(args.config)
-        wanted = args.pipelines.split(",") if args.pipelines else None
-        warehouse = ParquetWarehouse(
-            spark, args.warehouse_dir or f"{tmp}/warehouse"
-        )
-        results = run_all(spark, specs, warehouse, wanted)
+        warehouse = (ParquetWarehouse(spark, args.warehouse_dir)
+                     if args.warehouse_dir else None)
+        with tempfile.TemporaryDirectory(prefix="betl_") as tmp:
+            if args.demo:
+                data = seed_all(spark, num_customers=200, num_accounts=300,
+                                num_transactions=3000)
+                for e in _DEMO_ENTITIES:
+                    write_csv(data[f"{e}s"], f"{tmp}/raw/{e}s")
+                specs = load_config(_demo_config(f"{tmp}/raw", f"{tmp}/out"))
+            results = run_all(spark, specs, warehouse, wanted)
         ok = True
         for entity, res in results.items():
             passed = bool(res.quality.get("overall_passed", True))

@@ -82,15 +82,6 @@ class QualityChecker:
         # one job
         return df.agg(self.duplicate_count_expr(key_columns)).collect()[0][0]
 
-    def orphan_count(
-        self, fk_df: DataFrame, fk_col: str, pk_df: DataFrame, pk_col: str
-    ) -> int:
-        # distinct FK projection then anti-join ≅ data_quality.py:137-147;
-        # distinct-before-join shrinks both shuffle sides.
-        fks = fk_df.select(F.col(fk_col).alias("fk")).distinct()
-        pks = pk_df.select(F.col(pk_col).alias("fk")).distinct()
-        return fks.join(pks, "fk", "left_anti").count()
-
     def run_all_checks(self, df: DataFrame, config: QualityConfig) -> dict[str, Any]:
         exprs = [F.count(F.lit(1)).alias("total_rows")]
         exprs += self.null_check_exprs(config.required_columns)

@@ -42,7 +42,7 @@ from .operators.quality import (
     apply_quality_gate,
 )
 from .sinks.writers import ParquetWarehouse, Staged, stage_partitioned
-from .sources.readers import read_csv, read_jdbc, read_parquet
+from .sources.readers import read_csv, read_jdbc
 
 TRANSFORMS: dict[str, Callable[[DataFrame], DataFrame]] = {
     "customer": transform_customers,
@@ -74,8 +74,8 @@ class SourceSpec:
             return read_csv(spark, self.path, schema=self.schema,
                             infer_schema=self.schema is None)
         if self.kind == "parquet":
-            return read_parquet(spark, self.path)
-        if self.kind in ("jdbc", "rds"):
+            return spark.read.parquet(self.path)
+        if self.kind == "jdbc":
             return read_jdbc(spark, self.jdbc_url, self.table)
         raise ValueError(f"Unsupported source type: {self.kind}")
 
@@ -129,15 +129,14 @@ def run_pipeline(spark: SparkSession, spec: PipelineSpec,
     A CSV source without a schema reads with the entity's
     ``RAW_CSV_SCHEMAS`` entry, so the CSV is scanned once, by the stage write,
     and no inference job runs."""
+    transform = TRANSFORMS.get(spec.entity)
+    if transform is None:  # before the read: it may start a job
+        raise ValueError(f"No transform registered for entity {spec.entity!r}")
     source = spec.source
     if (source.kind == "csv" and source.schema is None
             and spec.entity in RAW_CSV_SCHEMAS):
         source = replace(source, schema=RAW_CSV_SCHEMAS[spec.entity])
-    raw = source.read(spark)
-    transform = TRANSFORMS.get(spec.entity)
-    if transform is None:
-        raise ValueError(f"No transform registered for entity {spec.entity!r}")
-    transformed = transform(raw)
+    transformed = transform(source.read(spark))
     staged = spec.target.write(transformed, warehouse, spec.key_columns)
     try:
         result = QualityChecker().run_all_checks(staged.rows, spec.quality)

@@ -1,8 +1,2 @@
-from .writers import (  # noqa: F401
-    ParquetWarehouse,
-    merge_upsert,
-    write_csv,
-    write_delta,
-    write_jdbc,
-    write_partitioned,
-)
+"""Sinks: ``writers`` holds the raw-zone CSV writer and the staged batch
+commit that every target write goes through."""

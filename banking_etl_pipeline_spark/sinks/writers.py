@@ -1,16 +1,15 @@
-"""Sinks: CSV / partitioned-columnar / JDBC writers and the batch commit.
+"""Sinks: the raw-zone CSV writer and the batch commit.
 
 Covers the reference's sink surface (SURVEY.md §2.2):
 
 - K1 CSV write ≅ reference `src/seed/data_seed.py:241-243`.
-- K2 JDBC write with mode + pre/postactions ≅
-  `src/loading/readshift_loader.py:27-66` (kept behind an interface — no
-  warehouse exists in the test env; validation is the option dict).
-- K3 staged upsert ≅ `readshift_loader.py:68-149` and K4 partitioned
-  append ≅ `S3Loader.write_delta` (`main.py:138-143`) share one commit:
-  write the batch once to `_staging` under the target, audit those files
-  (`Staged.rows`), then publish by rename. A failed gate or a crash leaves
-  the target as it was; a retried batch lands once.
+- K3 the Redshift staged upsert ≅ `readshift_loader.py:68-149` and K4 the
+  partitioned append ≅ `S3Loader.write_delta` (`main.py:138-143`) share
+  one commit, the only way a batch reaches a target: write the batch once
+  to `_staging` under the target, audit those files (`Staged.rows`), then
+  publish by rename. A failed gate or a crash leaves the target as it
+  was; a retried batch lands once. Both run on local parquet: there is no
+  Delta or JDBC write.
 """
 
 from __future__ import annotations
@@ -18,7 +17,6 @@ from __future__ import annotations
 import contextlib
 import glob
 import hashlib
-import importlib.util
 import os
 import shutil
 import uuid
@@ -29,50 +27,11 @@ from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
-# delta-spark is optional; parquet is the default columnar format
-HAVE_DELTA = importlib.util.find_spec("delta") is not None
-
 
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite",
               header: bool = True) -> None:
     """K1: raw-zone CSV write (data_seed.py:241-243)."""
     df.write.mode(mode).option("header", str(header).lower()).csv(path)
-
-
-def write_partitioned(df: DataFrame, path: str, mode: str = "append",
-                      partition_cols: Sequence[str] = (),
-                      fmt: str = "parquet") -> None:
-    """K4: partitioned columnar write (main.py:201-206 / config.json:69-70).
-
-    Partitioning by low-cardinality date parts (transaction_year/month) gives
-    free partition pruning to every downstream date-bounded scan.
-    """
-    writer = df.write.format(fmt).mode(mode)
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.save(path)
-
-
-def write_delta(df: DataFrame, path: str, mode: str = "append",
-                partition_cols: Sequence[str] = ()) -> None:
-    """K4 in delta format when delta-spark is available."""
-    if not HAVE_DELTA:
-        raise NotImplementedError("delta-spark not installed in this environment")
-    write_partitioned(df, path, mode, partition_cols, fmt="delta")
-
-
-def write_jdbc(df: DataFrame, url: str, table: str, mode: str = "append",
-               properties: dict[str, str] | None = None,
-               dry_run: bool = False) -> dict[str, str]:
-    """K2: JDBC write ≅ readshift_loader.py:27-66. Returns the resolved
-    option dict; `dry_run=True` (the only mode exercisable here — no
-    warehouse in the test env) skips the save call."""
-    if mode not in ("append", "overwrite", "error"):
-        raise ValueError(f"Invalid write mode: {mode}")
-    opts = {"url": url, "dbtable": table, **(properties or {})}
-    if not dry_run:  # pragma: no cover - needs a live warehouse
-        df.write.format("jdbc").mode(mode).options(**opts).save()
-    return opts
 
 
 def merge_upsert(target: DataFrame, updates: DataFrame,
@@ -117,7 +76,9 @@ def _batch_id(df: DataFrame) -> str:
 def _staged(df: DataFrame, stage: str, commit: Callable[[DataFrame], None],
             partition_cols: Sequence[str] = ()) -> Staged:
     """Write ``df`` to ``stage`` once; publishing runs ``commit(rows)``."""
-    write_partitioned(df, stage, "overwrite", partition_cols)
+    # partitioning by low-cardinality date parts (transaction_year/month)
+    # prunes every downstream date-bounded scan
+    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(stage)
     # df's schema also keeps partition values in their types
     rows = df.sparkSession.read.schema(df.schema).parquet(stage)
 

@@ -1,9 +1,2 @@
-from .readers import (  # noqa: F401
-    read_csv,
-    read_delta,
-    read_jdbc,
-    read_json,
-    read_orc,
-    read_parquet,
-    read_text,
-)
+"""Sources: ``readers`` (CSV and JDBC reads) and ``scan_queries`` (the
+registry's format-scan queries)."""

@@ -2,7 +2,7 @@
 
 CSV and text scans need CSV/text *inputs*; the testdata is parquet-only, so
 each scan query first materializes a deterministic CSV/text copy of a small
-table under /tmp (cached per sf_dir), reads it back through the engine's
+table under /tmp (cached per sf_dir), reads it back through Spark's
 reader, and the oracle reads the original parquet view — a true round-trip
 equivalence check of the format reader, not a mock.
 """
@@ -15,14 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import table
 from ..spec import QuerySpec
-from .readers import (
-    read_csv,
-    read_json,
-    read_orc,
-    read_parquet,
-    read_parquet_evolved,
-    read_text,
-)
+from .readers import read_csv
 
 _CACHE_ROOT = "/tmp/banking_etl_pipeline_spark_cache"
 
@@ -48,7 +41,7 @@ SCAN_CSV_SQL = "SELECT r_regionkey, r_name FROM region"
 
 
 def scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return read_parquet(spark, os.path.join(sf_dir, "nation.parquet"))
+    return spark.read.parquet(os.path.join(sf_dir, "nation.parquet"))
 
 
 SCAN_PARQUET_SQL = "SELECT n_nationkey, n_name, n_regionkey FROM nation"
@@ -61,7 +54,7 @@ def scan_text(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "documents").select("text").coalesce(1).write.mode(
             "overwrite"
         ).text(path)
-    return read_text(spark, path)
+    return spark.read.text(path)
 
 
 SCAN_TEXT_SQL = "SELECT text AS value FROM documents"
@@ -73,9 +66,9 @@ def scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _cache_dir(sf_dir, "nation_json")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         table(spark, sf_dir, "nation").coalesce(1).write.mode("overwrite").json(path)
-    return read_json(
-        spark, path, schema="n_nationkey long, n_name string, n_regionkey long"
-    ).select("n_nationkey", "n_name", "n_regionkey")
+    return spark.read.schema(
+        "n_nationkey long, n_name string, n_regionkey long"
+    ).json(path).select("n_nationkey", "n_name", "n_regionkey")
 
 
 SCAN_JSON_SQL = "SELECT n_nationkey, n_name, n_regionkey FROM nation"
@@ -87,7 +80,7 @@ def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _cache_dir(sf_dir, "region_orc")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         table(spark, sf_dir, "region").coalesce(1).write.mode("overwrite").orc(path)
-    return read_orc(spark, path)
+    return spark.read.orc(path)
 
 
 SCAN_ORC_SQL = "SELECT r_regionkey, r_name FROM region"
@@ -114,8 +107,11 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.filter("c_custkey % 2 = 1").select(
             "c_custkey", "c_name", cents(F.col("c_acctbal")).alias("bal_c")
         ).write.mode("overwrite").parquet(os.path.join(path, "gen2"))
-    return read_parquet_evolved(
-        spark, os.path.join(path, "gen1"), os.path.join(path, "gen2")
+    # merging the generations' footers is metadata work at planning; the
+    # scans stay columnar and pruned (a column absent from a file reads as
+    # null with no IO for that file)
+    return spark.read.option("mergeSchema", "true").parquet(
+        os.path.join(path, "gen1"), os.path.join(path, "gen2")
     ).select("c_custkey", "c_name", "bal_c")
 
 

@@ -73,37 +73,33 @@ def sf_dir():
     return SF_ORACLE
 
 
-def build_empty_universe(spark, sf_dir,
-                         path="/tmp/banking_etl_pipeline_spark_empty"):
-    """Empty tables with production schemas (shared with
-    test_empty_inputs.py — same path, same _DONE marker)."""
+@pytest.fixture(scope="session")
+def empty_dir(spark, sf_dir, tmp_path_factory):
+    """Empty tables with the production schemas, written once per run."""
     from banking_etl_pipeline_spark.catalog import TABLES, table
-    if not os.path.exists(os.path.join(path, "_DONE")):
-        for t in TABLES:
-            table(spark, sf_dir, t).limit(0).write.mode("overwrite").parquet(
-                os.path.join(path, f"{t}.parquet")
-            )
-        open(os.path.join(path, "_DONE"), "w").close()
-    return path
+
+    path = tmp_path_factory.mktemp("empty_universe")
+    for t in TABLES:
+        table(spark, sf_dir, t).limit(0).write.parquet(
+            str(path / f"{t}.parquet"))
+    return str(path)
 
 
-def build_skewed_universe(spark, sf_dir,
-                          path="/tmp/banking_etl_pipeline_spark_skewed_v2"):
-    """One hot key per table (shared with test_skewed_inputs.py)."""
+@pytest.fixture(scope="session")
+def skew_dir(spark, sf_dir, tmp_path_factory):
+    """The tables with one hot key each, written once per run."""
     from pyspark.sql import functions as F
 
     from banking_etl_pipeline_spark.catalog import TABLES, table
-    if not os.path.exists(os.path.join(path, "_DONE")):
-        for t in TABLES:
-            df = table(spark, sf_dir, t)
-            if t == "events":
-                df = df.withColumn("user_id", F.lit(1).cast("long"))
-            elif t == "orders":
-                df = df.withColumn("o_custkey", F.lit(1).cast("long"))
-            elif t == "documents":
-                df = df.withColumn("lang", F.lit("en"))
-            df.write.mode("overwrite").parquet(
-                os.path.join(path, f"{t}.parquet")
-            )
-        open(os.path.join(path, "_DONE"), "w").close()
-    return path
+
+    path = tmp_path_factory.mktemp("skewed_universe")
+    for t in TABLES:
+        df = table(spark, sf_dir, t)
+        if t == "events":
+            df = df.withColumn("user_id", F.lit(1).cast("long"))
+        elif t == "orders":
+            df = df.withColumn("o_custkey", F.lit(1).cast("long"))
+        elif t == "documents":
+            df = df.withColumn("lang", F.lit("en"))
+        df.write.parquet(str(path / f"{t}.parquet"))
+    return str(path)

@@ -8,17 +8,12 @@ from __future__ import annotations
 import importlib.util
 import os
 import sys
-from collections import Counter
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from banking_etl_pipeline_spark.session import get_spark  # noqa: E402
-from tests.oracle_compare import (  # noqa: E402
-    _norm,
-    duck_connection,
-    oracle_type_offenders,
-)
+from tests.oracle_compare import compare, duck_connection  # noqa: E402
 
 
 def main() -> int:
@@ -50,44 +45,24 @@ def main() -> int:
                 f"SPARK_GRAFT_ONLY_KEYS names unknown keys: {sorted(unknown)}"
             )
         q = {k: v for k, v in q.items() if k in wanted}
-    from pyspark.sql.types import ArrayType, MapType
-
     bad = []
     for key, fn in q.items():
-        sdf = fn(spark, sf)
-        # driver-fidelity guard: the driver pandas-sorts result columns and
-        # crashes on unhashable cells — a top-level array/map column is an
-        # error here even though tuple-ized rows would compare fine locally
-        arr_cols = [f.name for f in sdf.schema.fields
-                    if isinstance(f.dataType, (ArrayType, MapType))]
-        if arr_cols:
-            print(f"{key}: ERR array/map output columns {arr_cols}")
-            bad.append(key)
-            continue
-        srows = [
-            tuple(_norm(r[c]) for c in sorted(r.asDict())) for r in sdf.collect()
-        ]
         if key not in osql:
             print(f"{key}: ERR no oracle in oracle_sql()")
             bad.append(key)
             continue
-        # driver-fidelity guard 2: the driver pandas-converts the oracle
-        # result, where HUGEINT/DECIMAL(38) become float64/object vs Spark
-        # bigint — fetchall() compares exact ints so only DESCRIBE sees it
-        bad_types = oracle_type_offenders(con, osql[key])
-        if bad_types:
-            print(f"{key}: ERR oracle HUGEINT/DECIMAL38 columns {bad_types}")
+        try:
+            res = compare(fn(spark, sf), con, osql[key])
+        except AssertionError as exc:
+            # compare's guards: a top-level array/map output column
+            # or a HUGEINT/DECIMAL(38) oracle column
+            print(f"{key}: ERR {exc}")
             bad.append(key)
             continue
-        cur = con.execute(osql[key])
-        names = [d[0] for d in cur.description]
-        cols = sorted(names)
-        drows = [
-            tuple(_norm(dict(zip(names, row))[c]) for c in cols)
-            for row in cur.fetchall()
-        ]
-        ok = Counter(srows) == Counter(drows) and sorted(sdf.columns) == cols
-        print(f"{key}: {'OK' if ok else 'MISMATCH'} ({len(srows)} rows)")
+        ok = res["columns_match"] and res["values_match"]
+        detail = "" if ok else f" {res['detail']}"
+        print(f"{key}: {'OK' if ok else 'MISMATCH'} "
+              f"({res['spark_rows']} rows){detail}")
         if not ok:
             bad.append(key)
     print(f"summary: {len(q) - len(bad)}/{len(q)} ok; mismatched: {bad}")

@@ -78,22 +78,16 @@ def test_lang_coverage_bounds(spark, sf_dir):
         assert 0.0 <= r["coverage"] <= 1.0
 
 
-def test_bitext_empty_universe(spark, sf_dir):
-    from tests.conftest import build_empty_universe
-
-    empty = build_empty_universe(spark, sf_dir)
+def test_bitext_empty_universe(spark, empty_dir):
     for key, spec in QUERIES.items():
-        df = spec.build(spark, empty)
+        df = spec.build(spark, empty_dir)
         assert len(df.schema) > 0, key
         assert df.count() >= 0, key
 
 
-def test_bitext_hot_key(spark, sf_dir):
-    from tests.conftest import build_skewed_universe
-
-    skew = build_skewed_universe(spark, sf_dir)
+def test_bitext_hot_key(spark, skew_dir):
     for key, spec in QUERIES.items():
-        assert spec.build(spark, skew).count() >= 0, key
+        assert spec.build(spark, skew_dir).count() >= 0, key
 
 
 def test_bitext_repeat_deterministic(spark, sf_dir):

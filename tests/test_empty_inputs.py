@@ -14,23 +14,11 @@ pipeline (generates its own input).
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
-from banking_etl_pipeline_spark.catalog import TABLES, table
 from banking_etl_pipeline_spark.registry import all_queries
 
-_EMPTY_DIR = "/tmp/banking_etl_pipeline_spark_empty"
-
 _SKIP = {"banking_txn_pipeline"}  # self-seeding; no table inputs
-
-
-@pytest.fixture(scope="module")
-def empty_dir(spark, sf_dir):
-    from tests.conftest import build_empty_universe
-
-    return build_empty_universe(spark, sf_dir, _EMPTY_DIR)
 
 
 _KEYS = [

@@ -13,8 +13,8 @@ from banking_etl_pipeline_spark.pipeline import (
     TargetSpec,
     run_pipeline,
 )
-from banking_etl_pipeline_spark.sinks.writers import write_csv, write_jdbc, write_partitioned
-from banking_etl_pipeline_spark.sources.readers import read_csv, read_parquet
+from banking_etl_pipeline_spark.sinks.writers import stage_partitioned, write_csv
+from banking_etl_pipeline_spark.sources.readers import read_csv
 from tests.conftest import SF_SMALL
 
 
@@ -31,22 +31,12 @@ def test_partitioned_write_prunes(spark, tmp_path):
     df = spark.createDataFrame(
         [(1, "2025", "x"), (2, "2026", "y")], "id int, yr string, v string")
     path = str(tmp_path / "part")
-    write_partitioned(df, path, mode="overwrite", partition_cols=["yr"])
-    back = read_parquet(spark, path).filter(F.col("yr") == "2025")
-    # partition pruning: only the matching partition directory is scanned
+    stage_partitioned(df, path, "overwrite", ["yr"]).publish()
+    back = spark.read.parquet(path).filter(F.col("yr") == "2025")
+    # partition pruning: only the matching published partition is scanned
     from banking_etl_pipeline_spark.plans import plan_of
     assert back.count() == 1
     assert "PartitionFilters: [isnotnull(yr" in plan_of(back)
-
-
-def test_jdbc_writer_interface():
-    df = None  # dry-run never touches the DataFrame
-    opts = write_jdbc(df, "jdbc:postgresql://wh/db", "t", mode="append",
-                      properties={"user": "u"}, dry_run=True)
-    assert opts == {"url": "jdbc:postgresql://wh/db", "dbtable": "t", "user": "u"}
-    with pytest.raises(ValueError):
-        write_jdbc(df, "jdbc:postgresql://wh/db", "t", mode="upsert",
-                   dry_run=True)
 
 
 def test_sql_door(spark):
@@ -88,15 +78,19 @@ def test_quality_gate_fail_open(spark):
     assert result.output is not None             # …but not fatal
 
 
-def test_cli_demo_runs_all_pipelines(spark, capsys):
+def test_cli_demo_runs_all_pipelines(spark, capsys, monkeypatch, tmp_path):
     """`python -m banking_etl_pipeline_spark --demo` ≅ the reference's
     seed + main.py smoke run: all three entity pipelines pass their gates
-    and the CLI reports one JSON line per entity (main.py:305-311)."""
+    and the CLI reports one JSON line per entity (main.py:305-311). Its
+    temp dir, raw zone and outputs included, is gone when it returns."""
     import json as _json
+    import tempfile
 
     from banking_etl_pipeline_spark.__main__ import main
 
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     rc = main(["--demo"])
+    assert list(tmp_path.iterdir()) == []
     out = [
         _json.loads(line)
         for line in capsys.readouterr().out.strip().splitlines()
@@ -131,33 +125,18 @@ def test_cli_list_and_query(spark, sf_dir, capsys):
     assert main(["--query", "nope_not_a_key"]) == 2
 
 
-# ---------------------------------------------------------------------------
-# Delta Lake runtime path (reference parity: spark_session.py:19-20,
-# main.py:201-206 configure Delta as the primary table format)
-# ---------------------------------------------------------------------------
+def test_cli_warehouse_target_needs_warehouse_dir(tmp_path):
+    """A redshift target publishes warehouse tables; without
+    --warehouse-dir they would have no home, so the CLI refuses the run
+    before it starts a session."""
+    import json as _json
 
+    from banking_etl_pipeline_spark.__main__ import main
 
-def test_delta_round_trip_or_pinned_skip(spark, tmp_path):
-    """Exercise write_delta + MERGE end-to-end when delta-spark is on the
-    classpath; otherwise pin the exact environment blocker as a skip.
-
-    The usual blocker offline: no `delta` Python package, no
-    delta-spark/delta-core jar on disk and no ivy cache, so the jars cannot
-    be fetched via --packages either. The parquet stage→merge→atomic-swap
-    path in sinks/writers.py is the documented fallback and carries all merge
-    coverage (test_cli_list_and_query, merge_upsert oracle)."""
-    from banking_etl_pipeline_spark.sinks.writers import HAVE_DELTA, write_delta
-
-    if not HAVE_DELTA:
-        with pytest.raises(NotImplementedError):
-            write_delta(spark.range(3), str(tmp_path / "d"))
-        pytest.skip(
-            "delta-spark jars absent and uninstallable in this sandbox "
-            "(no network / no pip); parquet atomic-swap fallback is the "
-            "tested path"
-        )
-
-    df = spark.range(5).withColumnRenamed("id", "k")
-    write_delta(df, str(tmp_path / "d"), mode="overwrite")
-    got = spark.read.format("delta").load(str(tmp_path / "d"))
-    assert got.count() == 5
+    cfg = tmp_path / "config.json"
+    cfg.write_text(_json.dumps({"pipelines": {"customer": {
+        "source_path": str(tmp_path / "raw"), "target_type": "redshift",
+        "target_table": "dim_customer"}}}))
+    with pytest.raises(SystemExit) as exc:
+        main(["--config", str(cfg)])
+    assert exc.value.code == 2

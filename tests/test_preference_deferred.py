@@ -88,22 +88,16 @@ def test_gap_report_bounds(spark, sf_dir):
         assert GAP6_T <= r["min_gap6"] <= r["mean_gap6"] <= r["max_gap6"]
 
 
-def test_preference_empty_universe(spark, sf_dir):
-    from tests.conftest import build_empty_universe
-
-    empty = build_empty_universe(spark, sf_dir)
+def test_preference_empty_universe(spark, empty_dir):
     for key, spec in QUERIES.items():
-        df = spec.build(spark, empty)
+        df = spec.build(spark, empty_dir)
         assert len(df.schema) > 0, key
         assert df.count() >= 0, key
 
 
-def test_preference_hot_key(spark, sf_dir):
-    from tests.conftest import build_skewed_universe
-
-    skew = build_skewed_universe(spark, sf_dir)
+def test_preference_hot_key(spark, skew_dir):
     for key, spec in QUERIES.items():
-        assert spec.build(spark, skew).count() >= 0, key
+        assert spec.build(spark, skew_dir).count() >= 0, key
 
 
 def test_preference_repeat_deterministic(spark, sf_dir):

@@ -15,7 +15,12 @@ from pyspark.sql import functions as F
 from banking_etl_pipeline_spark.domain.customers import transform_customers
 from banking_etl_pipeline_spark.domain.schemas import RAW_CSV_SCHEMAS
 from banking_etl_pipeline_spark.domain.seed import seed_all
-from banking_etl_pipeline_spark.pipeline import SourceSpec
+from banking_etl_pipeline_spark.pipeline import (
+    PipelineSpec,
+    SourceSpec,
+    TargetSpec,
+    run_pipeline,
+)
 from banking_etl_pipeline_spark.sinks.writers import write_csv
 
 SEEDED = {"customer": "customers", "account": "accounts",
@@ -92,6 +97,23 @@ def test_pinned_read_starts_no_job(spark, raw_zone):
         sc.setJobGroup("raw-csv-inferred", "inferred read")
         _inferred(spark, raw_zone["transaction"])
         assert tracker.getJobIdsForGroup("raw-csv-inferred")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+
+def test_unknown_entity_raises_before_read(spark, raw_zone):
+    """An entity with no transform and no pinned schema fails before its
+    source is read, so no inference job runs for a batch that cannot load."""
+    spec = PipelineSpec("merchant", SourceSpec("csv", path=raw_zone["account"]),
+                        TargetSpec("none"))
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("unknown-entity", "unknown entity")
+        with pytest.raises(ValueError, match="No transform"):
+            run_pipeline(spark, spec)
+        assert sc.statusTracker().getJobIdsForGroup("unknown-entity") == []
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)

@@ -11,16 +11,12 @@ correctness never depended on key spread.
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
 from pyspark.sql import functions as F
 
-from banking_etl_pipeline_spark.catalog import TABLES, table
 from banking_etl_pipeline_spark.registry import all_queries
 
-_SKEW_DIR = "/tmp/banking_etl_pipeline_spark_skewed_v2"
 
 # key-partitioned operators that must survive a single hot key
 _KEYS = [
@@ -51,13 +47,6 @@ _KEYS = [
     "mixture_plan",
     "curation_funnel_v2",
 ]
-
-
-@pytest.fixture(scope="module")
-def skew_dir(spark, sf_dir):
-    from tests.conftest import build_skewed_universe
-
-    return build_skewed_universe(spark, sf_dir, _SKEW_DIR)
 
 
 @pytest.mark.parametrize("key", _KEYS)

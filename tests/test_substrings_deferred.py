@@ -91,22 +91,16 @@ def test_memorization_risk_flags(spark, sf_dir):
         assert r["max_doc_freq"] >= 1 and r["windows_at_max"] >= 1
 
 
-def test_substrings_empty_universe(spark, sf_dir):
-    from tests.conftest import build_empty_universe
-
-    empty = build_empty_universe(spark, sf_dir)
+def test_substrings_empty_universe(spark, empty_dir):
     for key, spec in QUERIES.items():
-        df = spec.build(spark, empty)
+        df = spec.build(spark, empty_dir)
         assert len(df.schema) > 0, key
         assert df.count() >= 0, key
 
 
-def test_substrings_hot_key(spark, sf_dir):
-    from tests.conftest import build_skewed_universe
-
-    skew = build_skewed_universe(spark, sf_dir)
+def test_substrings_hot_key(spark, skew_dir):
     for key, spec in QUERIES.items():
-        assert spec.build(spark, skew).count() >= 0, key
+        assert spec.build(spark, skew_dir).count() >= 0, key
 
 
 def test_substrings_repeat_deterministic(spark, sf_dir):

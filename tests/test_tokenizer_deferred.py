@@ -93,19 +93,13 @@ def test_tokenizer_repeat_deterministic(spark, sf_dir):
         assert sets[0] == sets[1], f"{key}: nondeterministic across builds"
 
 
-def test_tokenizer_empty_universe(spark, sf_dir):
-    from tests.conftest import build_empty_universe
-
-    empty = build_empty_universe(spark, sf_dir)
+def test_tokenizer_empty_universe(spark, empty_dir):
     for key, spec in QUERIES.items():
-        df = spec.build(spark, empty)
+        df = spec.build(spark, empty_dir)
         assert len(df.schema) > 0, key
         assert df.count() >= 0, key
 
 
-def test_tokenizer_hot_language(spark, sf_dir):
-    from tests.conftest import build_skewed_universe
-
-    skew = build_skewed_universe(spark, sf_dir)
+def test_tokenizer_hot_language(spark, skew_dir):
     for key, spec in QUERIES.items():
-        assert spec.build(spark, skew).count() >= 0, key
+        assert spec.build(spark, skew_dir).count() >= 0, key

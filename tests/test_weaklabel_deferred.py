@@ -78,22 +78,16 @@ def test_coverage_report_bounds(spark, sf_dir):
         assert r["n_conflict"] <= r["n_overlap"] <= r["n_voted"]
 
 
-def test_weaklabel_empty_universe(spark, sf_dir):
-    from tests.conftest import build_empty_universe
-
-    empty = build_empty_universe(spark, sf_dir)
+def test_weaklabel_empty_universe(spark, empty_dir):
     for key, spec in QUERIES.items():
-        df = spec.build(spark, empty)
+        df = spec.build(spark, empty_dir)
         assert len(df.schema) > 0, key
         assert df.count() >= 0, key
 
 
-def test_weaklabel_hot_key(spark, sf_dir):
-    from tests.conftest import build_skewed_universe
-
-    skew = build_skewed_universe(spark, sf_dir)
+def test_weaklabel_hot_key(spark, skew_dir):
     for key, spec in QUERIES.items():
-        assert spec.build(spark, skew).count() >= 0, key
+        assert spec.build(spark, skew_dir).count() >= 0, key
 
 
 def test_weaklabel_repeat_deterministic(spark, sf_dir):
