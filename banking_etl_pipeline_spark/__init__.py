@@ -13,9 +13,10 @@ Layout:
     pipeline.py    config-driven pipeline orchestration: extract → transform
                    → quality gate → load (reference §2.8)
     domain/        banking entity schemas, seeding and transforms
-    sources/       csv/parquet/text/jdbc/delta readers (reference §2.1)
-    sinks/         csv/parquet/jdbc writers and the stage → audit → publish
-                   batch commit
+    sources/       csv and jdbc readers and the format-scan queries
+                   (reference §2.1)
+    sinks/         csv writer, merge upsert and the stage → audit → publish
+                   batch commit (partitioned parquet, parquet warehouse)
     operators/     relational core, windows, quality, dedup, similarity, text
     functions/     scalar/vector column-expression helpers
     plans/         physical-plan introspection (plan_of, pushed_filters)

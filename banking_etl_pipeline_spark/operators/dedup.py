@@ -188,9 +188,10 @@ def shingle_pair_commons(spark: SparkSession, sf_dir: str,
     )
 
 
-# Session cache for the default-cap pair stage (same keying/eviction as
-# _LSH_CACHE): one shingle-join materialization feeds Jaccard, containment,
-# and the eval's truth tier in a single driver/bench session.
+# Session cache for the default-cap pair stage (`session_persist`: one
+# entry per (session, tag), dead sessions evicted): one shingle-join
+# materialization feeds Jaccard, containment, and the eval's truth tier in a
+# single driver/bench session.
 def shingle_pair_commons_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_persist(
         spark, f"shingle_pairs:{sf_dir}",
@@ -321,8 +322,8 @@ def minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Session-scoped cache of the band table itself: dedup_minhash_lsh and
 # curation.dedup_incremental both probe the same signature index; without
 # this each invocation re-persists a fresh copy that is never unpersisted
-# (the bench runs every query several times). Same keying/eviction as
-# _LSH_CACHE below.
+# (the bench runs every query several times). `session_persist` keys it by
+# (session, sf_dir) and evicts dead sessions' entries.
 def minhash_bands_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_persist(
         spark, f"minhash_bands:{sf_dir}",

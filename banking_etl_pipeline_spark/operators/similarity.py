@@ -112,8 +112,8 @@ def lsh_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Session-scoped cache of the band-signature table (same pattern/rationale
-# as dedup._LSH_CACHE): the 96 hyperplane dot products per vector are
+# Session-scoped cache of the band-signature table (`session_persist`, as
+# for dedup's band tables): the 96 hyperplane dot products per vector are
 # higher-order-function folds — interpreted per element, the most expensive
 # expression in the module — and every consumer (both sides of ann_lsh's
 # candidate join, dedup_embedding_cosine, ann_recall_report) would otherwise

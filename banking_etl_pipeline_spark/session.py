@@ -30,8 +30,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 
-# Session-scoped cache (generalizes the per-module caches like
-# dedup._LSH_CACHE), keyed by (application, kind, tag):
+# Session-scoped cache, the one cache the operator modules share, keyed by
+# (application, kind, tag):
 # - `session_persist`: a builder's expensive reused intermediate persists
 #   exactly ONCE per (session, tag) instead of once per invocation —
 #   repeated invocations in one session (the bench runs each query several

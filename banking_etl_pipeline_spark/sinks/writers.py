@@ -156,10 +156,6 @@ class ParquetWarehouse:
     def read(self, table: str) -> DataFrame:
         return self.spark.read.parquet(*self._live(table))
 
-    def truncate_and_load(self, df: DataFrame, table: str) -> None:
-        """≅ readshift_loader.py:130-141 (overwrite path)."""
-        self.stage(df, table).publish()
-
     def load_with_staging(self, df: DataFrame, table: str,
                           key_columns: Sequence[str]) -> None:
         """≅ readshift_loader.py:68-149, upserting on ``key_columns``."""

@@ -20,9 +20,12 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 # run by default; the list only shrinks.
 _SLOW_SKIP_FILE = os.path.join(os.path.dirname(__file__),
                                "driver_slow_skip.txt")
-_SLOW_SKIP_KEY = pytest.StashKey[tuple[int, list[str]]]()
+_SLOW_SKIP_KEY = pytest.StashKey[int]()
 
 
+# tryfirst: the stale check must see the whole collection, before -k, -m or
+# another plugin deselects anything
+@pytest.hookimpl(tryfirst=True)
 def pytest_collection_modifyitems(config, items):
     if os.environ.get("SPARK_GRAFT_FULL_TESTS"):
         return
@@ -36,30 +39,28 @@ def pytest_collection_modifyitems(config, items):
     keep, drop = [], []
     for item in items:
         (drop if item.nodeid in slow else keep).append(item)
-    # a listed id in a collected file that names no test is stale; a run
-    # that selects single node ids collects files only in part
+    # a listed id in a collected file that names no test is stale and fails
+    # the run; a run that selects single node ids collects files only in part
     files = {item.nodeid.split("::")[0] for item in items}
     stale = [] if any("::" in a for a in config.args) else sorted(
         n for n in slow - {item.nodeid for item in drop}
         if n.split("::")[0] in files)
-    config.stash[_SLOW_SKIP_KEY] = (len(drop), stale)
+    if stale:
+        raise pytest.UsageError(
+            "tests/driver_slow_skip.txt lists ids that match no collected "
+            "test; delete them from the list:\n  " + "\n  ".join(stale))
+    config.stash[_SLOW_SKIP_KEY] = len(drop)
     if drop:
         items[:] = keep
         config.hook.pytest_deselected(items=drop)
 
 
 def pytest_terminal_summary(terminalreporter, config):
-    if _SLOW_SKIP_KEY not in config.stash:
-        return
-    dropped, stale = config.stash[_SLOW_SKIP_KEY]
-    if dropped:
+    if config.stash.get(_SLOW_SKIP_KEY, 0):
         terminalreporter.write_line(
-            f"tests/conftest.py: deselected {dropped} slow tests listed in "
-            "tests/driver_slow_skip.txt; SPARK_GRAFT_FULL_TESTS=1 runs them")
-    for nodeid in stale:
-        terminalreporter.write_line(
-            f"tests/conftest.py: WARNING: driver_slow_skip.txt id matches no "
-            f"collected test: {nodeid}", yellow=True)
+            f"tests/conftest.py: deselected {config.stash[_SLOW_SKIP_KEY]} "
+            "slow tests listed in tests/driver_slow_skip.txt; "
+            "SPARK_GRAFT_FULL_TESTS=1 runs them")
 
 
 @pytest.fixture(scope="session")

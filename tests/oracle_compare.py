@@ -47,6 +47,14 @@ def _multiset(rows: list[dict]) -> Counter:
     return out
 
 
+def assert_repeat_deterministic(spark, sf_dir: str, queries: dict) -> None:
+    """Two builds of each query return the same multiset of rows."""
+    for key, spec in queries.items():
+        runs = [spec.build(spark, sf_dir).collect() for _ in range(2)]
+        first, second = (_multiset([r.asDict() for r in rs]) for rs in runs)
+        assert first == second, f"{key}: nondeterministic across builds"
+
+
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for t in TABLES:

@@ -278,7 +278,7 @@ def test_warehouse_staged_upsert_roundtrip(spark, tmp_path):
     wh.load_with_staging(t1, "dim", ["k"])
     got = {r.k: r.v for r in wh.read("dim").collect()}
     assert got == {"K1": 1, "K2": 20, "K3": 30}
-    wh.truncate_and_load(t1, "dim")
+    wh.stage(t1, "dim").publish()  # no key columns: replaces the table
     assert {r.k for r in wh.read("dim").collect()} == {"K2", "K3"}
 
 

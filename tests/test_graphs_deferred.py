@@ -1,13 +1,12 @@
 """Local verification for the graph-traversal tier (operators/graphs.py):
 bounded-round frontier-join BFS over the md5-derived order graph. The
-module is registered in `registry.MODULES`.
+registry-wide suites check its oracle parity, its plans and its empty and
+skewed inputs; this file keeps the checks specific to the tier.
 """
 
 from __future__ import annotations
 
 import hashlib
-
-import pytest
 
 from banking_etl_pipeline_spark.catalog import table
 from banking_etl_pipeline_spark.operators.graphs import (
@@ -16,27 +15,6 @@ from banking_etl_pipeline_spark.operators.graphs import (
     QUERIES,
     SEED_MOD,
 )
-from banking_etl_pipeline_spark.plans import plan_of
-from tests.oracle_compare import compare, duck_connection
-
-
-@pytest.mark.parametrize(
-    "key", ["bfs_layers", "bfs_frontier_report", "bfs_reach_report"]
-)
-def test_graphs_oracle_parity(key, spark, sf_dir):
-    spec = QUERIES[key]
-    res = compare(spec.build(spark, sf_dir), duck_connection(sf_dir),
-                  spec.oracle)
-    assert res["row_count_match"] and res["columns_match"] \
-        and res["values_match"], f"{key}: {res['detail']}"
-
-
-def test_graphs_plans_scale_sane(spark, sf_dir):
-    for key, spec in QUERIES.items():
-        p = plan_of(spec.build(spark, sf_dir))
-        assert "CartesianProduct" not in p, f"{key}: cartesian"
-        for marker in ("BatchEvalPython", "ArrowEvalPython"):
-            assert marker not in p, f"{key}: python eval"
 
 
 def test_customer_keys_are_dense_from_zero(spark, sf_dir):

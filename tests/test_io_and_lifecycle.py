@@ -27,6 +27,28 @@ def test_csv_roundtrip(spark, tmp_path):
     assert sorted(map(tuple, back.collect())) == [("a", 1), ("b", 2)]
 
 
+def test_scan_copies_live_in_the_session(spark, sf_dir):
+    """The CSV, text, JSON, ORC and schema-evolution copies the scan queries
+    read sit under the application's driver directory, which Spark deletes
+    on stop(), so no copy outlives the session that wrote it."""
+    import os
+    from urllib.parse import urlparse
+
+    from pyspark import SparkFiles
+
+    from banking_etl_pipeline_spark.sources.scan_queries import QUERIES
+
+    root = os.path.realpath(SparkFiles.getRootDirectory())
+    for key, spec in QUERIES.items():
+        if key == "scan_parquet":
+            continue
+        files = [os.path.realpath(urlparse(f).path)
+                 for f in spec.build(spark, sf_dir).inputFiles()]
+        assert files, key
+        assert all(os.path.commonpath([f, root]) == root for f in files), (
+            key, files)
+
+
 def test_partitioned_write_prunes(spark, tmp_path):
     df = spark.createDataFrame(
         [(1, "2025", "x"), (2, "2026", "y")], "id int, yr string, v string")

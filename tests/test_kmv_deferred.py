@@ -1,14 +1,13 @@
-"""Local verification for the KMV set-operation sketch tier
-(operators/kmv.py): bottom-K sketches, merged-sketch union cardinality,
-sketch-overlap Jaccard/intersection. The module is registered in
-`registry.MODULES`.
+"""Local verification for the KMV set-operation sketch tier (operators/kmv.py):
+bottom-K sketches, merged-sketch union cardinality, sketch-overlap
+Jaccard/intersection. The registry-wide suites check its oracle parity, its
+plans and its empty and skewed inputs; this file keeps the checks specific to
+the tier.
 """
 
 from __future__ import annotations
 
 import hashlib
-
-import pytest
 
 from banking_etl_pipeline_spark.catalog import table
 from banking_etl_pipeline_spark.operators.kmv import (
@@ -17,27 +16,6 @@ from banking_etl_pipeline_spark.operators.kmv import (
     KMV_SEED,
     QUERIES,
 )
-from banking_etl_pipeline_spark.plans import plan_of
-from tests.oracle_compare import compare, duck_connection
-
-
-@pytest.mark.parametrize(
-    "key", ["kmv_type_sketch", "kmv_union_report", "kmv_jaccard_report"]
-)
-def test_kmv_oracle_parity(key, spark, sf_dir):
-    spec = QUERIES[key]
-    res = compare(spec.build(spark, sf_dir), duck_connection(sf_dir),
-                  spec.oracle)
-    assert res["row_count_match"] and res["columns_match"] \
-        and res["values_match"], f"{key}: {res['detail']}"
-
-
-def test_kmv_plans_scale_sane(spark, sf_dir):
-    for key, spec in QUERIES.items():
-        p = plan_of(spec.build(spark, sf_dir))
-        assert "CartesianProduct" not in p, f"{key}: cartesian"
-        for marker in ("BatchEvalPython", "ArrowEvalPython"):
-            assert marker not in p, f"{key}: python eval"
 
 
 def _model_hashes(spark, sf_dir):

@@ -97,11 +97,10 @@ def test_no_oracle_emits_hugeint(sf_dir):
     )
 
 
-def test_r6_registration_landed():
+def test_operator_tier_keys_registered():
     """Every operator tier, planner and lshscale included, is in the
-    registry (276 keys), each spec complete."""
+    registry, each spec complete."""
     merged = all_queries()
-    assert len(merged) == 276
     for key in ("substring_dup_coverage", "pq_encode", "shard_assignment",
                 "dataset_diff", "retrieval_ndcg", "epoch_shuffle_heads",
                 "ivm_join_delta", "target_encoding_oof", "ece_report",

@@ -1,40 +1,18 @@
-"""Local verification for the tokenizer tier (operators/tokenizer.py): full
-BPE merge-training loop, fixed-merge compression report, Heaps'-law
-vocabulary growth, Zipf decade profile, each run through the exact driver
-comparison. The module is registered in `registry.MODULES`.
+"""Local verification for the tokenizer tier (operators/tokenizer.py): full BPE
+merge-training loop, fixed-merge compression report, Heaps'-law vocabulary
+growth, Zipf decade profile. The registry-wide suites check its oracle parity,
+its plans and its empty and skewed inputs; this file keeps the checks specific
+to the tier.
 """
 
 from __future__ import annotations
-
-import pytest
 
 from banking_etl_pipeline_spark.operators.tokenizer import (
     FIXED_MERGES,
     N_MERGES,
     QUERIES,
 )
-from banking_etl_pipeline_spark.plans import plan_of
-from tests.oracle_compare import compare, duck_connection
-
-
-@pytest.mark.parametrize(
-    "key",
-    ["bpe_merge_train", "bpe_encode_report", "heaps_law", "zipf_tail_report"],
-)
-def test_tokenizer_oracle_parity(key, spark, sf_dir):
-    spec = QUERIES[key]
-    res = compare(spec.build(spark, sf_dir), duck_connection(sf_dir),
-                  spec.oracle)
-    assert res["row_count_match"] and res["columns_match"] \
-        and res["values_match"], f"{key}: {res['detail']}"
-
-
-def test_tokenizer_plans_scale_sane(spark, sf_dir):
-    for key, spec in QUERIES.items():
-        p = plan_of(spec.build(spark, sf_dir))
-        assert "CartesianProduct" not in p, f"{key}: cartesian"
-        for marker in ("BatchEvalPython", "ArrowEvalPython"):
-            assert marker not in p, f"{key}: python eval"
+from tests.oracle_compare import assert_repeat_deterministic
 
 
 def test_bpe_merge_train_invariants(spark, sf_dir):
@@ -79,27 +57,4 @@ def test_zipf_shares_sum_to_total(spark, sf_dir):
 
 
 def test_tokenizer_repeat_deterministic(spark, sf_dir):
-    from collections import Counter
-
-    from tests.oracle_compare import _norm
-
-    for key, spec in QUERIES.items():
-        sets = []
-        for _ in range(2):
-            rows = spec.build(spark, sf_dir).collect()
-            sets.append(Counter(
-                tuple(_norm(r[c]) for c in sorted(r.asDict())) for r in rows
-            ))
-        assert sets[0] == sets[1], f"{key}: nondeterministic across builds"
-
-
-def test_tokenizer_empty_universe(spark, empty_dir):
-    for key, spec in QUERIES.items():
-        df = spec.build(spark, empty_dir)
-        assert len(df.schema) > 0, key
-        assert df.count() >= 0, key
-
-
-def test_tokenizer_hot_language(spark, skew_dir):
-    for key, spec in QUERIES.items():
-        assert spec.build(spark, skew_dir).count() >= 0, key
+    assert_repeat_deterministic(spark, sf_dir, QUERIES)
