@@ -131,3 +131,13 @@ def compare(spark_df, con: duckdb.DuckDBPyConnection, sql: str) -> dict:
         only_d = list((md - ms).keys())[:3]
         result["detail"] = f"spark-only={only_s} oracle-only={only_d}"
     return result
+
+
+def assert_oracle_parity(spark_df, con: duckdb.DuckDBPyConnection, sql: str,
+                         key: str) -> None:
+    """The driver's t2 gate on one built query: the rows, the columns and
+    the values all match the DuckDB oracle."""
+    res = compare(spark_df, con, sql)
+    assert res["row_count_match"], f"{key}: {res}"
+    assert res["columns_match"], f"{key}: {res}"
+    assert res["values_match"], f"{key}: {res}"

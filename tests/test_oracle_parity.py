@@ -9,7 +9,7 @@ import pytest
 from banking_etl_pipeline_spark.plans import plan_of
 from banking_etl_pipeline_spark.registry import all_queries
 
-from .oracle_compare import compare, duck_connection
+from .oracle_compare import assert_oracle_parity, compare, duck_connection
 
 _QUERIES = all_queries()
 
@@ -102,10 +102,7 @@ def test_oracle_parity(key, spark, sf_dir, con):
     df = spec.build(spark, sf_dir)
     if not key.startswith("streaming_"):
         _assert_plan_invariants(key, df)
-    res = compare(df, con, spec.oracle)
-    assert res["row_count_match"], f"{key}: {res}"
-    assert res["columns_match"], f"{key}: {res}"
-    assert res["values_match"], f"{key}: {res}"
+    assert_oracle_parity(df, con, spec.oracle, key)
 
 
 def test_compare_rejects_array_outputs(spark, sf_dir, con):

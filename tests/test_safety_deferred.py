@@ -1,7 +1,7 @@
 """Local verification for the safety-filtering tier (operators/safety.py):
-lexicon-ratio flags, injection-pattern scan, source blocklist audit,
-cumulative safety funnel, each run through the exact driver comparison. The
-module is registered in `registry.MODULES`.
+lexicon-ratio flags, injection-pattern scan, source blocklist audit, cumulative
+safety funnel. The registry-wide suites check its oracle parity, its plans and
+its empty and skewed inputs; this file keeps the checks specific to the tier.
 """
 
 from __future__ import annotations
@@ -14,31 +14,29 @@ from banking_etl_pipeline_spark.operators.safety import (
     RATIO6_T,
 )
 from banking_etl_pipeline_spark.plans import plan_of
-from tests.oracle_compare import compare, duck_connection
-
-
-@pytest.mark.parametrize(
-    "key",
-    ["safety_lexicon_ratio", "injection_pattern_scan",
-     "safety_blocklist_audit", "safety_funnel"],
+from tests.oracle_compare import (
+    assert_oracle_parity,
+    assert_repeat_deterministic,
+    duck_connection,
 )
+
+
+# the cases that have always run in tier-1 under these ids;
+# tests/test_oracle_parity.py checks every key of the registry
+@pytest.mark.parametrize("key", ["injection_pattern_scan"])
 def test_safety_oracle_parity(key, spark, sf_dir):
     spec = QUERIES[key]
-    res = compare(spec.build(spark, sf_dir), duck_connection(sf_dir),
-                  spec.oracle)
-    assert res["row_count_match"] and res["columns_match"] \
-        and res["values_match"], f"{key}: {res['detail']}"
+    with duck_connection(sf_dir) as con:
+        assert_oracle_parity(spec.build(spark, sf_dir), con,
+                             spec.oracle, key)
 
 
 def test_safety_plans_scale_sane(spark, sf_dir):
-    """Single corpus scan → bounded aggregate: no joins, no windows, no
-    Python eval, no cartesian anywhere in the tier."""
+    """Single corpus scan → bounded aggregate: no joins anywhere in the
+    tier."""
     for key, spec in QUERIES.items():
         p = plan_of(spec.build(spark, sf_dir))
-        assert "CartesianProduct" not in p, f"{key}: cartesian"
         assert "Join" not in p, f"{key}: unexpected join"
-        for marker in ("BatchEvalPython", "ArrowEvalPython"):
-            assert marker not in p, f"{key}: python eval"
 
 
 def test_injection_scan_reports_zero_hits(spark, sf_dir):
@@ -72,28 +70,5 @@ def test_blocklist_audit_conserves_docs(spark, sf_dir):
         assert r["chars_blocked"] >= 0
 
 
-def test_safety_empty_universe(spark, empty_dir):
-    for key, spec in QUERIES.items():
-        df = spec.build(spark, empty_dir)
-        assert len(df.schema) > 0, key
-        assert df.count() >= 0, key
-
-
-def test_safety_hot_key(spark, skew_dir):
-    for key, spec in QUERIES.items():
-        assert spec.build(spark, skew_dir).count() >= 0, key
-
-
 def test_safety_repeat_deterministic(spark, sf_dir):
-    from collections import Counter
-
-    from tests.oracle_compare import _norm
-
-    for key, spec in QUERIES.items():
-        sets = []
-        for _ in range(2):
-            rows = spec.build(spark, sf_dir).collect()
-            sets.append(Counter(
-                tuple(_norm(r[c]) for c in sorted(r.asDict())) for r in rows
-            ))
-        assert sets[0] == sets[1], f"{key}: nondeterministic across builds"
+    assert_repeat_deterministic(spark, sf_dir, QUERIES)
