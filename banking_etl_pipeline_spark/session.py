@@ -9,9 +9,15 @@ comparable across engines (DuckDB timestamps are UTC-naive).
 
 Every parquet file the session writes (appended batches, warehouse
 generations, query results) is zstd-compressed, about a quarter smaller than
-Spark's snappy default; `extra_conf` or a writer's `compression` option
-overrides that, and readers follow each file's footer, so a target may mix
-codecs.
+Spark's snappy default, and stores timestamps as INT64 `TIMESTAMP_MICROS`
+instead of Spark's 12-byte INT96: a 100 k-row transaction batch's two
+timestamp columns fall from 1.57 to 1.11 MB of its 5.71 MB, and each of
+their column chunks carries min/max statistics, which INT96 chunks lack.
+Spark reads the same `TimestampType` values back; the column is marked
+`isAdjustedToUTC=true`, so pyarrow reads it as `timestamp[us, tz=UTC]` and
+DuckDB as `TIMESTAMP WITH TIME ZONE`. `extra_conf` or a writer's
+`compression` option overrides either setting, and readers follow each
+file's footer, so a target may mix codecs and timestamp encodings.
 
 Three environment settings remain: `SPARK_GRAFT_CPUS` (local cores, and the
 default shuffle parallelism), `SPARK_GRAFT_DRIVER_MEM` and
@@ -136,6 +142,18 @@ def get_spark(
         # lz4_raw saved only 4%; gzip matched zstd's size at more CPU. Each
         # file's footer names its codec, so snappy targets read unchanged.
         .config("spark.sql.parquet.compression.codec", "zstd")
+        # Spark's default INT96 timestamps take 12 bytes a value and their
+        # chunks carry no statistics. INT64 TIMESTAMP_MICROS chunks carry
+        # min/max, so a reader can skip row groups on a date filter and a
+        # gate can read ranges from footers. On a 100 k-row transaction
+        # batch (seed 1, zstd) the two timestamp columns fell from 1.574 to
+        # 1.106 MB and the batch from 5.71 to 5.24 MB; on 4 vCPU, txn_batch
+        # write_amp fell 0.4112 -> 0.3778 and registry query results'
+        # 0.0520 -> 0.0423, with CPU per batch within noise. The column is
+        # marked isAdjustedToUTC, so DuckDB reads it as TIMESTAMP WITH TIME
+        # ZONE; each file's footer names its encoding, so INT96 files read
+        # unchanged.
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

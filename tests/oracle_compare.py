@@ -64,6 +64,46 @@ def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
+def universe_connection(root: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB views over a Spark-written universe, one ``<t>.parquet``
+    directory per table under ``root``.
+
+    Spark writes timestamps as INT64 marked ``isAdjustedToUTC``, which
+    DuckDB reads as ``TIMESTAMP WITH TIME ZONE``: its values carry a
+    ``+00:00`` offset that Spark's naive values lack. Each such column is
+    cast back to ``TIMESTAMP`` under a UTC session zone, which gives the
+    UTC wall time Spark's UTC-pinned session returns."""
+    con = duckdb.connect()
+    con.execute("SET TimeZone='UTC'")
+    for t in TABLES:
+        src = f"'{root}/{t}.parquet/*.parquet'"
+        casts = [f'"{name}"::TIMESTAMP AS "{name}"' for name, typ, *_ in
+                 con.execute(f"DESCRIBE SELECT * FROM {src}").fetchall()
+                 if typ == "TIMESTAMP WITH TIME ZONE"]
+        replace = f" REPLACE ({', '.join(casts)})" if casts else ""
+        con.execute(f"CREATE VIEW {t} AS SELECT *{replace} FROM {src}")
+    return con
+
+
+def universe_mismatches(spark, root: str, specs: dict) -> list:
+    """Build each spec on the universe under ``root`` and compare it with
+    its oracle. Returns ``(key, detail)`` for every key whose build or
+    compare raises or whose result differs, so a key that raises hides no
+    later key."""
+    bad = []
+    with universe_connection(root) as con:
+        for key, spec in specs.items():
+            try:
+                r = compare(spec.build(spark, root), con, spec.oracle)
+            except Exception as e:
+                bad.append((key, f"{type(e).__name__}: {str(e)[:200]}"))
+                continue
+            if not (r["row_count_match"] and r["columns_match"]
+                    and r["values_match"]):
+                bad.append((key, str(r["detail"])[:120]))
+    return bad
+
+
 def oracle_type_offenders(con: duckdb.DuckDBPyConnection, sql: str) -> list:
     """Driver-canonicalizer contract, part 2: the driver converts the
     oracle's result to pandas, where DuckDB HUGEINT/UHUGEINT (the default

@@ -53,24 +53,9 @@ def test_empty_universe_oracle_parity(spark, empty_dir):
     division-by-zero guards actually bite (this sweep found and pinned the
     approx_distinct/bloom_filter_probe 0/0 crashes and three NULL-vs-zero
     edges in the operator tiers)."""
-    import duckdb
+    from tests.oracle_compare import universe_mismatches
 
-    from tests.oracle_compare import TABLES as _T, compare
-
-    con = duckdb.connect()
-    for t in _T:
-        con.execute(
-            f"CREATE VIEW {t} AS"
-            f" SELECT * FROM '{empty_dir}/{t}.parquet/*.parquet'"
-        )
-    specs = all_queries()
-    bad = []
-    for key, spec in specs.items():
-        if (key.startswith("streaming_") or key in _SKIP
-                or key in _EMPTY_ORACLE_DIVERGENCES):
-            continue
-        r = compare(spec.build(spark, empty_dir), con, spec.oracle)
-        if not (r["row_count_match"] and r["columns_match"]
-                and r["values_match"]):
-            bad.append((key, str(r["detail"])[:120]))
+    specs = {k: spec for k, spec in all_queries().items()
+             if k in _KEYS and k not in _EMPTY_ORACLE_DIVERGENCES}
+    bad = universe_mismatches(spark, empty_dir, specs)
     assert not bad, f"empty-universe parity mismatches: {bad}"

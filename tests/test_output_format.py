@@ -1,15 +1,21 @@
-"""The engine publishes zstd parquet, and reads targets that mix codecs.
+"""The engine publishes zstd parquet with INT64 timestamps, and reads
+targets written the old way.
 
-`get_spark` sets `spark.sql.parquet.compression.codec` to zstd, so every
-parquet file the engine writes compresses its column chunks with zstd: an
-appended partitioned batch, a warehouse table's first generation and a
-`merge_upsert` generation. Each file's footer names its codec, so a target
-that still holds snappy files from before reads and upserts unchanged.
+`get_spark` sets `spark.sql.parquet.compression.codec` to zstd and
+`spark.sql.parquet.outputTimestampType` to `TIMESTAMP_MICROS`, so every
+parquet file the engine writes compresses its column chunks with zstd and
+stores timestamps as INT64 microseconds with min/max statistics: an
+appended partitioned batch, a warehouse table's first generation, a
+`merge_upsert` generation and a plain query result. Each file's footer
+names its codec and timestamp encoding, so a target that still holds
+snappy INT96 files from before reads and upserts unchanged.
 """
 
 from __future__ import annotations
 
 import contextlib
+import datetime as dt
+import json
 import os
 
 import pyarrow.parquet as pq
@@ -29,25 +35,35 @@ from banking_etl_pipeline_spark.sinks.writers import (
 )
 
 CODEC = "spark.sql.parquet.compression.codec"
-SCHEMA = "k int, v string, year int"
+TS_TYPE = "spark.sql.parquet.outputTimestampType"
+SCHEMA = "k int, v string, year int, ts timestamp"
+TXN_TIMESTAMPS = ["transaction_date", "prev_transaction_date"]
 
 
-def chunk_codecs(root) -> dict[str, set[str]]:
-    """Data file → the codecs of its column chunks, for every parquet file
-    under ``root`` outside ``_``/``.`` paths (stages, checksums)."""
+def ts(day: int, micros: int) -> dt.datetime:
+    return dt.datetime(2024, 1, day, 12, 34, 56, micros)
+
+
+def footers(root) -> dict[str, pq.FileMetaData]:
+    """Data file → its footer, for every parquet file under ``root``
+    outside ``_``/``.`` paths (stages, checksums)."""
     out = {}
     for d, _, names in os.walk(root):
         for n in names:
             f = os.path.join(d, n)
             rel = os.path.relpath(f, root)
-            if not n.endswith(".parquet") or any(
+            if n.endswith(".parquet") and not any(
                     p.startswith(("_", ".")) for p in rel.split(os.sep)):
-                continue
-            meta = pq.ParquetFile(f).metadata
-            out[rel] = {meta.row_group(g).column(c).compression
-                        for g in range(meta.num_row_groups)
-                        for c in range(meta.num_columns)}
+                out[rel] = pq.ParquetFile(f).metadata
     return out
+
+
+def chunk_codecs(metas: dict[str, pq.FileMetaData]) -> dict[str, set[str]]:
+    """Data file → the codecs of its column chunks."""
+    return {f: {m.row_group(g).column(c).compression
+                for g in range(m.num_row_groups)
+                for c in range(m.num_columns)}
+            for f, m in metas.items()}
 
 
 def all_chunks(codecs: dict[str, set[str]]) -> set[str]:
@@ -55,97 +71,178 @@ def all_chunks(codecs: dict[str, set[str]]) -> set[str]:
     return set().union(*codecs.values())
 
 
-def assert_all_zstd(root) -> None:
-    codecs = chunk_codecs(root)
+def assert_all_zstd(metas) -> None:
+    codecs = chunk_codecs(metas)
     assert all_chunks(codecs) == {"ZSTD"}, codecs
 
 
+def timestamp_types(metas, col: str) -> set[str]:
+    """The physical types ``col`` has across the files."""
+    return {m.schema.column(m.schema.names.index(col)).physical_type
+            for m in metas.values()}
+
+
+def assert_int64_micros(metas, cols) -> None:
+    """Each of ``cols`` is INT64 `Timestamp(MICROS, isAdjustedToUTC=true)`
+    in every file, and every chunk holding a non-null value carries its
+    min/max (INT96 chunks carry no statistics)."""
+    assert metas
+    stats = 0
+    for f, m in metas.items():
+        for col in cols:
+            i = m.schema.names.index(col)
+            column = m.schema.column(i)
+            assert column.physical_type == "INT64", (f, col, column)
+            logical = json.loads(column.logical_type.to_json())
+            assert (logical["Type"], logical["timeUnit"],
+                    logical["isAdjustedToUTC"]) == (
+                "Timestamp", "microseconds", True), (f, col, logical)
+            for g in range(m.num_row_groups):
+                chunk = m.row_group(g).column(i)
+                assert chunk.is_stats_set, (f, col, g)
+                if chunk.statistics.null_count < chunk.num_values:
+                    assert chunk.statistics.has_min_max, (f, col, g)
+                    stats += 1
+    assert stats, "no chunk with a non-null timestamp"
+
+
 @contextlib.contextmanager
-def session_codec(spark, codec):
-    """Write with ``codec`` inside the block; restore the session's own."""
-    before = spark.conf.get(CODEC)
-    spark.conf.set(CODEC, codec)
+def legacy_output(spark):
+    """Write snappy chunks with INT96 timestamps, Spark's defaults, inside
+    the block; restore the session's own settings after it."""
+    before = {k: spark.conf.get(k) for k in (CODEC, TS_TYPE)}
+    spark.conf.set(CODEC, "snappy")
+    spark.conf.set(TS_TYPE, "INT96")
     try:
         yield
     finally:
-        spark.conf.set(CODEC, before)
+        for k, v in before.items():
+            spark.conf.set(k, v)
 
 
-def test_published_partitioned_batch_is_zstd(spark, tmp_path):
-    """A raw CSV batch run through `run_pipeline` into a partitioned
-    append target: every published file is zstd in every column."""
-    raw = tmp_path / "raw"
+@pytest.fixture(scope="module")
+def published_batch(spark, tmp_path_factory):
+    """A raw CSV batch run through `run_pipeline` into a year/month
+    partitioned append target: the footers of the published files."""
+    tmp = tmp_path_factory.mktemp("published_batch")
+    raw = tmp / "raw"
     write_csv(seed_all(spark, 10, 15, 200)["transactions"], str(raw))
-    target = TargetSpec(kind="partitioned", path=str(tmp_path / "target"),
+    target = TargetSpec(kind="partitioned", path=str(tmp / "target"),
                         partition_cols=["transaction_year",
                                         "transaction_month"])
     result = run_pipeline(spark, PipelineSpec(
         "transaction", SourceSpec("csv", path=str(raw)), target,
         ["transaction_id"]))
     assert result.quality["total_rows"] == 200
-    codecs = chunk_codecs(tmp_path / "target")
-    assert all(os.path.dirname(f) for f in codecs), codecs  # partitioned
-    assert_all_zstd(tmp_path / "target")
+    metas = footers(tmp / "target")
+    assert all(os.path.dirname(f) for f in metas), metas  # partitioned
+    return metas
 
 
-def test_warehouse_generations_are_zstd(spark, tmp_path):
+@pytest.fixture(scope="module")
+def warehouse_generations(spark, tmp_path_factory):
     """The first load renames the stage into a generation; an upsert writes
-    `merge_upsert`'s output as a new one. Both are zstd."""
-    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-    wh.load_with_staging(
-        spark.createDataFrame([(1, "a", 2024), (2, "b", 2024)], SCHEMA),
+    `merge_upsert`'s output as a new one. The footers of each generation,
+    read while it was current."""
+    wh = ParquetWarehouse(spark, str(tmp_path_factory.mktemp("wh")))
+    wh.load_with_staging(spark.createDataFrame(
+        [(1, "a", 2024, ts(1, 1)), (2, "b", 2024, ts(2, 2))], SCHEMA),
         "dim", ["k"])
     first = open(os.path.join(wh.path("dim"), "CURRENT")).read()
-    assert_all_zstd(wh.path("dim"))
-    wh.load_with_staging(
-        spark.createDataFrame([(2, "B", 2025), (3, "c", 2025)], SCHEMA),
+    first_metas = footers(wh.path("dim"))
+    wh.load_with_staging(spark.createDataFrame(
+        [(2, "B", 2025, ts(3, 3)), (3, "c", 2025, None)], SCHEMA),
         "dim", ["k"])
     merged = open(os.path.join(wh.path("dim"), "CURRENT")).read()
     assert merged != first
-    assert_all_zstd(wh.path("dim"))
     assert sorted(wh.read("dim").collect()) == [
-        (1, "a", 2024), (2, "B", 2025), (3, "c", 2025)]
+        (1, "a", 2024, ts(1, 1)), (2, "B", 2025, ts(3, 3)),
+        (3, "c", 2025, None)]
+    return {"first": first_metas, "merged": footers(wh.path("dim"))}
 
 
-def test_query_result_write_is_zstd(spark, tmp_path):
+@pytest.fixture(scope="module")
+def query_result(spark, tmp_path_factory):
     """A plain `DataFrame.write.parquet`, as a registry result is written."""
-    spark.range(100).selectExpr("id", "cast(id as string) s") \
-        .write.parquet(str(tmp_path / "result"))
-    assert_all_zstd(tmp_path / "result")
+    out = tmp_path_factory.mktemp("result") / "result"
+    spark.range(100).selectExpr(
+        "id", "cast(id as string) s",
+        "timestamp_micros(1704067200000000 + id * 86400000001) ts") \
+        .write.parquet(str(out))
+    return footers(out)
+
+
+def test_published_partitioned_batch_is_zstd(published_batch):
+    """Every published file of the batch is zstd in every column."""
+    assert_all_zstd(published_batch)
+
+
+def test_published_batch_timestamps_are_int64_micros(published_batch):
+    assert_int64_micros(published_batch, TXN_TIMESTAMPS)
+
+
+def test_warehouse_generations_are_zstd(warehouse_generations):
+    for metas in warehouse_generations.values():
+        assert_all_zstd(metas)
+
+
+def test_warehouse_generation_timestamps_are_int64_micros(
+        warehouse_generations):
+    for metas in warehouse_generations.values():
+        assert_int64_micros(metas, ["ts"])
+
+
+def test_query_result_write_is_zstd(query_result):
+    assert_all_zstd(query_result)
+
+
+def test_query_result_timestamps_are_int64_micros(query_result):
+    assert_int64_micros(query_result, ["ts"])
 
 
 @pytest.mark.parametrize("kind", ["partitioned", "warehouse"])
 def test_snappy_target_takes_a_zstd_batch(spark, tmp_path, kind):
-    """A target whose first batch was written as snappy takes a second
-    batch under the zstd default: an append reads back the union, an
-    upsert reads the snappy generation and writes the merged rows."""
+    """A target whose first batch was written as snappy with INT96
+    timestamps takes a second batch under the session's settings: an
+    append reads back the union, an upsert reads the legacy generation and
+    writes the merged rows with INT64 timestamps, equal to the
+    microsecond."""
     first = spark.createDataFrame(
-        [(1, "a", 2024), (2, "b", 2024), (3, "c", 2025)], SCHEMA)
-    second = spark.createDataFrame([(3, "C", 2025), (4, "d", 2025)], SCHEMA)
+        [(1, "a", 2024, ts(1, 1)), (2, "b", 2024, None),
+         (3, "c", 2025, ts(3, 999999))], SCHEMA)
+    second = spark.createDataFrame(
+        [(3, "C", 2025, ts(4, 4)), (4, "d", 2025, ts(5, 123456))], SCHEMA)
     if kind == "partitioned":
         root = str(tmp_path / "target")
-        with session_codec(spark, "snappy"):
+        with legacy_output(spark):
             stage_partitioned(first, root, partition_cols=["year"]).publish()
-        snappy = chunk_codecs(root)
-        assert all_chunks(snappy) == {"SNAPPY"}
+        legacy = footers(root)
+        assert all_chunks(chunk_codecs(legacy)) == {"SNAPPY"}
+        assert timestamp_types(legacy, "ts") == {"INT96"}
         stage_partitioned(second, root, partition_cols=["year"]).publish()
-        codecs = chunk_codecs(root)
-        assert {f: codecs[f] for f in snappy} == snappy
-        codecs = {f: c for f, c in codecs.items() if f not in snappy}
-        rows = spark.read.schema(SCHEMA).parquet(root).collect()
+        metas = footers(root)
+        assert chunk_codecs({f: metas[f] for f in legacy}) == \
+            chunk_codecs(legacy)
+        metas = {f: m for f, m in metas.items() if f not in legacy}
+        rows = spark.read.schema(SCHEMA).parquet(root) \
+            .select(*first.columns).collect()
         expected = first.collect() + second.collect()
     else:
         wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-        with session_codec(spark, "snappy"):
+        with legacy_output(spark):
             wh.load_with_staging(first, "dim", ["k"])
-        assert all_chunks(chunk_codecs(wh.path("dim"))) == {"SNAPPY"}
+        legacy = footers(wh.path("dim"))
+        assert all_chunks(chunk_codecs(legacy)) == {"SNAPPY"}
+        assert timestamp_types(legacy, "ts") == {"INT96"}
         wh.load_with_staging(second, "dim", ["k"])
-        codecs = chunk_codecs(wh.path("dim"))
+        metas = footers(wh.path("dim"))
         rows = wh.read("dim").collect()
-        expected = [(1, "a", 2024), (2, "b", 2024),
-                    (3, "C", 2025), (4, "d", 2025)]
-    assert spark.conf.get(CODEC) == "zstd"
+        expected = [(1, "a", 2024, ts(1, 1)), (2, "b", 2024, None),
+                    (3, "C", 2025, ts(4, 4)), (4, "d", 2025, ts(5, 123456))]
+    assert (spark.conf.get(CODEC), spark.conf.get(TS_TYPE)) == (
+        "zstd", "TIMESTAMP_MICROS")
     # the second batch's files; for a warehouse, the merged generation that
-    # replaced the snappy one
-    assert all_chunks(codecs) == {"ZSTD"}, codecs
+    # replaced the legacy one
+    assert all_chunks(chunk_codecs(metas)) == {"ZSTD"}, chunk_codecs(metas)
+    assert_int64_micros(metas, ["ts"])
     assert sorted(map(tuple, rows)) == sorted(map(tuple, expected))

@@ -99,23 +99,10 @@ def test_skewed_universe_oracle_parity(spark, skew_dir):
     driver comparison under pathological key distribution, where any
     missing tie-break or order-dependent float fold would flip the hash
     (companion to the empty-universe parity gate)."""
-    import duckdb
+    from tests.oracle_compare import universe_mismatches
 
-    from tests.oracle_compare import TABLES as _T, compare
-
-    con = duckdb.connect()
-    for t in _T:
-        con.execute(
-            f"CREATE VIEW {t} AS"
-            f" SELECT * FROM '{skew_dir}/{t}.parquet/*.parquet'"
-        )
-    specs = all_queries()
-    bad = []
-    for key, spec in specs.items():
-        if key.startswith("streaming_") or key == "banking_txn_pipeline":
-            continue
-        r = compare(spec.build(spark, skew_dir), con, spec.oracle)
-        if not (r["row_count_match"] and r["columns_match"]
-                and r["values_match"]):
-            bad.append((key, str(r["detail"])[:120]))
+    specs = {k: spec for k, spec in all_queries().items()
+             if not k.startswith("streaming_")
+             and k != "banking_txn_pipeline"}
+    bad = universe_mismatches(spark, skew_dir, specs)
     assert not bad, f"skewed-universe parity mismatches: {bad}"
