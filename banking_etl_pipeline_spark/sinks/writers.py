@@ -76,6 +76,24 @@ def _batch_id(df: DataFrame) -> str:
 def _staged(df: DataFrame, stage: str, commit: Callable[[DataFrame], None],
             partition_cols: Sequence[str] = ()) -> Staged:
     """Write ``df`` to ``stage`` once; publishing runs ``commit(rows)``."""
+    if partition_cols:
+        # Written as it comes, every task of the batch's last stage (the
+        # account_id window's) writes a file into each partition it holds
+        # rows of: 16 files of ~330 KB for a 100 k-row batch over 4 months
+        # on 4 cores, each with its own footer and dictionaries. A rebalance
+        # on the partition columns sends each partition value to one write
+        # task, so a batch lands as one file per partition; AQE drops the
+        # empty reducers and splits a partition past its advisory size
+        # (64 MiB), so at scale files come out near that size. 256 reducers,
+        # not the session's shuffle parallelism: at 4, pmod(hash(year,
+        # month), 4) puts 2025-03/06 on one reducer and 2025-04/05 on
+        # another, so two tasks write the whole batch (+17% wall time per
+        # batch); runs of 4 consecutive months in 2015-2035 land on 4
+        # distinct reducers 98% of the time at 256 (91% at 64, 68% at 16).
+        # The price is one more local shuffle of the batch (txn_batch, seed
+        # 1: shuffle writes 12.6 -> 27.4 MB) and +7% median wall time per
+        # batch on 4 vCPU, for 3.6% fewer published bytes (16 -> 4 files).
+        df = df.hint("rebalance", 256, *partition_cols)
     # partitioning by low-cardinality date parts (transaction_year/month)
     # prunes every downstream date-bounded scan
     df.write.mode("overwrite").partitionBy(*partition_cols).parquet(stage)

@@ -1,5 +1,5 @@
-"""The engine publishes zstd parquet with INT64 timestamps, and reads
-targets written the old way.
+"""The engine publishes zstd parquet with INT64 timestamps, one file per
+partition per batch, and reads targets written the old way.
 
 `get_spark` sets `spark.sql.parquet.compression.codec` to zstd and
 `spark.sql.parquet.outputTimestampType` to `TIMESTAMP_MICROS`, so every
@@ -8,7 +8,10 @@ stores timestamps as INT64 microseconds with min/max statistics: an
 appended partitioned batch, a warehouse table's first generation, a
 `merge_upsert` generation and a plain query result. Each file's footer
 names its codec and timestamp encoding, so a target that still holds
-snappy INT96 files from before reads and upserts unchanged.
+snappy INT96 files from before reads and upserts unchanged. A partitioned
+append rebalances the batch on its partition columns before the write, so
+each partition it touches gets one file however many tasks the batch's
+last stage ran.
 """
 
 from __future__ import annotations
@@ -17,6 +20,8 @@ import contextlib
 import datetime as dt
 import json
 import os
+import re
+from collections import Counter
 
 import pyarrow.parquet as pq
 import pytest
@@ -107,17 +112,21 @@ def assert_int64_micros(metas, cols) -> None:
 
 
 @contextlib.contextmanager
-def legacy_output(spark):
-    """Write snappy chunks with INT96 timestamps, Spark's defaults, inside
-    the block; restore the session's own settings after it."""
-    before = {k: spark.conf.get(k) for k in (CODEC, TS_TYPE)}
-    spark.conf.set(CODEC, "snappy")
-    spark.conf.set(TS_TYPE, "INT96")
+def session_conf(spark, settings: dict[str, str]):
+    """Run the block under ``settings``; restore the session's own after."""
+    before = {k: spark.conf.get(k) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, v)
     try:
         yield
     finally:
         for k, v in before.items():
             spark.conf.set(k, v)
+
+
+def legacy_output(spark):
+    """Write snappy chunks with INT96 timestamps, Spark's defaults."""
+    return session_conf(spark, {CODEC: "snappy", TS_TYPE: "INT96"})
 
 
 @pytest.fixture(scope="module")
@@ -170,6 +179,36 @@ def query_result(spark, tmp_path_factory):
         "timestamp_micros(1704067200000000 + id * 86400000001) ts") \
         .write.parquet(str(out))
     return footers(out)
+
+
+def test_batch_publishes_one_file_per_partition(spark, tmp_path):
+    """A batch over several months lands as one file in each month, with
+    every row once. AQE would coalesce a test-sized batch's window stage
+    into one task, which writes one file per month with or without the
+    rebalance; with coalescing off, that stage runs one task per shuffle
+    partition, each writing into every month it holds rows of."""
+    txns = seed_all(spark, 20, 30, 2000)["transactions"]
+    raw = tmp_path / "raw"
+    write_csv(txns, str(raw))
+    root = tmp_path / "target"
+    target = TargetSpec(kind="partitioned", path=str(root),
+                        partition_cols=["transaction_year",
+                                        "transaction_month"])
+    with session_conf(spark, {
+            "spark.sql.adaptive.coalescePartitions.enabled": "false"}):
+        run_pipeline(spark, PipelineSpec(
+            "transaction", SourceSpec("csv", path=str(raw)), target,
+            ["transaction_id"]))
+    files = list(footers(root))
+    per_partition = Counter(os.path.dirname(f) for f in files)
+    assert len(per_partition) >= 3, per_partition
+    assert set(per_partition.values()) == {1}, sorted(files)
+    batches = {re.fullmatch(r"part-([0-9a-f]+)-\d+\.parquet",
+                            os.path.basename(f))[1] for f in files}
+    assert len(batches) == 1, sorted(files)
+    ids = spark.read.parquet(str(root)).select("transaction_id").collect()
+    want = txns.select("transaction_id").collect()
+    assert sorted(r[0] for r in ids) == sorted(r[0] for r in want)
 
 
 def test_published_partitioned_batch_is_zstd(published_batch):

@@ -180,8 +180,15 @@ def test_retried_append_lands_once(spark, tmp_path, batches, monkeypatch):
     replace, renames = os.replace, []
 
     def crash_after_one(src, dst):
-        if "_staging" in src and renames:
-            raise OSError("injected after one rename")
+        if "_staging" in src:
+            if renames:
+                raise OSError("injected after one rename")
+            # a batch publishes one file per month: one staged file would
+            # leave no second rename to crash before
+            stage = src[:src.index("/_staging/") + len("/_staging")]
+            staged = glob.glob(glob.escape(stage) + "/*/**/*.parquet",
+                               recursive=True)
+            assert len(staged) >= 2, staged
         replace(src, dst)
         renames.append(dst)
 
