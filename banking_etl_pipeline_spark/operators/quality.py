@@ -51,9 +51,10 @@ class QualityConfig:
 class QualityChecker:
     """Single-pass implementation of null/duplicate/range checks.
 
-    `run_all_checks` ≅ data_quality.py:158-204 but issues ONE aggregation job
-    for every null+range rule and one countDistinct job for duplicates,
-    instead of the reference's O(checks) jobs.
+    `run_all_checks` ≅ data_quality.py:158-204 but computes every null,
+    range and duplicate rule in ONE aggregate collected by one action,
+    instead of the reference's O(checks) jobs. AQE still runs that plan's
+    shuffle stages as separate jobs (3 on a `txn_batch` batch).
     """
 
     def null_check_exprs(self, cols: list[str]) -> list:

@@ -1,3 +1,7 @@
+"""Session fixtures shared by the whole suite, which is one configuration:
+``pytest tests/`` runs every test. The Spark session, the oracle's data
+directory, and the empty and skewed universes are built once per run."""
+
 from __future__ import annotations
 
 import os
@@ -11,56 +15,6 @@ from banking_etl_pipeline_spark.session import get_spark  # noqa: E402
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
-
-# Default subset: the full suite took ~39 minutes when the list was drawn,
-# so by DEFAULT it deselects the node ids in tests/driver_slow_skip.txt, the
-# slowest tests of a full --durations=0 run, chosen so every test module keeps
-# coverage. The full suite is unchanged and remains the release gate — run
-# it with SPARK_GRAFT_FULL_TESTS=1. New tests are NOT in the list, so they
-# run by default; the list only shrinks.
-_SLOW_SKIP_FILE = os.path.join(os.path.dirname(__file__),
-                               "driver_slow_skip.txt")
-_SLOW_SKIP_KEY = pytest.StashKey[int]()
-
-
-# tryfirst: the stale check must see the whole collection, before -k, -m or
-# another plugin deselects anything
-@pytest.hookimpl(tryfirst=True)
-def pytest_collection_modifyitems(config, items):
-    if os.environ.get("SPARK_GRAFT_FULL_TESTS"):
-        return
-    if not os.path.exists(_SLOW_SKIP_FILE):
-        return
-    with open(_SLOW_SKIP_FILE) as f:
-        slow = {line.strip() for line in f
-                if line.strip() and not line.startswith("#")}
-    if not slow:
-        return
-    keep, drop = [], []
-    for item in items:
-        (drop if item.nodeid in slow else keep).append(item)
-    # a listed id in a collected file that names no test is stale and fails
-    # the run; a run that selects single node ids collects files only in part
-    files = {item.nodeid.split("::")[0] for item in items}
-    stale = [] if any("::" in a for a in config.args) else sorted(
-        n for n in slow - {item.nodeid for item in drop}
-        if n.split("::")[0] in files)
-    if stale:
-        raise pytest.UsageError(
-            "tests/driver_slow_skip.txt lists ids that match no collected "
-            "test; delete them from the list:\n  " + "\n  ".join(stale))
-    config.stash[_SLOW_SKIP_KEY] = len(drop)
-    if drop:
-        items[:] = keep
-        config.hook.pytest_deselected(items=drop)
-
-
-def pytest_terminal_summary(terminalreporter, config):
-    if config.stash.get(_SLOW_SKIP_KEY, 0):
-        terminalreporter.write_line(
-            f"tests/conftest.py: deselected {config.stash[_SLOW_SKIP_KEY]} "
-            "slow tests listed in tests/driver_slow_skip.txt; "
-            "SPARK_GRAFT_FULL_TESTS=1 runs them")
 
 
 @pytest.fixture(scope="session")

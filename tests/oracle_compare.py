@@ -85,25 +85,6 @@ def universe_connection(root: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
-def universe_mismatches(spark, root: str, specs: dict) -> list:
-    """Build each spec on the universe under ``root`` and compare it with
-    its oracle. Returns ``(key, detail)`` for every key whose build or
-    compare raises or whose result differs, so a key that raises hides no
-    later key."""
-    bad = []
-    with universe_connection(root) as con:
-        for key, spec in specs.items():
-            try:
-                r = compare(spec.build(spark, root), con, spec.oracle)
-            except Exception as e:
-                bad.append((key, f"{type(e).__name__}: {str(e)[:200]}"))
-                continue
-            if not (r["row_count_match"] and r["columns_match"]
-                    and r["values_match"]):
-                bad.append((key, str(r["detail"])[:120]))
-    return bad
-
-
 def oracle_type_offenders(con: duckdb.DuckDBPyConnection, sql: str) -> list:
     """Driver-canonicalizer contract, part 2: the driver converts the
     oracle's result to pandas, where DuckDB HUGEINT/UHUGEINT (the default
@@ -128,7 +109,7 @@ def compare(spark_df, con: duckdb.DuckDBPyConnection, sql: str) -> dict:
     # No query may emit a top-level array/map column — serialize to a
     # deterministic string instead (array_join / array_to_string of exact
     # ints or fixed-point values). Enforced here so every parity path
-    # (per-tier suites, empty/skew sweeps, driver_sim) hits it.
+    # (the registry, empty and skewed universes, driver_sim) hits it.
     from pyspark.sql.types import ArrayType, MapType
 
     bad = [f.name for f in spark_df.schema.fields

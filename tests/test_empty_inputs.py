@@ -1,15 +1,17 @@
-"""Empty-input robustness: every batch query must run (not crash) over a
-universe of EMPTY tables with the production schemas.
+"""Empty-input robustness: every batch query must run over a universe of
+EMPTY tables with the production schemas, and match its DuckDB oracle there.
 
 At 100 TB empty inputs are routine — a partition with no files after
 pruning, a day with no events, a filter that eliminates everything.
 Operators that divide, take percentiles, explode sequences, or join
 broadcast singletons are exactly where an empty input turns into a
 runtime error (division by zero on an empty aggregate, max() returning
-null into arithmetic). This suite pins: schema preserved, zero-or-more
-rows, no exception. Streaming queries are excluded (the parquet replay
-source requires at least one file footer) as is the seeded banking
-pipeline (generates its own input).
+null into arithmetic) or a NULL-vs-zero edge. Each key is built once and
+compared with the exact driver comparison (this comparison found and
+pinned the approx_distinct/bloom_filter_probe 0/0 crashes and three
+NULL-vs-zero edges in the operator tiers). Streaming queries are excluded
+(the parquet replay source requires at least one file footer) as is the
+seeded banking pipeline (generates its own input).
 """
 
 from __future__ import annotations
@@ -18,6 +20,8 @@ import pytest
 
 from banking_etl_pipeline_spark.registry import all_queries
 
+from .oracle_compare import assert_oracle_parity, universe_connection
+
 _SKIP = {"banking_txn_pipeline"}  # self-seeding; no table inputs
 
 
@@ -25,15 +29,6 @@ _KEYS = [
     k for k in all_queries()
     if not k.startswith("streaming_") and k not in _SKIP
 ]
-
-
-@pytest.mark.parametrize("key", _KEYS)
-def test_runs_on_empty_universe(key, spark, empty_dir):
-    spec = all_queries()[key]
-    df = spec.build(spark, empty_dir)
-    assert len(df.schema) > 0
-    assert df.count() >= 0
-
 
 # Engine-level divergences on an EMPTY relation, documented rather than
 # papered over (the driver's comparison runs at sf0.01 where none apply):
@@ -44,18 +39,24 @@ def test_runs_on_empty_universe(key, spark, empty_dir):
 # - table_profile: the oracle's per-column scaffold (one rollup row per
 #   profiled column) survives an empty table; Spark's stack-unpivot of
 #   zero rows is empty.
+# Both halves are asserted, so the exclusion fails if either engine changes.
 _EMPTY_ORACLE_DIVERGENCES = {"cube_rollup", "grouping_sets", "table_profile"}
 
 
-def test_empty_universe_oracle_parity(spark, empty_dir):
-    """Value-level oracle parity on the empty universe — the exact driver
-    comparison, over a corpus where NULL-vs-0 aggregate edges and ANSI
-    division-by-zero guards actually bite (this sweep found and pinned the
-    approx_distinct/bloom_filter_probe 0/0 crashes and three NULL-vs-zero
-    edges in the operator tiers)."""
-    from tests.oracle_compare import universe_mismatches
+@pytest.fixture(scope="module")
+def con(empty_dir):
+    with universe_connection(empty_dir) as c:
+        yield c
 
-    specs = {k: spec for k, spec in all_queries().items()
-             if k in _KEYS and k not in _EMPTY_ORACLE_DIVERGENCES}
-    bad = universe_mismatches(spark, empty_dir, specs)
-    assert not bad, f"empty-universe parity mismatches: {bad}"
+
+@pytest.mark.parametrize("key", _KEYS)
+def test_runs_on_empty_universe(key, spark, empty_dir, con):
+    spec = all_queries()[key]
+    df = spec.build(spark, empty_dir)
+    if key in _EMPTY_ORACLE_DIVERGENCES:
+        assert len(df.schema) > 0
+        assert df.collect() == [], f"{key}: Spark now emits rows"
+        assert con.execute(spec.oracle).fetchall(), (
+            f"{key}: the oracle now emits no rows")
+        return
+    assert_oracle_parity(df, con, spec.oracle, key)

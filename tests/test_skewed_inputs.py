@@ -1,12 +1,14 @@
-"""Hot-key robustness: key-partitioned operators over a universe where ALL
-rows share ONE key — the worst-case skew (a single user generating every
-event, a single customer owning every order).
+"""Hot-key robustness: every query over a universe where ALL rows share
+ONE key — the worst-case skew (a single user generating every event, a
+single customer owning every order, a single language owning every
+document).
 
 At toy scale this can't prove memory behavior, but it pins the semantics
 and completion of every per-key sort/window/aggregate when the entire
 input lands in one partition group — the degenerate layout AQE skew
-splitting and `salted_join` exist for. This suite documents that
-correctness never depended on key spread.
+splitting and `salted_join` exist for. Each batch key is built once and
+compared with its DuckDB oracle; the streaming keys must complete. This
+suite documents that correctness never depended on key spread.
 """
 
 from __future__ import annotations
@@ -17,39 +19,25 @@ from pyspark.sql import functions as F
 
 from banking_etl_pipeline_spark.registry import all_queries
 
-
-# key-partitioned operators that must survive a single hot key
-_KEYS = [
-    "window_running_sum",
-    "window_lag",
-    "window_range_7d",
-    "sessionization",
-    "concurrent_sessions",
-    "time_weighted_avg",
-    "rolling_active_users",
-    "top_paths",
-    "latest_event_snapshot",
-    "cdc_apply",
-    "groupby_stats",
-    "skew_salted_join",
-    "streaming_anomaly",
-    # one user owns EVERY event: the whole series lands in one array fold /
-    # one state group — the worst case for the EWMA pair and the
-    # interval-join attribution
-    "ewma_smoothing",
-    "streaming_ewma",
-    "attribution_linear",
-    # one language owns EVERY document: the per-language rank windows and
-    # strata aggregates collapse to a single partition group
-    "decile_trim_gate",
-    "ccnet_buckets",
-    "stratified_sample",
-    "mixture_plan",
-    "curation_funnel_v2",
-]
+from .oracle_compare import assert_oracle_parity, universe_connection
 
 
-@pytest.mark.parametrize("key", _KEYS)
+# the streaming hot keys: one user owns every event, so the whole series
+# lands in one state group (the batch keys are built on this universe by
+# test_skewed_universe_oracle_parity)
+_STREAMING_KEYS = ["streaming_anomaly", "streaming_ewma"]
+
+_KEYS = [k for k in all_queries()
+         if not k.startswith("streaming_") and k != "banking_txn_pipeline"]
+
+
+@pytest.fixture(scope="module")
+def con(skew_dir):
+    with universe_connection(skew_dir) as c:
+        yield c
+
+
+@pytest.mark.parametrize("key", _STREAMING_KEYS)
 def test_hot_key_completes(key, spark, skew_dir):
     df = all_queries()[key].build(spark, skew_dir)
     n = df.count()
@@ -94,15 +82,11 @@ def test_ewma_dispatch_threshold(spark, skew_dir, monkeypatch):
     assert "FlatMapGroupsInPandas" in p
 
 
-def test_skewed_universe_oracle_parity(spark, skew_dir):
+@pytest.mark.parametrize("key", _KEYS)
+def test_skewed_universe_oracle_parity(key, spark, skew_dir, con):
     """Value-level oracle parity on the one-hot-key universe — the exact
     driver comparison under pathological key distribution, where any
     missing tie-break or order-dependent float fold would flip the hash
     (companion to the empty-universe parity gate)."""
-    from tests.oracle_compare import universe_mismatches
-
-    specs = {k: spec for k, spec in all_queries().items()
-             if not k.startswith("streaming_")
-             and k != "banking_txn_pipeline"}
-    bad = universe_mismatches(spark, skew_dir, specs)
-    assert not bad, f"skewed-universe parity mismatches: {bad}"
+    spec = all_queries()[key]
+    assert_oracle_parity(spec.build(spark, skew_dir), con, spec.oracle, key)

@@ -148,6 +148,30 @@ def test_crash_between_stage_and_publish_recovers(loaded, batches,
     loaded.assert_clean()
 
 
+@pytest.mark.parametrize("kind", KINDS + ["unpartitioned"])
+def test_failed_stage_write_leaves_no_stage(spark, tmp_path, batches,
+                                            monkeypatch, kind):
+    """A write task that raises on one row fails the run before the gate;
+    the target is untouched and no stage is left under its root."""
+    target = Target(spark, kind, tmp_path / "target")
+    target.run(batches["a"][0])
+    before = target.snapshot()
+    bad_id = min(batches["b"][1])
+    transform = pipeline.TRANSFORMS["transaction"]
+
+    def poisoned(df):
+        return transform(df).withColumn("poison", F.when(
+            F.col("transaction_id") == F.lit(bad_id),
+            F.raise_error(F.lit("injected in the stage write"))))
+
+    monkeypatch.setitem(pipeline.TRANSFORMS, "transaction", poisoned)
+    with pytest.raises(Exception, match="injected in the stage write"):
+        target.run(batches["b"][0])
+    assert target.snapshot() == before
+    assert not glob.glob(str(tmp_path / "target" / "**" / "_staging"),
+                         recursive=True)
+
+
 def test_warehouse_crash_before_pointer_swap_keeps_old_table(
         spark, tmp_path, batches, monkeypatch):
     target = Target(spark, "warehouse", tmp_path / "target")
