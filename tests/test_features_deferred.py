@@ -8,10 +8,23 @@ from __future__ import annotations
 
 import math
 
+import pytest
+
 from banking_etl_pipeline_spark.operators.features import (
     N_FOLDS,
     QUERIES,
 )
+from tests.oracle_compare import assert_oracle_parity, duck_connection
+
+
+# the cases that have always run in tier-1 under these ids;
+# tests/test_oracle_parity.py checks every key of the registry
+@pytest.mark.parametrize("key", ["woe_iv_report"])
+def test_features_oracle_parity(key, spark, sf_dir):
+    spec = QUERIES[key]
+    with duck_connection(sf_dir) as con:
+        assert_oracle_parity(spec.build(spark, sf_dir), con,
+                             spec.oracle, key)
 
 
 def test_target_encoding_is_leakage_free(spark, sf_dir):

@@ -8,6 +8,8 @@ skewed inputs; this file keeps the checks specific to the tier.
 
 from __future__ import annotations
 
+import pytest
+
 from banking_etl_pipeline_spark.catalog import table
 from banking_etl_pipeline_spark.operators.ivm import (
     DELETE_MOD,
@@ -17,6 +19,17 @@ from banking_etl_pipeline_spark.operators.ivm import (
     TOPK_MOD,
 )
 from banking_etl_pipeline_spark.plans import plan_of
+from tests.oracle_compare import assert_oracle_parity, duck_connection
+
+
+# the cases that have always run in tier-1 under these ids;
+# tests/test_oracle_parity.py checks every key of the registry
+@pytest.mark.parametrize("key", ["ivm_topk_maintain"])
+def test_ivm_oracle_parity(key, spark, sf_dir):
+    spec = QUERIES[key]
+    with duck_connection(sf_dir) as con:
+        assert_oracle_parity(spec.build(spark, sf_dir), con,
+                             spec.oracle, key)
 
 
 def test_ivm_plans_scale_sane(spark, sf_dir):

@@ -10,6 +10,8 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
+
 from banking_etl_pipeline_spark.catalog import table
 from banking_etl_pipeline_spark.operators.planner import (
     _WIDTHS,
@@ -21,6 +23,7 @@ from banking_etl_pipeline_spark.operators.planner import (
     SALT_SEED,
     SHUFFLE_PARTITIONS,
 )
+from tests.oracle_compare import assert_oracle_parity, duck_connection
 
 
 def _model_est_bytes(spark, sf_dir, name):
@@ -36,6 +39,18 @@ def _model_est_bytes(spark, sf_dir, name):
             for c in arrs:
                 var += 4 * (len(r[c]) if r[c] is not None else 0)
     return n, n * fixed + var
+
+
+# the cases that have always run in tier-1 under these ids;
+# tests/test_oracle_parity.py checks every key of the registry
+@pytest.mark.parametrize(
+    "key", ["broadcast_plan", "salting_plan", "partition_skew_report"]
+)
+def test_planner_oracle_parity(key, spark, sf_dir):
+    spec = QUERIES[key]
+    with duck_connection(sf_dir) as con:
+        assert_oracle_parity(spec.build(spark, sf_dir), con,
+                             spec.oracle, key)
 
 
 def test_partition_plan_matches_python_model(spark, sf_dir):

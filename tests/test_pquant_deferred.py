@@ -6,6 +6,8 @@ skewed inputs; this file keeps the checks specific to the tier.
 
 from __future__ import annotations
 
+import pytest
+
 from banking_etl_pipeline_spark.catalog import table
 from banking_etl_pipeline_spark.operators.pquant import (
     N_PROBES,
@@ -15,7 +17,21 @@ from banking_etl_pipeline_spark.operators.pquant import (
     TOP_K,
 )
 from banking_etl_pipeline_spark.plans import plan_of
-from tests.oracle_compare import assert_repeat_deterministic
+from tests.oracle_compare import (
+    assert_oracle_parity,
+    assert_repeat_deterministic,
+    duck_connection,
+)
+
+
+# the cases that have always run in tier-1 under these ids;
+# tests/test_oracle_parity.py checks every key of the registry
+@pytest.mark.parametrize("key", ["pq_distortion_report"])
+def test_pquant_oracle_parity(key, spark, sf_dir):
+    spec = QUERIES[key]
+    with duck_connection(sf_dir) as con:
+        assert_oracle_parity(spec.build(spark, sf_dir), con,
+                             spec.oracle, key)
 
 
 def test_pquant_plans_scale_sane(spark, sf_dir):

@@ -7,12 +7,30 @@ specific to the tier.
 
 from __future__ import annotations
 
+import pytest
+
 from banking_etl_pipeline_spark.operators.privacy import (
     DP_EPSILON,
     K_RELEASE,
     QUERIES,
 )
-from tests.oracle_compare import assert_repeat_deterministic
+from tests.oracle_compare import (
+    assert_oracle_parity,
+    assert_repeat_deterministic,
+    duck_connection,
+)
+
+
+# the cases that have always run in tier-1 under these ids;
+# tests/test_oracle_parity.py checks every key of the registry
+@pytest.mark.parametrize(
+    "key", ["dp_count_release", "l_diversity_audit", "pii_redact_digest"]
+)
+def test_privacy_oracle_parity(key, spark, sf_dir):
+    spec = QUERIES[key]
+    with duck_connection(sf_dir) as con:
+        assert_oracle_parity(spec.build(spark, sf_dir), con,
+                             spec.oracle, key)
 
 
 def test_dp_noise_is_laplace_shaped(spark, sf_dir):

@@ -7,13 +7,29 @@ to the tier.
 
 from __future__ import annotations
 
+import pytest
+
 from banking_etl_pipeline_spark.operators.substrings import (
     BOILER,
     QUERIES,
     SUB_W,
 )
 from banking_etl_pipeline_spark.plans import plan_of
-from tests.oracle_compare import assert_repeat_deterministic
+from tests.oracle_compare import (
+    assert_oracle_parity,
+    assert_repeat_deterministic,
+    duck_connection,
+)
+
+
+# the cases that have always run in tier-1 under these ids;
+# tests/test_oracle_parity.py checks every key of the registry
+@pytest.mark.parametrize("key", ["substring_hot_spans"])
+def test_substrings_oracle_parity(key, spark, sf_dir):
+    spec = QUERIES[key]
+    with duck_connection(sf_dir) as con:
+        assert_oracle_parity(spec.build(spark, sf_dir), con,
+                             spec.oracle, key)
 
 
 def test_substrings_plans_scale_sane(spark, sf_dir):
