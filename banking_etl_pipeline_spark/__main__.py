@@ -30,7 +30,7 @@ import sys
 import tempfile
 
 from .domain.seed import seed_all
-from .pipeline import load_config, run_all
+from .pipeline import load_config, run_all, select_specs
 from .session import get_spark
 from .sinks.writers import ParquetWarehouse, write_csv
 
@@ -124,10 +124,16 @@ def main(argv: list[str] | None = None) -> int:
     if not args.config and not args.demo:
         ap.error("one of --config, --demo, --query or --list is required")
     wanted = args.pipelines.split(",") if args.pipelines else None
-    specs = [] if args.demo else load_config(args.config)
+
+    def selected(specs: list) -> list:
+        try:
+            return select_specs(specs, wanted)
+        except ValueError as e:
+            ap.error(str(e))
+
+    specs = [] if args.demo else selected(load_config(args.config))
     if not args.warehouse_dir and any(
-            s.target.kind == "warehouse"
-            and (wanted is None or s.entity in wanted) for s in specs):
+            s.target.kind == "warehouse" for s in specs):
         ap.error("--warehouse-dir is required: the config loads warehouse "
                  "tables")
 
@@ -140,12 +146,13 @@ def main(argv: list[str] | None = None) -> int:
                      if args.warehouse_dir else None)
         with tempfile.TemporaryDirectory(prefix="betl_") as tmp:
             if args.demo:
+                specs = selected(load_config(
+                    _demo_config(f"{tmp}/raw", f"{tmp}/out")))
                 data = seed_all(spark, num_customers=200, num_accounts=300,
                                 num_transactions=3000)
                 for e in _DEMO_ENTITIES:
                     write_csv(data[f"{e}s"], f"{tmp}/raw/{e}s")
-                specs = load_config(_demo_config(f"{tmp}/raw", f"{tmp}/out"))
-            results = run_all(spark, specs, warehouse, wanted)
+            results = run_all(spark, specs, warehouse)
         ok = True
         for entity, res in results.items():
             passed = bool(res.quality.get("overall_passed", True))

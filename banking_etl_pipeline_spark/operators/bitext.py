@@ -71,10 +71,10 @@ def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf3). Same derivation as dedup_embedding_cosine (`dedup_band_bits`:
     smallest bb with 2^bb·32 ≥ N, integer search mirrored in the oracle's
     params CTE), and the band table is the SAME session-persisted
-    `_bands_for` materialization the dedup detector rides, so the two
-    families share one signature index per session. At ≤2048 vectors this
-    resolves to the historical bb=6 — identical candidates, identical
-    output."""
+    `similarity.lsh_bands` materialization the dedup detector rides, so
+    the two families share one signature index per session. At ≤2048
+    vectors this resolves to the historical bb=6 — identical candidates,
+    identical output."""
     from .dedup import pair_cos_cached
 
     # The candidate+verify stage is the SHARED `pair_cos_cached`

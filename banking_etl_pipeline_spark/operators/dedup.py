@@ -526,19 +526,18 @@ def _pair_cos(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumer's output) is deterministic and oracle-checked end-to-end. Band
     width is corpus-derived (`dedup_band_bits`: a fixed width made the
     candidate count quadratic in N) so the candidate budget stays linear
-    in N; at the base geometry the band table delegates to the shared
-    `similarity.lsh_bands_cached` materialization. Each surviving candidate
-    pays one exact cosine; recall is probabilistic per banding theory while
+    in N; the band table is the shared `similarity.lsh_bands`
+    materialization of that geometry. Each surviving candidate pays one
+    exact cosine; recall is probabilistic per banding theory while
     precision is exact."""
-    from .lshscale import _bands_for
-    from .similarity import N_BANDS as EMB_BANDS
+    from .similarity import N_BANDS as EMB_BANDS, lsh_bands
     from ..session import session_scalar
 
     n = session_scalar(
         spark, f"embeddings_count:{sf_dir}",
         lambda: table(spark, sf_dir, "embeddings").count(),
     )
-    bands = _bands_for(spark, sf_dir, EMB_BANDS, dedup_band_bits(n))
+    bands = lsh_bands(spark, sf_dir, EMB_BANDS, dedup_band_bits(n))
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(
@@ -577,7 +576,7 @@ def _pair_cos(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pair_cos_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-persisted `_pair_cos` — the write-the-verify-stage-once step
     of a real pipeline (same lifecycle/justification as
-    `similarity.lsh_bands_cached`, one tier further: the detector and the
+    `similarity.lsh_bands`, one tier further: the detector and the
     bitext miner both read the verified candidate cosines)."""
     return session_persist(
         spark, f"dedup_pair_cos:{sf_dir}", lambda: _pair_cos(spark, sf_dir)

@@ -35,12 +35,16 @@ oracles, which are |probes|×N and have no quadratic path:
   near-identical pairs at ~1/40th the candidate budget of the base
   geometry. tests/test_lshscale_deferred.py plants dups to prove it.
 
-Scale: per-geometry signatures are linear scans (hyperplane weights
-precomputed driver-side as literal arrays: Catalyst never constant-folds
-a HOF lambda, so computed in-plan they cost ~6k md5 calls per vector —
-14.8 s against 1.5 s for the sf0.1 signature stage), candidates come
-from banded equi-joins only, the probe truth is |probes|×N not N², and
-every report is a bounded aggregate.
+Scale: per-geometry signatures are linear scans built by
+`similarity.lsh_bands`, one narrow expression of the same size for every
+geometry: the planes enter the plan as one literal (weights computed
+driver-side), one transform takes every plane's sign bit and one
+aggregate per band packs them. The first build plus collect of
+lsh_paramscan_report in a fresh session on sf0.001 takes 11-12 s on
+4 vCPU, against 40-42 s with one column expression per plane and one
+literal per weight.
+Candidates come from banded equi-joins only, the probe truth is
+|probes|×N not N², and every report is a bounded aggregate.
 """
 
 from __future__ import annotations
@@ -49,14 +53,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..functions.vectors import as_double, dot, hyperplane
+from ..functions.vectors import dot
 from ..session import session_persist
 from ..spec import QuerySpec
+from .similarity import _SQL_PLANE, _corpus, lsh_bands
 
-EMBED_DIM = 64
 # geometries under study: the registered base (16, 6) plus three
-# progressively finer bandings; planes are the SAME md5-derived family the
-# base pipeline uses (functions/vectors.py), indexed 0..n_bands*band_bits-1
+# progressively finer bandings; every geometry is built by
+# similarity.lsh_bands from the same md5-derived plane family, indexed
+# 0..n_bands*band_bits-1
 CONFIGS: tuple[tuple[int, int], ...] = ((16, 6), (16, 8), (20, 10), (24, 12))
 SCALED_BANDS, SCALED_BITS = 24, 12
 DUP_THRESHOLD_SCALED = 0.9   # corpus-realistic near-dup bar (vs base 0.35)
@@ -64,62 +69,10 @@ PROBE_IDS = 100              # vec_id < 100 anchor the recall measurement
 BASE_THRESHOLD = 0.35        # operators/dedup.py COSINE_DUP_THRESHOLD
 
 
-def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    )
-    return e.withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v"))))
-
-
-def _bands_for(spark: SparkSession, sf_dir: str,
-               n_bands: int, band_bits: int) -> DataFrame:
-    """(vec_id, band, sig) for one geometry; session-persisted per
-    (sf_dir, geometry) — the paramscan, recall, scaled-dedup and
-    base-dedup consumers share one materialization. The base (16, 6)
-    geometry delegates to `similarity.lsh_bands_cached` — the identical
-    relation by construction (same hyperplane family, same packing) — so
-    a session never holds two persisted copies of it."""
-    from .similarity import BAND_BITS as BASE_BITS
-    from .similarity import N_BANDS as BASE_BANDS
-    from .similarity import lsh_bands_cached
-
-    if (n_bands, band_bits) == (BASE_BANDS, BASE_BITS):
-        return lsh_bands_cached(spark, sf_dir)
-
-    def build() -> DataFrame:
-        e = _corpus(spark, sf_dir)
-        sigs = []
-        for band in range(n_bands):
-            sig = F.lit(0)
-            for i in range(band_bits):
-                p = band * band_bits + i
-                sig = sig + F.when(
-                    dot(F.col("v"), hyperplane(p, EMBED_DIM)) >= 0,
-                    F.lit(1 << i),
-                ).otherwise(F.lit(0))
-            sigs.append(F.struct(
-                F.lit(band).alias("band"), sig.cast("int").alias("sig")))
-        return (
-            e.withColumn("bs", F.explode(F.array(*sigs)))
-            .select("vec_id", F.col("bs.band").alias("band"),
-                    F.col("bs.sig").alias("sig"))
-        )
-
-    return session_persist(
-        spark, f"lshscale:{sf_dir}:{n_bands}x{band_bits}", build)
-
-
-_SQL_PLANE = (
-    "list_transform(range(0, {dim}), d -> "
-    "CAST(CAST(('0x' || substr(md5(CAST(p AS VARCHAR) || '_' || "
-    "CAST(d AS VARCHAR)), 1, 15)) AS BIGINT) "
-    "% 2001 - 1000 AS DOUBLE) / 1000.0)"
-).format(dim=EMBED_DIM)
-
-
 def _sql_sigs(n_bands: int, band_bits: int, rel: str = "e") -> str:
     """sigs relation for one geometry (same md5 plane family, same
-    band = p div bits / bit = 1 << (p mod bits) packing as _bands_for)."""
+    band = p div bits / bit = 1 << (p mod bits) packing as
+    similarity.lsh_bands)."""
     return f"""(
   SELECT vec_id, band, CAST(SUM(bit) AS INTEGER) AS sig FROM (
     SELECT {rel}.vec_id, CAST(p // {band_bits} AS INTEGER) AS band,
@@ -137,7 +90,7 @@ def lsh_paramscan_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = []
     for n_bands, band_bits in CONFIGS:
         buckets = (
-            _bands_for(spark, sf_dir, n_bands, band_bits)
+            lsh_bands(spark, sf_dir, n_bands, band_bits)
             .groupBy("band", "sig")
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
         )
@@ -216,7 +169,7 @@ def lsh_recall_tradeoff_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_true = truth.agg(F.count(F.lit(1)).cast("long").alias("n_true_pairs"))
     parts = []
     for n_bands, band_bits in CONFIGS:
-        bands = _bands_for(spark, sf_dir, n_bands, band_bits)
+        bands = lsh_bands(spark, sf_dir, n_bands, band_bits)
         pb = bands.filter(F.col("vec_id") < PROBE_IDS).select(
             F.col("vec_id").alias("vec_a"),
             F.col("band").alias("aband"),
@@ -349,7 +302,7 @@ def dedup_embedding_cosine_scaled(spark: SparkSession,
         spark, f"embeddings_count:{sf_dir}",
         lambda: table(spark, sf_dir, "embeddings").count(),
     )
-    bands = _bands_for(spark, sf_dir, SCALED_BANDS, scaled_band_bits(n))
+    bands = lsh_bands(spark, sf_dir, SCALED_BANDS, scaled_band_bits(n))
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(

@@ -272,9 +272,9 @@ FROM buckets
 
 
 def lsh_candidate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .similarity import lsh_bands_cached
+    from .similarity import lsh_bands
 
-    bands = lsh_bands_cached(spark, sf_dir)
+    bands = lsh_bands(spark, sf_dir)
     buckets = bands.groupBy("band", "sig").agg(
         F.count(F.lit(1)).cast("long").alias("n")
     )

@@ -3,7 +3,7 @@
 
 The eval loop a retrieval/RAG data pipeline runs after building an index:
 take a query sample, retrieve top-K through the SAME banded sign-LSH index
-the engine serves (`similarity.lsh_bands_cached` — the session-persisted
+the engine serves (`similarity.lsh_bands` — the session-persisted
 signature table every ANN/dedup consumer shares), grade against labels
 (relevant ⇔ same `label` as the query), and report the standard IR
 metrics. No counterpart in the reference repo; the metrics are the
@@ -42,7 +42,7 @@ from ..catalog import table
 from ..functions.vectors import as_double, dot
 from ..session import session_persist
 from ..spec import QuerySpec
-from .similarity import _SQL_PLANE, BAND_BITS, EMBED_DIM, N_BANDS, lsh_bands_cached
+from .similarity import _SQL_PLANE, BAND_BITS, N_BANDS, lsh_bands
 
 RET_Q_MOD = 25   # vec_id % 25 == 0 → the query sample (sf-proportional)
 RET_K = 10       # depth of the graded ranking
@@ -79,7 +79,7 @@ def _ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH cache shared with the ANN/dedup operators."""
 
     def build() -> DataFrame:
-        bands = lsh_bands_cached(spark, sf_dir)
+        bands = lsh_bands(spark, sf_dir)
         qb = bands.filter(F.col("vec_id") % RET_Q_MOD == 0).select(
             F.col("vec_id").alias("q_id"),
             F.col("band").alias("qband"),

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..session import session_persist, session_scalar
 from ..functions.numeric import ftrunc, sql_ftrunc
-from ..functions.vectors import as_double, dot, hyperplane, norm
+from ..functions.vectors import as_double, dot, norm, planes
 from ..spec import QuerySpec
 
 N_QUERIES = 10  # vectors with vec_id < 10 serve as the query set
@@ -89,40 +89,40 @@ WHERE rank <= {TOP_K}
 """
 
 
-def lsh_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One row per (vector, band): deterministic sign-LSH band signatures.
+def lsh_bands(spark: SparkSession, sf_dir: str, n_bands: int = N_BANDS,
+              band_bits: int = BAND_BITS) -> DataFrame:
+    """One row per (vector, band): sign-LSH band signatures, session-
+    persisted per (sf_dir, n_bands, band_bits) and shared by every consumer
+    (the persisted signature index a cluster deployment maintains).
 
-    Band b's signature packs BAND_BITS sign bits (hyperplanes
-    b*BAND_BITS .. b*BAND_BITS+BAND_BITS-1) into an int."""
-    e = _corpus(spark, sf_dir)
-    sigs = []
-    for band in range(N_BANDS):
-        sig = F.lit(0)
-        for i in range(BAND_BITS):
-            p = band * BAND_BITS + i
-            sig = sig + F.when(
-                dot(F.col("v"), hyperplane(p, EMBED_DIM)) >= 0, F.lit(1 << i)
-            ).otherwise(F.lit(0))
-        sigs.append(F.struct(F.lit(band).alias("band"), sig.cast("int").alias("sig")))
-    # Only (vec_id, band, sig) — never duplicate the vector N_BANDS times;
-    # re-rank joins vectors back by id.
-    return (
-        e.withColumn("bs", F.explode(F.array(*sigs)))
-        .select("vec_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
-    )
+    Band b packs the sign bits of planes b*band_bits .. (b+1)*band_bits-1
+    into an int, plane p at bit p % band_bits. The expression has the same
+    size for any geometry: one literal of planes, one transform for every
+    plane's bit, one aggregate per band. Only (vec_id, band, sig) is kept;
+    re-rank joins vectors back by id."""
 
+    # `bits` is a column below the explode, so each plane's dot product
+    # runs once per vector, not once per band
+    def build() -> DataFrame:
+        bits = F.transform(
+            planes(n_bands * band_bits, EMBED_DIM),
+            lambda w, p: F.when(
+                dot(F.col("v"), w) >= 0,
+                F.call_function("shiftleft", F.lit(1), p % band_bits),
+            ).otherwise(0),
+        )
+        sigs = F.transform(
+            F.sequence(F.lit(0), F.lit(n_bands - 1)),
+            lambda b: F.aggregate(F.slice("bits", b * band_bits + 1, band_bits),
+                                  F.lit(0), lambda acc, x: acc + x),
+        )
+        return (
+            _corpus(spark, sf_dir).select("vec_id", bits.alias("bits"))
+            .select("vec_id", F.posexplode(sigs).alias("band", "sig"))
+        )
 
-# Session-scoped cache of the band-signature table (`session_persist`, as
-# for dedup's band tables): the 96 hyperplane dot products per vector are
-# higher-order-function folds — interpreted per element, the most expensive
-# expression in the module — and every consumer (both sides of ann_lsh's
-# candidate join, dedup_embedding_cosine, ann_recall_report) would otherwise
-# recompute them per action. One materialization per (session, sf_dir) ≙ the
-# persisted signature index a cluster deployment maintains.
-def lsh_bands_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_persist(
-        spark, f"lsh_bands:{sf_dir}", lambda: lsh_bands(spark, sf_dir)
-    )
+        spark, f"lsh_bands:{sf_dir}:{n_bands}x{band_bits}", build)
 
 
 def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -130,7 +130,7 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     then exact cosine re-rank over the deduplicated candidate set. Recall is
     probabilistic by design (tests assert recall ≥ threshold vs brute
     force), but the operator itself is deterministic and oracle-checked."""
-    bands = lsh_bands_cached(spark, sf_dir)
+    bands = lsh_bands(spark, sf_dir)
     qb = bands.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
         F.col("band").alias("qband"),
@@ -168,7 +168,7 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # DuckDB replica of the whole LSH pipeline: the hyperplanes are md5-derived
-# (functions/vectors.py:hyperplane), so the oracle regenerates them from the
+# (functions/vectors.py:plane_weights), so the oracle regenerates them from the
 # same formula — weight(p, d) = (md5_long(p || '_' || d) % 2001 - 1000)/1000 —
 # and reproduces signatures, candidate set, and re-rank exactly.
 _SQL_PLANE = (

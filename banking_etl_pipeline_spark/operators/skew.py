@@ -160,7 +160,7 @@ def token_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted once (vocabulary-sized). Shared by cms_topk (sketch build +
     probe ground truth) and sampling.heavy_hitters (the two keys
     used to rebuild the same aggregate; one materialization, two
-    consumers, the `_bands_for` precedent)."""
+    consumers, the `similarity.lsh_bands` precedent)."""
     d = table(spark, sf_dir, "documents")
     return session_persist(spark, f"cms_tf:{sf_dir}", lambda: d.select(
         F.explode(F.split(F.col("text"), " ")).alias("token")

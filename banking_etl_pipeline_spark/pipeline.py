@@ -153,12 +153,23 @@ def run_all(spark: SparkSession, specs: Sequence[PipelineSpec],
             pipelines_to_run: Sequence[str] | None = None
             ) -> dict[str, PipelineResult]:
     """≅ run_pipeline dispatch loop (main.py:277-302, config `pipelines_to_run`)."""
-    wanted = set(pipelines_to_run) if pipelines_to_run is not None else None
-    out: dict[str, PipelineResult] = {}
-    for spec in specs:
-        if wanted is None or spec.entity in wanted:
-            out[spec.entity] = run_pipeline(spark, spec, warehouse)
-    return out
+    return {spec.entity: run_pipeline(spark, spec, warehouse)
+            for spec in select_specs(specs, pipelines_to_run)}
+
+
+def select_specs(specs: Sequence[PipelineSpec],
+                 pipelines_to_run: Sequence[str] | None = None
+                 ) -> list[PipelineSpec]:
+    """The specs whose entity is in `pipelines_to_run` (all when None), in
+    config order. A name that matches no spec raises ValueError before any
+    pipeline runs."""
+    if pipelines_to_run is None:
+        return list(specs)
+    unknown = sorted(set(pipelines_to_run) - {s.entity for s in specs})
+    if unknown:
+        raise ValueError(f"no pipeline for {unknown}; the config defines "
+                         f"{[s.entity for s in specs]}")
+    return [s for s in specs if s.entity in pipelines_to_run]
 
 
 def _quality_from_config(block: dict[str, Any], fail: bool) -> QualityConfig:

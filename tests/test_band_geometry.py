@@ -142,12 +142,14 @@ def wide_corpus_dir(spark, sf_dir, tmp_path_factory):
 
 
 def test_detector_widens_geometry_past_boundary(spark, wide_corpus_dir):
-    from banking_etl_pipeline_spark.operators.lshscale import _bands_for
-    from banking_etl_pipeline_spark.operators.similarity import N_BANDS
+    from banking_etl_pipeline_spark.operators.similarity import (
+        N_BANDS,
+        lsh_bands,
+    )
 
     n = table(spark, wide_corpus_dir, "embeddings").count()
     assert n > 2048 and dedup_band_bits(n) == 7
-    bands = _bands_for(spark, wide_corpus_dir, N_BANDS, 7)
+    bands = lsh_bands(spark, wide_corpus_dir, N_BANDS, 7)
     # 7-bit signatures actually occupy the wider space
     assert bands.agg({"sig": "max"}).first()[0] >= 64
 

@@ -417,6 +417,28 @@ def test_pipeline_gate_fails_closed(spark):
         run_all(spark, [spec])
 
 
+def test_unknown_pipeline_names_are_refused(spark, tmp_path):
+    """A `pipelines_to_run` name that matches no spec (the config says
+    `transaction`, not `transactions`) is an error naming it, raised before
+    any pipeline runs, and the CLI reports it as a usage error instead of
+    running nothing and passing."""
+    import json
+
+    from banking_etl_pipeline_spark.__main__ import main
+
+    cfg = {"pipelines": {"transaction": {
+        "source_path": str(tmp_path / "raw"),
+        "target_type": "parquet", "target_path": str(tmp_path / "out")}}}
+    with pytest.raises(ValueError, match="'transactions'"):
+        run_all(spark, load_config(cfg), pipelines_to_run=["transactions"])
+    assert not (tmp_path / "out").exists()
+    path = tmp_path / "config.json"
+    path.write_text(json.dumps(cfg))
+    with pytest.raises(SystemExit) as exc:
+        main(["--config", str(path), "--pipelines", "transactions"])
+    assert exc.value.code == 2
+
+
 # ---------------------------------------------------------------------------
 # credit cards (documented-only entity, reconstructed)
 # ---------------------------------------------------------------------------

@@ -8,8 +8,6 @@ from __future__ import annotations
 
 import hashlib
 
-import pytest
-
 from banking_etl_pipeline_spark.catalog import table
 from banking_etl_pipeline_spark.operators.dataops import (
     DIFF_MOD,
@@ -20,27 +18,13 @@ from banking_etl_pipeline_spark.operators.dataops import (
     TOP_CHANGED,
 )
 from banking_etl_pipeline_spark.plans import plan_of
-from tests.oracle_compare import (
-    assert_oracle_parity,
-    assert_repeat_deterministic,
-    duck_connection,
-)
+from tests.oracle_compare import assert_repeat_deterministic
 
 
 def _gate(key: int) -> int:
     # python replica of functions/hashing.md5_long_seeded
     return int(hashlib.md5(f"{DIFF_SEED}:{key}".encode())
                .hexdigest()[:15], 16)
-
-
-# the cases that have always run in tier-1 under these ids;
-# tests/test_oracle_parity.py checks every key of the registry
-@pytest.mark.parametrize("key", ["column_drift_report"])
-def test_dataops_oracle_parity(key, spark, sf_dir):
-    spec = QUERIES[key]
-    with duck_connection(sf_dir) as con:
-        assert_oracle_parity(spec.build(spark, sf_dir), con,
-                             spec.oracle, key)
 
 
 def test_dataops_plans_scale_sane(spark, sf_dir):

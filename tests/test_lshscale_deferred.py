@@ -16,21 +16,37 @@ from banking_etl_pipeline_spark.operators.lshscale import (
     CONFIGS,
     DUP_THRESHOLD_SCALED,
     QUERIES,
+    _sql_sigs,
 )
+from banking_etl_pipeline_spark.operators.similarity import lsh_bands
+from tests.oracle_compare import duck_connection
+
+
+def test_band_relation_matches_oracle(spark, sf_dir):
+    """Cross-engine parity of the band relation itself, row for row, for
+    every studied geometry: Spark's literal-plane signatures against the
+    DuckDB replay of the md5 plane formula."""
+    with duck_connection(sf_dir) as con:
+        for nb, bb in CONFIGS:
+            oracle = con.execute(
+                "WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v"
+                f" FROM embeddings) SELECT vec_id, band, sig"
+                f" FROM {_sql_sigs(nb, bb)} s ORDER BY ALL").fetchall()
+            got = sorted((r["vec_id"], r["band"], r["sig"])
+                         for r in lsh_bands(spark, sf_dir, nb, bb).collect())
+            assert oracle and got == oracle, (nb, bb)
 
 
 def test_paramscan_matches_band_relation(spark, sf_dir):
     """Budgets re-derived from the same per-geometry band relation the
     joins would consume, plus the Σ n(n−1)/2 identity."""
-    from banking_etl_pipeline_spark.operators.lshscale import _bands_for
-
     rows = {(r["n_bands"], r["band_bits"]): r
             for r in QUERIES["lsh_paramscan_report"].build(spark, sf_dir)
             .collect()}
     assert set(rows) == set(CONFIGS)
     for (nb, bb) in CONFIGS:
         sizes: dict = {}
-        for r in _bands_for(spark, sf_dir, nb, bb).collect():
+        for r in lsh_bands(spark, sf_dir, nb, bb).collect():
             k = (r["band"], r["sig"])
             sizes[k] = sizes.get(k, 0) + 1
         r = rows[(nb, bb)]

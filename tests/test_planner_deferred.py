@@ -10,8 +10,6 @@ from __future__ import annotations
 
 import hashlib
 
-import pytest
-
 from banking_etl_pipeline_spark.catalog import table
 from banking_etl_pipeline_spark.operators.planner import (
     _WIDTHS,
@@ -23,7 +21,6 @@ from banking_etl_pipeline_spark.operators.planner import (
     SALT_SEED,
     SHUFFLE_PARTITIONS,
 )
-from tests.oracle_compare import assert_oracle_parity, duck_connection
 
 
 def _model_est_bytes(spark, sf_dir, name):
@@ -39,18 +36,6 @@ def _model_est_bytes(spark, sf_dir, name):
             for c in arrs:
                 var += 4 * (len(r[c]) if r[c] is not None else 0)
     return n, n * fixed + var
-
-
-# the cases that have always run in tier-1 under these ids;
-# tests/test_oracle_parity.py checks every key of the registry
-@pytest.mark.parametrize(
-    "key", ["broadcast_plan", "salting_plan", "partition_skew_report"]
-)
-def test_planner_oracle_parity(key, spark, sf_dir):
-    spec = QUERIES[key]
-    with duck_connection(sf_dir) as con:
-        assert_oracle_parity(spec.build(spark, sf_dir), con,
-                             spec.oracle, key)
 
 
 def test_partition_plan_matches_python_model(spark, sf_dir):
@@ -133,11 +118,11 @@ def test_lsh_candidate_report_matches_bands(spark, sf_dir):
     would run — plus the Σ n(n−1)/2 identity per band."""
     from banking_etl_pipeline_spark.operators.similarity import (
         N_BANDS,
-        lsh_bands_cached,
+        lsh_bands,
     )
 
     sizes: dict = {}
-    for r in lsh_bands_cached(spark, sf_dir).collect():
+    for r in lsh_bands(spark, sf_dir).collect():
         sizes.setdefault(r["band"], {}).setdefault(r["sig"], 0)
         sizes[r["band"]][r["sig"]] += 1
     rows = QUERIES["lsh_candidate_report"].build(spark, sf_dir).collect()

@@ -6,29 +6,13 @@ its empty and skewed inputs; this file keeps the checks specific to the tier.
 
 from __future__ import annotations
 
-import pytest
-
 from banking_etl_pipeline_spark.operators.safety import (
     INJECTION_PATTERNS,
     QUERIES,
     RATIO6_T,
 )
 from banking_etl_pipeline_spark.plans import plan_of
-from tests.oracle_compare import (
-    assert_oracle_parity,
-    assert_repeat_deterministic,
-    duck_connection,
-)
-
-
-# the cases that have always run in tier-1 under these ids;
-# tests/test_oracle_parity.py checks every key of the registry
-@pytest.mark.parametrize("key", ["injection_pattern_scan"])
-def test_safety_oracle_parity(key, spark, sf_dir):
-    spec = QUERIES[key]
-    with duck_connection(sf_dir) as con:
-        assert_oracle_parity(spec.build(spark, sf_dir), con,
-                             spec.oracle, key)
+from tests.oracle_compare import assert_repeat_deterministic
 
 
 def test_safety_plans_scale_sane(spark, sf_dir):
