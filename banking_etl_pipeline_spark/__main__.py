@@ -159,8 +159,8 @@ def main(argv: list[str] | None = None) -> int:
             ok = ok and passed
             print(json.dumps({
                 "entity": entity,
-                # the gate's count of the published rows: counting
-                # res.output would re-run the whole transform
+                # the gate's count of the published rows, taken in the
+                # gate's one aggregate: no job runs for it
                 "rows": res.quality["total_rows"],
                 "overall_passed": passed,
                 "null_counts": res.quality.get("null_counts", {}),

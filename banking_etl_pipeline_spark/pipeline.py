@@ -117,9 +117,10 @@ class PipelineSpec:
 
 @dataclass
 class PipelineResult:
+    """The entity and its gate's report; `quality["total_rows"]` counts the
+    rows the gate audited, which are the rows published."""
     entity: str
     quality: dict[str, Any]
-    output: DataFrame
 
 
 def run_pipeline(spark: SparkSession, spec: PipelineSpec,
@@ -145,7 +146,7 @@ def run_pipeline(spark: SparkSession, spec: PipelineSpec,
     except BaseException:
         staged.discard()
         raise
-    return PipelineResult(spec.entity, result, transformed)
+    return PipelineResult(spec.entity, result)
 
 
 def run_all(spark: SparkSession, specs: Sequence[PipelineSpec],

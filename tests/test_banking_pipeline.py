@@ -365,7 +365,7 @@ def test_pipeline_e2e_from_reference_config_shape(spark, tmp_path):
     assert "lifecycle_stage" in wh.read("dim_account").columns
     # fact written partitioned; partition dirs exist and read-back matches
     fact = spark.read.parquet(fact_path)
-    assert fact.count() == results["transaction"].output.count()
+    assert fact.count() == results["transaction"].quality["total_rows"]
     import os
     years = [d for d in os.listdir(fact_path) if d.startswith("transaction_year=")]
     assert years, "expected transaction_year=* partition directories"
